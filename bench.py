@@ -78,6 +78,18 @@ def _count_turns(spark, sf_dir: str) -> int:
     )
 
 
+def _load_ref(ref_path: str) -> dict:
+    """The recorded bench line at ``ref_path`` (unwrapping the driver's
+    ``parsed`` envelope); raises unless it has a ``queries`` dict."""
+    with open(ref_path) as f:
+        ref = json.load(f)
+    if "queries" not in ref and isinstance(ref.get("parsed"), dict):
+        ref = ref["parsed"]  # the driver's BENCH_r*.json wraps our line
+    if not isinstance(ref.get("queries"), dict):
+        raise ValueError(f"{ref_path}: no 'queries' dict to compare against")
+    return ref
+
+
 def _compare(per_query: dict[str, float], ref_path: str) -> dict:
     """Mechanical regression call against a recorded BENCH_r*.json.
 
@@ -90,15 +102,15 @@ def _compare(per_query: dict[str, float], ref_path: str) -> dict:
     host-factor prediction (sub-second queries live at the noise floor —
     identical suites on this shared host spread 42.8-67.7 s in round 2).
     Verdict 'noise-band' = totals may differ but uniformly; 'regression'
-    names the queries that moved on their own."""
+    names the queries that moved on their own. Raises when no query name
+    overlaps: an empty comparison must not read as a pass."""
     import statistics
 
-    with open(ref_path) as f:
-        ref = json.load(f)
-    if "queries" not in ref and isinstance(ref.get("parsed"), dict):
-        ref = ref["parsed"]  # the driver's BENCH_r*.json wraps our line
-    ref_q = ref.get("queries", {})
+    ref = _load_ref(ref_path)
+    ref_q = ref["queries"]
     common = sorted(set(per_query) & set(ref_q))
+    if not common:
+        raise ValueError(f"{ref_path}: no query name in common to compare")
     # a recorded 0.0 (sub-millisecond query rounded away) cannot form a
     # ratio but must not be silently exempt from regression detection
     ratios = {q: round(per_query[q] / ref_q[q], 3) for q in common if ref_q[q]}
@@ -131,8 +143,7 @@ def run_headline(compare_path: str | None = None) -> None:
     # validate the compare target BEFORE the 20-70 s suite runs: a typo'd
     # path failing after the benchmark would throw the whole run away
     if compare_path is not None:
-        with open(compare_path) as f:
-            json.load(f)
+        _load_ref(compare_path)
     from fast_duplicate_finder_spark.queries import QUERIES
     from fast_duplicate_finder_spark.session import get_spark
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.config import PipelineConfig
@@ -36,6 +36,14 @@ def attach_pair_payload(
     return pairs.join(pa, "conv_id_a").join(pb, "conv_id_b")
 
 
+def _jaccard(set_a: str, set_b: str) -> Column:
+    """Exact Jaccard of two shingle-hash set columns (1.0 when both are
+    empty)."""
+    inter = F.size(F.array_intersect(set_a, set_b))
+    union = F.size(set_a) + F.size(set_b) - inter
+    return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+
+
 def verify_jaccard(
     pairs: DataFrame, shingle_sets: DataFrame, tau: float,
     set_col: str = "shset"
@@ -43,13 +51,8 @@ def verify_jaccard(
     """Exact Jaccard on shingle-hash sets; keep pairs >= tau.
     Returns (conv_id_a, conv_id_b, jaccard)."""
     joined = attach_pair_payload(pairs, shingle_sets, set_col)
-    inter = F.size(F.array_intersect(f"{set_col}_a", f"{set_col}_b"))
-    sa = F.size(f"{set_col}_a")
-    sb = F.size(f"{set_col}_b")
-    union = sa + sb - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
     return (
-        joined.withColumn("jaccard", jac)
+        joined.withColumn("jaccard", _jaccard(f"{set_col}_a", f"{set_col}_b"))
         .filter(F.col("jaccard") >= tau)
         .select("conv_id_a", "conv_id_b", "jaccard")
     )

@@ -1,69 +1,59 @@
-"""Structured Streaming legs: incremental exact dedup + sessionization.
+"""Structured Streaming legs: incremental dedup, clustering, sessionization.
 
-The reference is strictly batch (SURVEY.md §2.9 — its channels are
-intra-process pipelining, not event-time streaming). A 100 TB training-data
-corpus, however, *arrives* incrementally; these operators make the exact
-cascade incremental without reprocessing history:
+The reference is strictly batch (SURVEY.md §2.9), but a training-data
+corpus *arrives* incrementally. These legs keep the batch operators'
+results current without reprocessing history.
 
-* ``run_incremental_dedup`` — micro-batch ingest of transcript rows
-  (``readStream`` over a parquet directory; Iceberg/Kafka sources swap in
-  behind the same call). Each micro-batch assembles its conversations
-  (window-ordered concat — the batch operator, reused verbatim), full-hashes
-  them, and joins against the persistent *seen-hash* state table: hashes
-  already seen are appended to a duplicates log, new hashes extend the state.
-  State is a parquet table partitioned by (epoch_id, hash prefix):
-  - the per-batch state read is PRUNED to the micro-batch's own hash
-    prefixes (partition filter, no full-state scan per micro-batch);
-  - a replayed epoch (at-least-once foreachBatch restart) dynamic-overwrites
-    exactly its own epoch partitions — state and dup log are both
-    idempotent with NO per-batch epoch-probe job; the join simply excludes
-    the current epoch's own partitions;
-  - at scale this layout is the Iceberg MERGE target; the batch join is
-    broadcast when the micro-batch is small, shuffle otherwise (AQE).
-* ``run_incremental_simhash`` — the NEAR-dup analogue: per micro-batch
-  SimHash signatures (same kernel as the batch leg), intra-batch pairs via
-  the shared capped+salted generator, cross-batch pairs via a pigeonhole
-  equi-join against the exploded chunk-index state table (partitioned by
-  (epoch_id, cp = chunk_val % N_STATE_PREFIXES), read pruned to the
-  batch's own prefixes), signatures carried on the rows so Hamming
-  verification is inline. Pair set equals the batch operator's on an
-  uncapped corpus; each pair is emitted once, at its later member's epoch.
-* ``run_incremental_lsh`` — MinHash/LSH with exact-Jaccard verify, the
-  wide-payload variant: band rows AND shingle sets are separate state
-  tables ((epoch_id, band prefix) / (epoch_id, conv-id prefix)); the
-  verify read is pruned to the prefixes of exactly the state convs the
-  surviving band candidates name, so the wide sets never ride the band
-  join and only the named slice is read back when candidates are few —
-  the common incremental case. (Prefix pruning saturates at
-  N_STATE_PREFIXES partitions for very large batches; the band-state
-  join is the Iceberg MERGE / storage-partitioned-join seam at scale.)
-* ``run_incremental_clusters`` — closes the pairs -> CLUSTERS loop
-  incrementally: a stream of duplicate pairs (any leg's output) maintains
-  cluster labels without re-running global connected components per batch.
-  State is an epoch-append-only union-find — a ``base`` table (label at
-  first sight, partitioned by (epoch_id, conv prefix)) plus a ``merges``
-  log (old root -> new root, partitioned by (epoch_id, label prefix), a
-  DAG strictly decreasing in label order). Each batch runs the existing
-  connected_components operator over only the TOUCHED subgraph (new pairs
-  + one conv->current-root edge per known conv); current labels are the
-  DAG closure over base, compressed by path-doubling at read time.
-* ``sessionize`` — event-time session windows (``F.session_window``) with a
-  watermark for late data. The same expression works on a batch DataFrame
-  (all sessions emitted) and on a stream (sessions emitted as the watermark
-  closes them) — tests pin batch output; streaming is exercised with an
-  ``availableNow`` trigger.
+As the reference's phases 1-3 repeat one group-by-key step with a new key,
+every leg runs ONE epoch-state step per ``foreachBatch`` micro-batch:
 
-Exactly-once notes: foreachBatch gives at-least-once; the epoch id is
-recorded in the state table so a replayed micro-batch can be detected and
-its rows dropped (idempotent resume — same contract as the phase
-checkpoints in storage.py).
+1. key the batch's rows, tag each with its state prefix (``_prefix``) and
+   collect the batch's prefix set on the checkpoint job
+   (``_checkpoint_prefixes``);
+2. read PRIOR state pruned to those prefixes and to epochs other than the
+   current one (``_prior_state``): no full-state scan per micro-batch, and
+   a replayed epoch never sees its own half-write, with no epoch-probe job;
+3. near-dup legs cap hot state buckets (``_cap_state``) into counted
+   ``is_overflow`` marker rows of the pair log, never silently dropped;
+4. write the pair log, then the state, each a dynamic overwrite of exactly
+   the epoch's own partitions (``_write_epoch``), so an at-least-once
+   replay, even one that crashed between the writes, is byte-identical.
+
+State tables are parquet partitioned by (epoch_id, prefix); at scale this
+layout is the Iceberg MERGE target. The legs differ in their keys:
+
+* ``run_incremental_dedup`` — exact: xxhash64 of the assembled
+  conversation (prefix ``hp``). State holds one row per first-seen hash,
+  so it is not capped; hashes seen before or repeated in the batch go to
+  the dup log.
+* ``run_incremental_simhash`` — (chunk_id, chunk_val) pigeonhole chunks of
+  the 64-bit SimHash (prefix ``cp``); signatures ride the rows, so the
+  Hamming verify is inline.
+* ``run_incremental_lsh`` — (band_id, band_hash) MinHash bands (prefix
+  ``bp``), verified by exact Jaccard against a second state table of
+  shingle sets keyed by conv id (prefix ``hp``), read pruned to the state
+  convs the candidates name.
+* ``run_incremental_clusters`` — conv id (prefix ``cp``) over a stream of
+  duplicate pairs (any leg's output): an epoch-append-only union-find of
+  ``base`` labels plus a ``merges`` log (prefix ``mp``), with
+  connected_components run over only the touched subgraph.
+* ``sessionize`` — event-time session windows with a watermark; the same
+  expression on a batch DataFrame and on a stream.
+
+Near-dup pairs equal the batch operators' on an uncapped corpus, each
+emitted once, at its later member's epoch. ``compact_*_state`` folds a
+leg's epochs into one reserved epoch by a crash-safe rewrite-and-swap and
+refuses to run while the leg's checkpoint holds an uncommitted batch;
+every stream start finishes a swap that crashed between its renames.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from functools import partial
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.sources.transcripts import (
@@ -77,14 +67,18 @@ TRANSCRIPT_SCHEMA = (
 
 
 def stream_transcripts(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int | None = None,
+    schema: str = TRANSCRIPT_SCHEMA,
 ) -> DataFrame:
-    """File-stream source over transcript parquet. ``path`` follows Spark's
-    file-source listing rules: a directory of FLAT parquet files, or a glob
-    over writer-produced subdirectories (``.../in/*``) — a plain directory
-    whose parquet files sit one level down (each ``df.write.parquet`` makes
-    a subdirectory) streams ZERO rows, silently."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    """File-stream source over transcript (or ``schema``-shaped) parquet.
+    ``path`` follows Spark's file-source listing rules: a directory of FLAT
+    parquet files, or a glob over writer-produced subdirectories
+    (``.../in/*``) — a plain directory whose parquet files sit one level
+    down (each ``df.write.parquet`` makes a subdirectory) streams ZERO
+    rows, silently."""
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
@@ -92,18 +86,16 @@ def stream_transcripts(
 
 N_STATE_PREFIXES = 64  # hash-prefix partitions of the state table
 
-LEGACY_EPOCH = -1  # reserved epoch for state migrated from the old layout
-
 
 def _require_local_fs(work_dir: str) -> None:
     """Fail fast on a URI-shaped ``work_dir`` (hdfs://, s3a://, ...): the
     state lifecycle here mixes Spark writes (which would work on any
     Hadoop filesystem) with driver-local ``os.walk`` / ``os.replace`` /
-    ``shutil`` manipulation (``_has_parts``, the migration and compaction
-    rename dances) that would silently no-op or mis-detect state on a
-    remote URI. At cluster scale the state tables become Iceberg MERGE
-    targets (storage.py's table_format seam) rather than this local
-    parquet layout."""
+    ``shutil`` manipulation (``_has_parts``, the compaction rename dance)
+    that would silently no-op or mis-detect state on a remote URI. At
+    cluster scale the state tables become Iceberg MERGE targets
+    (storage.py's table_format seam) rather than this local parquet
+    layout."""
     if "://" in work_dir:
         raise ValueError(
             "streaming state work_dir must be a local filesystem path "
@@ -135,62 +127,140 @@ def _has_parts(path: str) -> bool:
     return False
 
 
-def _migrate_legacy_state(spark: SparkSession, state_data: str) -> None:
-    """One-time upgrade of a pre-(epoch_id, hp) state table.
+# ---------------------------------------------------------------------------
+# The epoch-state step every leg is built from
+# ---------------------------------------------------------------------------
 
-    The old layout was a plain unpartitioned append of
-    (fhash, conv_id, size); the per-batch reader requires the ``hp``
-    partition column and would raise UNRESOLVED_COLUMN forever on an
-    upgraded stream (losing the seen-hash history if the operator's only
-    recourse is deleting the dir). Rewrite once into the partitioned
-    layout under reserved epoch -1 — which every batch reads (it only
-    excludes its OWN epoch).
 
-    CRASH-SAFE ordering (a migration that can lose the whole seen-hash
-    state silently re-registers every known hash as a first): the old
-    state is renamed ASIDE (atomic), the completed rewrite renamed INTO
-    PLACE (atomic), and only then is the old copy deleted. Every crash
-    window leaves either the old state in place, or a completed rewrite
-    plus recoverable leftovers — handled on the next call:
+def _prefix(col) -> Column:
+    """State-partition prefix of a 64-bit hash column."""
+    return F.pmod(col, F.lit(N_STATE_PREFIXES)).cast("int")
 
-    * crash before the aside-rename: old state intact, stale ``.migrate``
-      is rebuilt from scratch;
-    * crash between the two renames: ``state_data`` absent + a COMPLETE
-      (_SUCCESS-marked) ``.migrate`` present — finish the swap;
-    * crash before the final delete: migrated state in place, orphan
-      ``.old`` is removed."""
-    import shutil
 
-    tmp = state_data + ".migrate"
-    old = state_data + ".old"
-    if not os.path.exists(state_data):
-        # crashed between the renames iff the rewrite had completed
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.replace(tmp, state_data)
-            shutil.rmtree(old, ignore_errors=True)
-        return
-    if not _has_parts(state_data):  # empty marker dir: nothing to migrate
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        return
-    legacy = spark.read.parquet(state_data)
-    if "hp" in legacy.columns:
-        shutil.rmtree(tmp, ignore_errors=True)  # stale/aborted rewrite
-        shutil.rmtree(old, ignore_errors=True)  # crash before final delete
-        return
-    migrated = legacy.withColumn(
-        "hp", F.pmod(F.col("fhash"), F.lit(N_STATE_PREFIXES)).cast("int")
+def _checkpoint_prefixes(df: DataFrame, prefix_col: str, *metrics):
+    """(``df`` materialized, Observation of its ``prefix_col`` set and any
+    extra ``metrics``). The prefix list rides the checkpoint job (the
+    connected_components._truncated_counted pattern): per-trigger fixed
+    cost is the stream's latency floor, and a separate distinct+collect
+    job per trigger is pure overhead."""
+    obs = Observation()
+    df = df.observe(
+        obs, F.collect_set(prefix_col).alias("prefixes"), *metrics
+    ).localCheckpoint(eager=True)
+    return df, obs
+
+
+def _prior_state(
+    spark: SparkSession, path: str, epoch_id: int, prefix_col: str, obs
+) -> DataFrame | None:
+    """Prior epochs' rows of the state table at ``path`` whose
+    ``prefix_col`` is among the prefixes ``obs`` collected (a partition
+    filter); ``None`` while the table holds no part file. Excluding the
+    current epoch is the replay contract: a re-run epoch computes its rows
+    from the same prior state, never from its own half-write."""
+    if not _has_parts(path):
+        return None
+    return (
+        spark.read.parquet(path)
+        .filter(F.col("epoch_id") != epoch_id)
+        .filter(F.col(prefix_col).isin(sorted(obs.get["prefixes"] or [])))
     )
-    if "epoch_id" not in migrated.columns:
-        migrated = migrated.withColumn("epoch_id", F.lit(LEGACY_EPOCH))
-    shutil.rmtree(tmp, ignore_errors=True)
-    migrated.write.mode("overwrite").partitionBy("epoch_id", "hp").parquet(
-        tmp
-    )  # _SUCCESS marks completion
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(state_data, old)
-    os.replace(tmp, state_data)
-    shutil.rmtree(old)
+
+
+def _overflow_markers(
+    rows: DataFrame, key: str, label: str, count: Column, value_col: str
+) -> DataFrame:
+    """One pair-log marker row per ``key`` value of capped ``rows``, their
+    ``count`` in ``value_col``. The explicit ``is_overflow`` flag keeps log
+    consumers from ever mistaking a counter row for a pair; the
+    ``'_overflow'`` id convention stays for grep-ability."""
+    return rows.groupBy(key).agg(count.alias(value_col)).select(
+        F.lit("_overflow").alias("conv_id_a"),
+        F.concat(F.lit(label), F.col(key)).alias("conv_id_b"),
+        value_col,
+        F.lit(True).alias("is_overflow"),
+    )
+
+
+def _cap_state(
+    state: DataFrame, bucket: list[str], cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """(state rows in ``bucket``s of at most ``cap`` rows, the rows of
+    hotter buckets — for the caller's overflow markers)."""
+    state = state.withColumn(
+        "bn", F.count("*").over(Window.partitionBy(*bucket))
+    )
+    return state.filter(F.col("bn") <= cap), state.filter(F.col("bn") > cap)
+
+
+def _state_matches(
+    state: DataFrame, batch: DataFrame, key: list[str], payload=()
+) -> DataFrame:
+    """The cross-batch equi-join: state rows x batch rows sharing ``key``,
+    as (sc, bc, <payload>_s, <payload>_b, key...), self-pairs dropped."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            F.col("conv_id").alias(f"{s}c"),
+            *[F.col(p).alias(f"{p}_{s}") for p in payload],
+            *key,
+        )
+
+    return (
+        side(state, "s")
+        .join(side(batch, "b"), key)
+        .filter(F.col("sc") != F.col("bc"))
+    )
+
+
+def _cross_pairs(matches: DataFrame, metric) -> DataFrame:
+    """Verified cross-batch pairs as (conv_id_a < conv_id_b, ``metric``)."""
+    return matches.select(
+        F.least("sc", "bc").alias("conv_id_a"),
+        F.greatest("sc", "bc").alias("conv_id_b"),
+        metric,
+    ).withColumn("is_overflow", F.lit(False))
+
+
+def _write_epoch(
+    df: DataFrame, epoch_id: int, path: str, *prefix_cols: str
+) -> None:
+    """Write ``df`` as epoch ``epoch_id`` of the table at ``path``,
+    partitioned by (epoch_id, *prefix_cols). The dynamic overwrite replaces
+    exactly this epoch's partitions, so a replayed epoch (including one
+    that crashed between its writes) rewrites its rows instead of
+    appending a second copy."""
+    df.withColumn("epoch_id", F.lit(epoch_id)).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("epoch_id", *prefix_cols).parquet(path)
+
+
+def _leg_dirs(work_dir: str, *names: str) -> list[str]:
+    """The leg's directories under a local ``work_dir``, created."""
+    _require_local_fs(work_dir)
+    dirs = [os.path.join(work_dir, n) for n in names]
+    for d in dirs:
+        os.makedirs(d, exist_ok=True)
+    return dirs
+
+
+def _start_stream(
+    stream: DataFrame, batch_fn, ckpt: str, available_now: bool
+):
+    """Run ``batch_fn(df, epoch_id)`` on every micro-batch of ``stream``
+    under the checkpoint ``ckpt``; with ``available_now``, over the input
+    present at start, then stop. Returns the StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(batch_fn).option(
+        "checkpointLocation", ckpt
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+# ---------------------------------------------------------------------------
+# Incremental exact dedup
+# ---------------------------------------------------------------------------
 
 
 def _dedup_batch(
@@ -198,73 +268,47 @@ def _dedup_batch(
 ) -> None:
     """One micro-batch: assemble -> hash -> split into (seen = duplicate,
     unseen = new state). Runs on the executors; only paths and the batch's
-    (tiny, <= N_STATE_PREFIXES) prefix list touch the driver.
-
-    Replay safety without any epoch-probe job: the joins read only PRIOR
-    epochs' partitions (epoch_id != current), so a replayed batch computes
-    byte-identical dups/firsts from the same deterministic input, and both
-    writes dynamic-overwrite exactly their own epoch partitions."""
+    (tiny, <= N_STATE_PREFIXES) prefix list touch the driver."""
     spark = batch.sparkSession
-    docs = assemble_conversations(batch)
-    # the batch's prefix list rides the checkpoint materialization as an
-    # Observation metric (the connected_components._truncated_counted
-    # pattern): per-trigger fixed cost is the stream's latency floor, and
-    # a separate distinct+collect job per trigger is pure overhead
-    obs = Observation()
-    hashed = docs.select(
-        "conv_id",
-        F.xxhash64("doc").alias("fhash"),
-        "size",
-    ).withColumn(
-        "hp", F.pmod(F.col("fhash"), F.lit(N_STATE_PREFIXES)).cast("int")
-    ).observe(
-        obs, F.collect_set("hp").alias("hps")
-    ).localCheckpoint(eager=True)  # reused by prefix scan + two joins
+    hashed, obs = _checkpoint_prefixes(
+        assemble_conversations(batch)
+        .select("conv_id", F.xxhash64("doc").alias("fhash"), "size")
+        .withColumn("hp", _prefix("fhash")),
+        "hp",
+    )  # reused by prefix scan + two joins
     state_data = os.path.join(state_dir, "data")
-    have_state = _has_parts(state_data)
-    if have_state:
-        # prune the state read to the prefixes this batch actually touches
-        # (partition filter on hp) and to epochs other than our own (a
-        # replayed epoch must not see its own crashed half-write)
-        prefixes = sorted(obs.get["hps"])
-        seen = (
-            spark.read.parquet(state_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("hp").isin(prefixes))
-        )
-        dup_hits = hashed.join(
-            seen.select("fhash", F.col("conv_id").alias("first_conv_id")),
-            "fhash",
-        ).select("conv_id", "fhash", "size", "hp", "first_conv_id")
-        new_rows = hashed.join(seen.select("fhash"), "fhash", "left_anti")
-    else:
-        dup_hits = None
-        new_rows = hashed
+    seen = _prior_state(spark, state_data, epoch_id, "hp", obs)
+    new_rows = (
+        hashed.join(seen.select("fhash"), "fhash", "left_anti")
+        if seen is not None
+        else hashed
+    )
     # first occurrence per hash inside the batch becomes state; the rest are
     # intra-batch duplicates
     w_first = F.min("conv_id").over(Window.partitionBy("fhash"))
     tagged = new_rows.withColumn("first_conv_id", w_first)
-    intra_dups = tagged.filter(F.col("conv_id") != F.col("first_conv_id"))
-    dups = (
-        dup_hits.unionByName(intra_dups) if dup_hits is not None else intra_dups
+    dups = tagged.filter(F.col("conv_id") != F.col("first_conv_id"))
+    if seen is not None:
+        dups = (
+            hashed.join(
+                seen.select("fhash", F.col("conv_id").alias("first_conv_id")),
+                "fhash",
+            )
+            .select("conv_id", "fhash", "size", "hp", "first_conv_id")
+            .unionByName(dups)
+        )
+    _write_epoch(
+        dups.select("conv_id", "fhash", "size", "first_conv_id"),
+        epoch_id,
+        os.path.join(dups_dir, "data"),
     )
-    # Epoch-partitioned dynamic-overwrite writes make BOTH tables idempotent
-    # under at-least-once replay: a re-run epoch (including a crash between
-    # the dup-log and state writes) overwrites exactly its own epoch
-    # partitions instead of appending a second copy.
-    dups.select("conv_id", "fhash", "size", "first_conv_id").withColumn(
-        "epoch_id", F.lit(epoch_id)
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("epoch_id").parquet(os.path.join(dups_dir, "data"))
-    firsts = tagged.filter(F.col("conv_id") == F.col("first_conv_id")).select(
-        "fhash", "conv_id", "size", "hp"
+    firsts = tagged.filter(F.col("conv_id") == F.col("first_conv_id"))
+    _write_epoch(
+        firsts.select("fhash", "conv_id", "size", "hp"),
+        epoch_id,
+        state_data,
+        "hp",
     )
-    firsts.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "epoch_id", "hp"
-    ).parquet(state_data)
 
 
 def run_incremental_dedup(
@@ -276,26 +320,14 @@ def run_incremental_dedup(
 ):
     """Start (and with ``available_now`` run to completion) the incremental
     dedup stream. Returns the StreamingQuery."""
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "state")
-    dups_dir = os.path.join(work_dir, "dups")
-    ckpt = os.path.join(work_dir, "_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(dups_dir, exist_ok=True)
-    state_data = os.path.join(state_dir, "data")
-    # unconditional: also recovers a crash between the migration renames
-    # (state_data absent, completed '.migrate' present)
-    _migrate_legacy_state(spark, state_data)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, eid: _dedup_batch(df, eid, state_dir, dups_dir)
-        )
-        .option("checkpointLocation", ckpt)
+    state_dir, dups_dir = _leg_dirs(work_dir, "state", "dups")
+    _recover_swap(os.path.join(state_dir, "data"))
+    return _start_stream(
+        stream_transcripts(spark, input_path, max_files_per_trigger),
+        lambda df, eid: _dedup_batch(df, eid, state_dir, dups_dir),
+        os.path.join(work_dir, "_stream_checkpoint"),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 DUP_LOG_SCHEMA = (
@@ -304,16 +336,24 @@ DUP_LOG_SCHEMA = (
 )
 
 
+def _read_log(
+    spark: SparkSession, work_dir: str, name: str, schema: str
+) -> DataFrame:
+    """The ``name`` log of a leg, read with its ``schema``. A
+    duplicate-free stream writes only _SUCCESS markers (no part files, so
+    no inferable schema) and before the first batch the dir does not
+    exist — both mean an EMPTY log, not an error."""
+    _require_local_fs(work_dir)
+    path = os.path.join(work_dir, name, "data")
+    if not _has_parts(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_dup_log(spark: SparkSession, work_dir: str) -> DataFrame:
     """(conv_id, fhash, size, first_conv_id, epoch_id) of every duplicate
-    seen. A duplicate-free stream writes only _SUCCESS markers (no part
-    files, so no inferable schema) and before the first batch the dir
-    does not exist — both mean an EMPTY log, not an error."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "dups", "data")
-    if not _has_parts(path):
-        return spark.createDataFrame([], DUP_LOG_SCHEMA)
-    return spark.read.parquet(path)
+    seen (see _read_log for the empty-log contract)."""
+    return _read_log(spark, work_dir, "dups", DUP_LOG_SCHEMA)
 
 
 def sessionize(
@@ -354,21 +394,14 @@ def _simhash_batch_fn(
 
     State is the EXPLODED pigeonhole index: one row per (chunk_id,
     chunk_val) of every conversation's 64-bit signature, partitioned by
-    (epoch_id, cp = chunk_val % N_STATE_PREFIXES). The per-batch state
-    read is pruned to the batch's own chunk prefixes AND to prior epochs
-    (same replay contract as `_dedup_batch`: a re-run epoch never sees its
-    own half-written rows, and both writes dynamic-overwrite exactly their
-    own epoch partitions — byte-identical under at-least-once replay).
+    (epoch_id, cp = chunk_val % N_STATE_PREFIXES).
 
     Pairs per batch = (new x new) through the shared capped+salted
     generator (simhash_candidate_pairs, signatures riding as payload) +
     (new x state) as a pigeonhole equi-join with the 8-byte signatures
     carried on BOTH sides' rows, hamming verified inline — no signature
-    re-attach join, no state-side re-read of documents. State-side
-    buckets above cfg.max_band_bucket within the pruned slice are
-    excluded and COUNTED into the pair log as a (chunk_id-keyed) overflow
-    row flagged ``is_overflow = true`` (conv_id_a = '_overflow'; never
-    silently dropped, never mistakable for a pair).
+    re-attach join, no state-side re-read of documents. Hot state-side
+    buckets become chunk_id-keyed overflow markers.
     """
     from fast_duplicate_finder_spark.functions.simhash import (
         hamming64,
@@ -389,20 +422,16 @@ def _simhash_batch_fn(
         .localCheckpoint(eager=True)  # feeds chunks + intra-batch self-join
     )
     n_chunks = cfg.simhash_hamming + 1
-    chunks = sims.select(
-        "conv_id",
-        "simhash",
-        F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
-            "chunk_id", "chunk_val"
-        ),
-    ).withColumn(
-        "cp", F.pmod(F.col("chunk_val"), F.lit(N_STATE_PREFIXES)).cast("int")
+    chunks, cp_obs = _checkpoint_prefixes(
+        sims.select(
+            "conv_id",
+            "simhash",
+            F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
+                "chunk_id", "chunk_val"
+            ),
+        ).withColumn("cp", _prefix("chunk_val")),
+        "cp",
     )
-    # chunk-prefix list rides the checkpoint (see _dedup_batch)
-    cp_obs = Observation()
-    chunks = chunks.observe(
-        cp_obs, F.collect_set("cp").alias("cps")
-    ).localCheckpoint(eager=True)
 
     intra, intra_ovf = simhash_candidate_pairs(
         sims,
@@ -411,92 +440,36 @@ def _simhash_batch_fn(
         n_salt=cfg.band_salt_buckets,
         even_exchange=False,  # micro-batch: let AQE coalesce-to-few
     )
-    # overflow markers carry an explicit flag column so log consumers
-    # never mistake a counter row for a pair (they also keep the
-    # '_overflow' id convention for grep-ability). INTRA-batch capped
-    # buckets are counted too — the batch pipeline checkpoints them as the
-    # p7b overflow phase; the stream has no phase table, so they ride the
-    # pair log like the state-side markers below (capped, counted, never
-    # silent).
-    intra = intra.withColumn("is_overflow", F.lit(False))
-    intra_markers = (
-        intra_ovf.groupBy("chunk_id")
-        .agg(F.sum("bucket_n").cast("int").alias("hamming"))
-        .select(
-            F.lit("_overflow").alias("conv_id_a"),
-            F.concat(F.lit("intra_chunk_"), F.col("chunk_id")).alias(
-                "conv_id_b"
-            ),
+    # INTRA-batch capped buckets are counted too — the batch pipeline
+    # checkpoints them as the p7b overflow phase; the stream has no phase
+    # table, so they ride the pair log like the state-side markers
+    pairs = intra.withColumn("is_overflow", F.lit(False)).unionByName(
+        _overflow_markers(
+            intra_ovf,
+            "chunk_id",
+            "intra_chunk_",
+            F.sum("bucket_n").cast("int"),
             "hamming",
-            F.lit(True).alias("is_overflow"),
         )
     )
-    pairs = intra.unionByName(intra_markers)
     state_data = os.path.join(state_dir, "data")
-    if _has_parts(state_data):
-        cps = sorted(cp_obs.get["cps"])
-        state = (
-            spark.read.parquet(state_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("cp").isin(cps))
+    state = _prior_state(spark, state_data, epoch_id, "cp", cp_obs)
+    if state is not None:
+        kept, hot = _cap_state(
+            state, ["chunk_id", "chunk_val"], cfg.max_band_bucket
         )
-        w_bucket = Window.partitionBy("chunk_id", "chunk_val")
-        state = state.withColumn("bn", F.count("*").over(w_bucket))
-        hot = (
-            state.filter(F.col("bn") > cfg.max_band_bucket)
-            .groupBy("chunk_id")
-            .agg(F.count("*").cast("int").alias("hamming"))
-            .select(
-                F.lit("_overflow").alias("conv_id_a"),
-                F.concat(F.lit("chunk_"), F.col("chunk_id")).alias(
-                    "conv_id_b"
-                ),
-                "hamming",
-                F.lit(True).alias("is_overflow"),
-            )
+        state_markers = _overflow_markers(
+            hot, "chunk_id", "chunk_", F.count("*").cast("int"), "hamming"
         )
-        cross = (
-            state.filter(F.col("bn") <= cfg.max_band_bucket)
-            .select(
-                F.col("conv_id").alias("sc"),
-                F.col("simhash").alias("ss"),
-                "chunk_id",
-                "chunk_val",
-            )
-            .join(
-                chunks.select(
-                    F.col("conv_id").alias("bc"),
-                    F.col("simhash").alias("bs"),
-                    "chunk_id",
-                    "chunk_val",
-                ),
-                ["chunk_id", "chunk_val"],
-            )
-            .filter(F.col("sc") != F.col("bc"))
-            .select(
-                F.least("sc", "bc").alias("conv_id_a"),
-                F.greatest("sc", "bc").alias("conv_id_b"),
-                hamming64(F.col("ss"), F.col("bs")).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= cfg.simhash_hamming)
-            .withColumn("is_overflow", F.lit(False))
-        )
-        pairs = pairs.unionByName(cross).unionByName(hot)
-    (
-        pairs.distinct()
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(os.path.join(pairs_dir, "data"))
-    )
-    (
-        chunks.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "cp")
-        .parquet(state_data)
-    )
+        cross = _cross_pairs(
+            _state_matches(
+                kept, chunks, ["chunk_id", "chunk_val"], ["simhash"]
+            ),
+            hamming64(F.col("simhash_s"), F.col("simhash_b")).alias("hamming"),
+        ).filter(F.col("hamming") <= cfg.simhash_hamming)
+        pairs = pairs.unionByName(cross).unionByName(state_markers)
+    _write_epoch(pairs.distinct(), epoch_id, os.path.join(pairs_dir, "data"))
+    _write_epoch(chunks, epoch_id, state_data, "cp")
 
 
 def run_incremental_simhash(
@@ -515,34 +488,20 @@ def run_incremental_simhash(
     from fast_duplicate_finder_spark.config import PipelineConfig
 
     cfg = cfg or PipelineConfig()
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "sim_state")
-    pairs_dir = os.path.join(work_dir, "near_pairs")
-    ckpt = os.path.join(work_dir, "_simhash_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(pairs_dir, exist_ok=True)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _simhash_batch_fn(df, eid, state_dir, pairs_dir, cfg)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    state_dir, pairs_dir = _leg_dirs(work_dir, "sim_state", "near_pairs")
+    _recover_swap(os.path.join(state_dir, "data"))
+    return _start_stream(
+        stream_transcripts(spark, input_path, max_files_per_trigger),
+        lambda df, eid: _simhash_batch_fn(df, eid, state_dir, pairs_dir, cfg),
+        os.path.join(work_dir, "_simhash_stream_checkpoint"),
+        available_now,
+    )
 
 
 def read_near_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
-    """Every near-dup pair the stream has emitted (see read_dup_log for
-    the empty-log contract). Reads with the explicit schema so epochs
-    written before ``is_overflow`` existed still load; their flag is
-    reconstructed from the marker-row convention those epochs used."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "near_pairs", "data")
-    if not _has_parts(path):
-        return spark.createDataFrame([], NEAR_PAIR_SCHEMA)
-    return spark.read.schema(NEAR_PAIR_SCHEMA).parquet(path).withColumn(
-        "is_overflow",
-        F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
-    )
+    """Every near-dup pair the stream has emitted (see _read_log for the
+    empty-log contract)."""
+    return _read_log(spark, work_dir, "near_pairs", NEAR_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -573,14 +532,10 @@ def _lsh_batch_fn(
       the band join (the measured width rule, PLANS.md), and this layout
       reads back only the needed slice instead of the whole history.
 
-    Pair semantics equal the batch operator's on an uncapped corpus:
-    intra-batch pairs through `operators/neardup.minhash_pairs`'s exact
+    Intra-batch pairs go through `operators/neardup.minhash_pairs`'s exact
     path (capped+salted band join, array_intersect verify); cross-batch
-    candidates from the band-state join (hot state buckets capped +
-    counted as ``is_overflow = true`` marker rows), verified with the same
-    exact Jaccard. Same replay contract as the exact leg: reads exclude the
-    current epoch, writes dynamic-overwrite exactly their own epoch
-    partitions — at-least-once replay is byte-identical."""
+    candidates come from the capped band-state join, verified with the
+    same exact Jaccard."""
     from fast_duplicate_finder_spark.functions.minhash import (
         make_minhash_udf,
     )
@@ -591,7 +546,10 @@ def _lsh_batch_fn(
     from fast_duplicate_finder_spark.operators.neardup import (
         shingle_features,
     )
-    from fast_duplicate_finder_spark.operators.verify import verify_jaccard
+    from fast_duplicate_finder_spark.operators.verify import (
+        _jaccard,
+        verify_jaccard,
+    )
 
     spark = batch.sparkSession
     docs = assemble_conversations(batch)
@@ -603,15 +561,10 @@ def _lsh_batch_fn(
     )
     mh = make_minhash_udf(cfg.lsh_perms_used, cfg.minhash_seed)
     sigs = feats.select("conv_id", mh("shset").alias("minhash"))
-    bp_obs = Observation()  # band-prefix list rides the checkpoint
-    bands = (
-        lsh_band_rows(sigs, cfg)
-        .withColumn(
-            "bp", F.pmod(F.col("band_hash"), F.lit(N_STATE_PREFIXES)).cast("int")
-        )
-        .observe(bp_obs, F.collect_set("bp").alias("bps"))
-        .localCheckpoint(eager=True)  # self-join + state join + state write
-    )
+    bands, bp_obs = _checkpoint_prefixes(
+        lsh_band_rows(sigs, cfg).withColumn("bp", _prefix("band_hash")),
+        "bp",
+    )  # self-join + state join + state write
 
     cands, overflow = candidate_pairs(
         bands, cfg, even_exchange=False  # micro-batch: AQE coalesce-to-few
@@ -619,16 +572,11 @@ def _lsh_batch_fn(
     intra = verify_jaccard(cands, feats, cfg.jaccard_tau).withColumn(
         "is_overflow", F.lit(False)
     )
-    # marker rows carry an explicit flag (see _simhash_batch_fn)
-    markers = overflow.groupBy("band_id").agg(
-        F.count("*").cast("double").alias("jaccard")
-    ).select(
-        F.lit("_overflow").alias("conv_id_a"),
-        F.concat(F.lit("band_"), F.col("band_id")).alias("conv_id_b"),
-        "jaccard",
-        F.lit(True).alias("is_overflow"),
+    pairs = intra.unionByName(
+        _overflow_markers(
+            overflow, "band_id", "band_", F.count("*").cast("double"), "jaccard"
+        )
     )
-    pairs = intra.unionByName(markers)
 
     bands_data = os.path.join(state_dir, "bands", "data")
     feats_data = os.path.join(state_dir, "feats", "data")
@@ -637,61 +585,29 @@ def _lsh_batch_fn(
     # replay would otherwise read a feats dir that does not exist yet and
     # wedge the stream forever. With only this epoch's (excluded) rows in
     # bands state, skipping the cross path loses nothing.
-    if _has_parts(bands_data) and _has_parts(feats_data):
-        bps = sorted(bp_obs.get["bps"])
-        sbands = (
-            spark.read.parquet(bands_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("bp").isin(bps))
+    sbands = (
+        _prior_state(spark, bands_data, epoch_id, "bp", bp_obs)
+        if _has_parts(feats_data)
+        else None
+    )
+    if sbands is not None:
+        kept, hot = _cap_state(
+            sbands, ["band_id", "band_hash"], cfg.max_band_bucket
         )
-        w_bucket = Window.partitionBy("band_id", "band_hash")
-        sbands = sbands.withColumn("bn", F.count("*").over(w_bucket))
-        state_markers = (
-            sbands.filter(F.col("bn") > cfg.max_band_bucket)
-            .groupBy("band_id")
-            .agg(F.count("*").cast("double").alias("jaccard"))
-            .select(
-                F.lit("_overflow").alias("conv_id_a"),
-                F.concat(F.lit("state_band_"), F.col("band_id")).alias(
-                    "conv_id_b"
-                ),
-                "jaccard",
-                F.lit(True).alias("is_overflow"),
-            )
+        state_markers = _overflow_markers(
+            hot, "band_id", "state_band_", F.count("*").cast("double"), "jaccard"
         )
-        cross_cand = (
-            sbands.filter(F.col("bn") <= cfg.max_band_bucket)
-            .select(
-                F.col("conv_id").alias("sc"), "band_id", "band_hash"
-            )
-            .join(
-                bands.select(
-                    F.col("conv_id").alias("bc"), "band_id", "band_hash"
-                ),
-                ["band_id", "band_hash"],
-            )
-            .filter(F.col("sc") != F.col("bc"))
-            .select(
-                "sc",
-                "bc",
-                F.pmod(F.xxhash64("sc"), F.lit(N_STATE_PREFIXES))
-                .cast("int")
-                .alias("hp"),
-            )
-            .distinct()
-        )
-        hp_obs = Observation()  # state-conv prefixes ride the checkpoint
-        cross_cand = cross_cand.observe(
-            hp_obs, F.collect_set("hp").alias("hps")
-        ).localCheckpoint(eager=True)  # feeds verify join (both sides)
-        hps = sorted(hp_obs.get["hps"])
-        sfeats = (
-            spark.read.parquet(feats_data)
-            .filter(F.col("epoch_id") != epoch_id)
-            .filter(F.col("hp").isin(hps))
-            .select("conv_id", "shset")
-        )
-        cross_pairs = (
+        cross_cand, hp_obs = _checkpoint_prefixes(
+            _state_matches(kept, bands, ["band_id", "band_hash"])
+            .select("sc", "bc", _prefix(F.xxhash64("sc")).alias("hp"))
+            .distinct(),
+            "hp",
+        )  # feeds verify join (both sides)
+        sfeats = _prior_state(spark, feats_data, epoch_id, "hp", hp_obs)
+        # two payload joins, unlike verify_jaccard's one payload table: the
+        # state member's set comes from state, the batch member's from the
+        # batch
+        verified = (
             cross_cand.join(
                 sfeats.select(
                     F.col("conv_id").alias("sc"),
@@ -706,55 +622,20 @@ def _lsh_batch_fn(
                 ),
                 "bc",
             )
-            .withColumn(
-                "inter",
-                F.size(F.array_intersect("shset_s", "shset_b")),
-            )
-            .withColumn(
-                "uni",
-                F.size("shset_s") + F.size("shset_b") - F.col("inter"),
-            )
-            .withColumn(
-                "jaccard",
-                F.when(
-                    F.col("uni") > 0, F.col("inter") / F.col("uni")
-                ).otherwise(F.lit(1.0)),
-            )
+            .withColumn("jaccard", _jaccard("shset_s", "shset_b"))
             .filter(F.col("jaccard") >= cfg.jaccard_tau)
-            .select(
-                F.least("sc", "bc").alias("conv_id_a"),
-                F.greatest("sc", "bc").alias("conv_id_b"),
-                "jaccard",
-            )
-            .withColumn("is_overflow", F.lit(False))
         )
-        pairs = pairs.unionByName(cross_pairs).unionByName(state_markers)
+        pairs = pairs.unionByName(
+            _cross_pairs(verified, "jaccard")
+        ).unionByName(state_markers)
 
-    (
-        pairs.distinct()
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(os.path.join(pairs_dir, "data"))
-    )
-    (
-        bands.withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "bp")
-        .parquet(bands_data)
-    )
-    (
-        feats.withColumn(
-            "hp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast("int"),
-        )
-        .withColumn("epoch_id", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "hp")
-        .parquet(feats_data)
+    _write_epoch(pairs.distinct(), epoch_id, os.path.join(pairs_dir, "data"))
+    _write_epoch(bands, epoch_id, bands_data, "bp")
+    _write_epoch(
+        feats.withColumn("hp", _prefix(F.xxhash64("conv_id"))),
+        epoch_id,
+        feats_data,
+        "hp",
     )
 
 
@@ -771,33 +652,21 @@ def run_incremental_lsh(
     from fast_duplicate_finder_spark.config import PipelineConfig
 
     cfg = cfg or PipelineConfig()
-    _require_local_fs(work_dir)
-    state_dir = os.path.join(work_dir, "lsh_state")
-    pairs_dir = os.path.join(work_dir, "lsh_pairs")
-    ckpt = os.path.join(work_dir, "_lsh_stream_checkpoint")
-    os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(pairs_dir, exist_ok=True)
-    stream = stream_transcripts(spark, input_path, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _lsh_batch_fn(df, eid, state_dir, pairs_dir, cfg)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    state_dir, pairs_dir = _leg_dirs(work_dir, "lsh_state", "lsh_pairs")
+    for table in ("bands", "feats"):
+        _recover_swap(os.path.join(state_dir, table, "data"))
+    return _start_stream(
+        stream_transcripts(spark, input_path, max_files_per_trigger),
+        lambda df, eid: _lsh_batch_fn(df, eid, state_dir, pairs_dir, cfg),
+        os.path.join(work_dir, "_lsh_stream_checkpoint"),
+        available_now,
+    )
 
 
 def read_lsh_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
     """Every MinHash/LSH near-dup pair the stream has emitted (see
-    read_dup_log for the empty-log contract; see read_near_pair_log for
-    the pre-``is_overflow`` epoch migration-on-read)."""
-    _require_local_fs(work_dir)
-    path = os.path.join(work_dir, "lsh_pairs", "data")
-    if not _has_parts(path):
-        return spark.createDataFrame([], LSH_PAIR_SCHEMA)
-    return spark.read.schema(LSH_PAIR_SCHEMA).parquet(path).withColumn(
-        "is_overflow",
-        F.coalesce(F.col("is_overflow"), F.col("conv_id_a") == "_overflow"),
-    )
+    _read_log for the empty-log contract)."""
+    return _read_log(spark, work_dir, "lsh_pairs", LSH_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -807,6 +676,29 @@ def read_lsh_pair_log(spark: SparkSession, work_dir: str) -> DataFrame:
 PAIR_STREAM_SCHEMA = "conv_id_a string, conv_id_b string, is_overflow boolean"
 
 CLUSTER_LABEL_SCHEMA = "conv_id string, label string"
+
+
+def _follow_merges(
+    df: DataFrame, col: str, merges: DataFrame, hop: Observation | None = None
+) -> DataFrame:
+    """``df`` with every ``col`` value that is a ``merges.label_from``
+    moved one hop, to its ``label_to``. With ``hop``, the step is
+    materialized and ``hop`` counts the values that moved (``hits``; zero
+    means a fixpoint)."""
+    moved = df.join(
+        merges.select(
+            F.col("label_from").alias(col), F.col("label_to").alias("_next")
+        ),
+        col,
+        "left",
+    )
+    if hop is not None:
+        moved = moved.observe(
+            hop, F.sum(F.col("_next").isNotNull().cast("long")).alias("hits")
+        ).localCheckpoint(eager=True)
+    return moved.select(
+        *[F.coalesce("_next", c).alias(c) if c == col else c for c in df.columns]
+    )
 
 
 def _resolve_labels(
@@ -840,41 +732,18 @@ def _resolve_labels(
     if not _has_parts(merges_data):
         return labels
     for _ in range(prune_rounds):
-        obs = Observation()
-        cur = (
-            labels.withColumn(
-                "mp",
-                F.pmod(F.xxhash64("label"), F.lit(N_STATE_PREFIXES)).cast(
-                    "int"
-                ),
-            )
-            .observe(obs, F.collect_set("mp").alias("mps"))
-            .localCheckpoint(eager=True)
+        cur, obs = _checkpoint_prefixes(
+            labels.withColumn("mp", _prefix(F.xxhash64("label"))), "mp"
         )
-        prefixes = sorted(obs.get["mps"] or [])
-        if not prefixes:
-            return cur.drop("mp")
         step = (
-            spark.read.parquet(merges_data)
-            .filter(F.col("epoch_id") != F.lit(epoch_id))
-            .filter(F.col("mp").isin(prefixes))
-            .select(F.col("label_from").alias("label"), "label_to")
+            _prior_state(spark, merges_data, epoch_id, "mp", obs)
+            if obs.get["prefixes"]
+            else None
         )
+        if step is None:
+            return cur.drop("mp")
         hop = Observation()
-        remapped = (
-            cur.drop("mp")
-            .join(step, "label", "left")
-            .observe(
-                hop,
-                F.sum(F.col("label_to").isNotNull().cast("long")).alias(
-                    "hits"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = remapped.select(
-            "conv_id", F.coalesce("label_to", "label").alias("label")
-        )
+        labels = _follow_merges(cur.drop("mp"), "label", step, hop)
         if not int(hop.get["hits"] or 0):
             return labels
     # deep chain: one full-log path-doubled map resolves every label in a
@@ -883,11 +752,7 @@ def _resolve_labels(
     m = _compressed_merge_map(spark, merges_data, exclude_epoch=epoch_id)
     if m is None:  # raced a compaction's log removal: labels are current
         return labels
-    return labels.join(
-        m.select(F.col("label_from").alias("label"), "label_to"),
-        "label",
-        "left",
-    ).select("conv_id", F.coalesce("label_to", "label").alias("label"))
+    return _follow_merges(labels, "label", m)
 
 
 def _clusters_batch(
@@ -914,12 +779,6 @@ def _clusters_batch(
     membership and merging relabels every member transitively — then
     append base rows for first-seen convs and merge edges for dethroned
     roots.
-
-    Replay contract identical to the other legs (_dedup_batch): every
-    state read excludes the batch's own epoch and both writes
-    dynamic-overwrite exactly their own epoch partitions, so an
-    at-least-once re-run (including a crash between the two writes)
-    recomputes byte-identical rows from the same prior state.
     """
     from fast_duplicate_finder_spark.operators.connected_components import (
         connected_components,
@@ -940,43 +799,29 @@ def _clusters_batch(
         .filter(F.col("conv_id_a") != F.col("conv_id_b"))
         .distinct()
     )
-    obs = Observation()
-    ids = (
+    ids, obs = _checkpoint_prefixes(
         pairs.select(F.col("conv_id_a").alias("conv_id"))
         .union(pairs.select(F.col("conv_id_b")))
         .distinct()
-        .withColumn(
-            "cp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast(
-                "int"
-            ),
-        )
-        .observe(
-            obs,
-            F.collect_set("cp").alias("cps"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .localCheckpoint(eager=True)  # prefix list + known split + CC input
-    )
+        .withColumn("cp", _prefix(F.xxhash64("conv_id"))),
+        "cp",
+        F.count(F.lit(1)).alias("n"),
+    )  # prefix list + known split + CC input
     if not int(obs.get["n"] or 0):
         return  # marker-only/empty batch: nothing to write
     base_data = os.path.join(base_dir, "data")
     merges_data = os.path.join(merges_dir, "data")
-    known = None
-    if _has_parts(base_data):
-        prefixes = sorted(obs.get["cps"])
-        known = (
-            spark.read.parquet(base_data)
-            .filter(F.col("epoch_id") != F.lit(epoch_id))
-            .filter(F.col("cp").isin(prefixes))
-            .select("conv_id", "label")
-            .join(ids.select("conv_id"), "conv_id")
-        )
-        known = _resolve_labels(
-            spark, merges_data, known, epoch_id
-        ).localCheckpoint(eager=True)  # edges + merge rows + anti-join
+    known = _prior_state(spark, base_data, epoch_id, "cp", obs)
     edges = pairs
     if known is not None:
+        known = _resolve_labels(
+            spark,
+            merges_data,
+            known.select("conv_id", "label").join(
+                ids.select("conv_id"), "conv_id"
+            ),
+            epoch_id,
+        ).localCheckpoint(eager=True)  # edges + merge rows + anti-join
         edges = edges.unionByName(
             known.filter(F.col("conv_id") != F.col("label")).select(
                 F.col("conv_id").alias("conv_id_a"),
@@ -992,11 +837,7 @@ def _clusters_batch(
     base_new = new_ids.join(comp, "conv_id").select(
         "conv_id", F.col("component").alias("label"), "cp"
     )
-    base_new.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        "epoch_id", "cp"
-    ).parquet(base_data)
+    _write_epoch(base_new, epoch_id, base_data, "cp")
     if known is not None:
         merges_new = (
             known.select(F.col("label").alias("label_from"))
@@ -1009,18 +850,9 @@ def _clusters_batch(
                 "label_from",
             )
             .filter(F.col("label_from") != F.col("label_to"))
-            .withColumn(
-                "mp",
-                F.pmod(F.xxhash64("label_from"), F.lit(N_STATE_PREFIXES)).cast(
-                    "int"
-                ),
-            )
+            .withColumn("mp", _prefix(F.xxhash64("label_from")))
         )
-        merges_new.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "epoch_id", "mp"
-        ).parquet(merges_data)
+        _write_epoch(merges_new, epoch_id, merges_data, "mp")
 
 
 def run_incremental_clusters(
@@ -1037,22 +869,19 @@ def run_incremental_clusters(
     ids are skipped). ``input_path`` follows the stream_transcripts listing
     rules (flat files or a glob). Returns the StreamingQuery; read results
     with read_cluster_labels."""
-    _require_local_fs(work_dir)
-    base_dir = os.path.join(work_dir, "base")
-    merges_dir = os.path.join(work_dir, "merges")
-    ckpt = os.path.join(work_dir, "_stream_checkpoint")
-    os.makedirs(base_dir, exist_ok=True)
-    os.makedirs(merges_dir, exist_ok=True)
-    reader = spark.readStream.schema(PAIR_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-    writer = stream.writeStream.foreachBatch(
-        lambda df, eid: _clusters_batch(df, eid, base_dir, merges_dir)
-    ).option("checkpointLocation", ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    base_dir, merges_dir = _leg_dirs(work_dir, "base", "merges")
+    _recover_swap(
+        os.path.join(base_dir, "data"),
+        _drop_merge_log(os.path.join(merges_dir, "data")),
+    )
+    return _start_stream(
+        stream_transcripts(
+            spark, input_path, max_files_per_trigger, PAIR_STREAM_SCHEMA
+        ),
+        lambda df, eid: _clusters_batch(df, eid, base_dir, merges_dir),
+        os.path.join(work_dir, "_stream_checkpoint"),
+        available_now,
+    )
 
 
 def _compressed_merge_map(
@@ -1076,24 +905,7 @@ def _compressed_merge_map(
     m = m.select("label_from", "label_to")
     for _ in range(max_rounds):
         hop = Observation()
-        nxt = (
-            m.join(
-                m.select(
-                    F.col("label_from").alias("label_to"),
-                    F.col("label_to").alias("_next"),
-                ),
-                "label_to",
-                "left",
-            )
-            .observe(
-                hop,
-                F.sum(F.col("_next").isNotNull().cast("long")).alias("hits"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        m = nxt.select(
-            "label_from", F.coalesce("_next", "label_to").alias("label_to")
-        )
+        m = _follow_merges(m, "label_to", m, hop)
         if not int(hop.get["hits"] or 0):
             return m
     raise RuntimeError(
@@ -1116,16 +928,46 @@ def read_cluster_labels(spark: SparkSession, work_dir: str) -> DataFrame:
     m = _compressed_merge_map(
         spark, os.path.join(work_dir, "merges", "data")
     )
-    if m is None:
-        return labels
-    return labels.join(
-        m.select(F.col("label_from").alias("label"), "label_to"),
-        "label",
-        "left",
-    ).select("conv_id", F.coalesce("label_to", "label").alias("label"))
+    return labels if m is None else _follow_merges(labels, "label", m)
 
+
+# ---------------------------------------------------------------------------
+# State compaction
+# ---------------------------------------------------------------------------
 
 COMPACTED_EPOCH = -2  # reserved epoch for rows folded by compaction
+
+
+def _require_quiesced(work_dir: str, ckpt_name: str) -> None:
+    """Fail fast unless the leg's stream is QUIESCED: its checkpoint
+    (``work_dir/ckpt_name``) plans no batch (``offsets/N``) that has not
+    committed (``commits/N``). A pending at-least-once replay of epoch E
+    excludes only epoch E's own partitions, and once compaction folds E's
+    crashed half-write into ``COMPACTED_EPOCH`` the replay would read it
+    back as prior state. A missing checkpoint (state written by direct
+    batch calls) counts as quiesced. Also requires a local-filesystem
+    ``work_dir`` (rename dance; see _require_local_fs)."""
+    _require_local_fs(work_dir)
+    ckpt = os.path.join(work_dir, ckpt_name)
+
+    def last_batch(log: str) -> int:
+        path = os.path.join(ckpt, log)
+        names = os.listdir(path) if os.path.isdir(path) else []
+        return max((int(n) for n in names if n.isdigit()), default=-1)
+
+    pending = last_batch("offsets")
+    if pending > last_batch("commits"):
+        raise RuntimeError(
+            f"stream checkpoint {ckpt} has batch {pending} planned but not "
+            "committed: run the stream to completion (a restart replays "
+            "the batch) before compacting its state"
+        )
+
+
+def _drop_merge_log(merges_data: str):
+    """``on_complete`` of the cluster base swap: the compacted base holds
+    every conv on its current root, so the merge log is spent."""
+    return partial(shutil.rmtree, merges_data, ignore_errors=True)
 
 
 def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
@@ -1138,35 +980,24 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     log, resetting chase depth to zero. The parquet analogue of the
     Iceberg MERGE maintenance the docstrings above defer to.
 
-    MUST run against a QUIESCED stream whose last epoch committed cleanly:
-    a pending at-least-once replay of epoch E excludes only epoch E's own
-    partitions, and would read its crashed half-write back as prior state
-    once folded into ``COMPACTED_EPOCH``. (A committed epoch's replay
-    never happens; re-running a committed epoch by hand stays a no-op —
-    every conv resolves as known with its current root, so nothing is
-    rewritten.)
+    Raises unless the stream is quiesced (_require_quiesced). (Re-running
+    a committed epoch by hand stays a no-op — every conv resolves as known
+    with its current root, so nothing is rewritten.)
 
-    Crash-safe in the _migrate_legacy_state mold — the rewrite lands in
-    ``.compact`` (completion marked by parquet's _SUCCESS), the live table
-    is renamed ASIDE, the rewrite renamed INTO PLACE, and cleanup happens
-    last; every window leaves the old state intact or a completed rewrite
-    recoverable here. Ordering note: the merge log is removed only AFTER
-    the base swap, and a crash that leaves it behind is harmless — its
-    ``label_from`` values are dethroned roots that no longer occur as
-    labels in the compacted base, so the closure join matches nothing."""
-    import shutil
-
-    _require_local_fs(work_dir)
+    Crash-safe through _crash_safe_swap. Ordering note: the merge log is
+    removed only AFTER the base swap, and a crash that leaves it behind is
+    harmless — its ``label_from`` values are dethroned roots that no
+    longer occur as labels in the compacted base, so the closure join
+    matches nothing."""
+    _require_quiesced(work_dir, "_stream_checkpoint")
     base_data = os.path.join(work_dir, "base", "data")
-    merges_data = os.path.join(work_dir, "merges", "data")
 
     def write_rewrite(tmp: str) -> bool:
         resolved = read_cluster_labels(spark, work_dir).withColumn(
-            "cp",
-            F.pmod(F.xxhash64("conv_id"), F.lit(N_STATE_PREFIXES)).cast(
-                "int"
-            ),
+            "cp", _prefix(F.xxhash64("conv_id"))
         )
+        # a plain overwrite, not _write_epoch: a dynamic-overwrite write
+        # leaves no _SUCCESS marker, and the swap reads completion from it
         resolved.withColumn("epoch_id", F.lit(COMPACTED_EPOCH)).write.mode(
             "overwrite"
         ).partitionBy("epoch_id", "cp").parquet(tmp)
@@ -1175,7 +1006,9 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     _crash_safe_swap(
         base_data,
         write_rewrite,
-        on_complete=lambda: shutil.rmtree(merges_data, ignore_errors=True),
+        on_complete=_drop_merge_log(
+            os.path.join(work_dir, "merges", "data")
+        ),
     )
 
 
@@ -1197,12 +1030,8 @@ def _fold_epoch_partitions(
     always read back as prior state. The parquet analogue of Iceberg's
     rewrite_data_files maintenance, same as compact_cluster_state.
 
-    Crash-safe in the _migrate_legacy_state mold: the rewrite lands in
-    ``.compact`` (completion marked by parquet's _SUCCESS), the live table
-    is renamed ASIDE, the rewrite renamed INTO PLACE, cleanup last. Every
-    crash window leaves either the old table in place or a completed
-    rewrite recoverable on the next call. No-ops (without a Spark job)
-    when the table is already a single compacted epoch."""
+    Crash-safe through _crash_safe_swap. No-ops (without a Spark job) when
+    the table is already a single compacted epoch."""
 
     def write_rewrite(tmp: str) -> bool:
         visible = [
@@ -1230,6 +1059,25 @@ def _fold_epoch_partitions(
     _crash_safe_swap(data_path, write_rewrite)
 
 
+def _recover_swap(data_path: str, on_complete=None) -> bool:
+    """Finish a rewrite-and-swap that crashed between its two renames —
+    no live table at ``data_path`` but a COMPLETED (_SUCCESS-marked)
+    rewrite in ``.compact`` — and run ``on_complete``. True when there was
+    no live table. Every stream start calls this for each state table of
+    its leg: a stream started on the half-swapped table would read "no
+    state", and the exact leg would re-register every known hash as a
+    first."""
+    if os.path.exists(data_path):
+        return False
+    tmp = data_path + ".compact"
+    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.replace(tmp, data_path)
+        shutil.rmtree(data_path + ".old", ignore_errors=True)
+        if on_complete is not None:
+            on_complete()
+    return True
+
+
 def _crash_safe_swap(
     data_path: str, write_rewrite, on_complete=None
 ) -> None:
@@ -1242,23 +1090,17 @@ def _crash_safe_swap(
     (parquet's _SUCCESS marks completion) and may return False to abort a
     no-op rewrite; ``on_complete`` (optional) runs once the rewrite is the
     live table — on the normal path AND when recovering a crash between
-    the renames. Windows: a crash before the write leaves the live table
+    the renames. Order: the rewrite lands in ``.compact``, the live table
+    is renamed ASIDE to ``.old``, the rewrite renamed INTO PLACE, cleanup
+    last. Windows: a crash before the write leaves the live table
     untouched (stale ``tmp`` without _SUCCESS is removed next call); a
     crash between the renames leaves no live table but a COMPLETED
-    rewrite, recovered here; a crash before final cleanup leaves ``.old``
-    behind, removed next call."""
-    import shutil
-
+    rewrite, recovered by _recover_swap; a crash before final cleanup
+    leaves ``.old`` behind, removed next call."""
+    if _recover_swap(data_path, on_complete):
+        return
     tmp = data_path + ".compact"
     old = data_path + ".old"
-    if not os.path.exists(data_path):
-        # crashed between the renames iff the rewrite had completed
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.replace(tmp, data_path)
-            shutil.rmtree(old, ignore_errors=True)
-            if on_complete is not None:
-                on_complete()
-        return
     shutil.rmtree(old, ignore_errors=True)  # crash before final cleanup
     if not _has_parts(data_path):
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1275,16 +1117,11 @@ def _crash_safe_swap(
 
 def compact_dedup_state(spark: SparkSession, work_dir: str) -> None:
     """Fold the exact leg's seen-hash state (``state/data``, partitioned by
-    (epoch_id, hp)) into the reserved ``COMPACTED_EPOCH``.
-
-    MUST run against a QUIESCED stream whose last epoch committed cleanly
-    (same contract as compact_cluster_state): a pending at-least-once
-    replay of epoch E excludes only epoch E's own partitions, and would
-    read its crashed half-write back as prior state once folded — for this
-    leg that means the replayed convs would join against their own hashes
-    and be logged as duplicates of themselves. Requires a local-filesystem
-    ``work_dir`` (rename dance; see _require_local_fs)."""
-    _require_local_fs(work_dir)
+    (epoch_id, hp)) into the reserved ``COMPACTED_EPOCH``. Raises unless
+    the stream is quiesced (_require_quiesced): for this leg a folded
+    half-write would have the replayed convs join against their own hashes
+    and be logged as duplicates of themselves."""
+    _require_quiesced(work_dir, "_stream_checkpoint")
     _fold_epoch_partitions(
         spark, os.path.join(work_dir, "state", "data"), ["hp"]
     )
@@ -1293,12 +1130,11 @@ def compact_dedup_state(spark: SparkSession, work_dir: str) -> None:
 def compact_simhash_state(spark: SparkSession, work_dir: str) -> None:
     """Fold the SimHash leg's exploded chunk-index state
     (``sim_state/data``, partitioned by (epoch_id, cp)) into the reserved
-    ``COMPACTED_EPOCH``. Quiesce + local-FS contract as
-    compact_dedup_state; a folded half-write would hand a replayed epoch
-    its own chunks as prior state (self-pairs are filtered by the
-    ``sc != bc`` guard, but the epoch's pair set would stop being
-    byte-identical under replay)."""
-    _require_local_fs(work_dir)
+    ``COMPACTED_EPOCH``. Quiesce contract as compact_dedup_state; a folded
+    half-write would hand a replayed epoch its own chunks as prior state
+    (self-pairs are filtered by the ``sc != bc`` guard, but the epoch's
+    pair set would stop being byte-identical under replay)."""
+    _require_quiesced(work_dir, "_simhash_stream_checkpoint")
     _fold_epoch_partitions(
         spark, os.path.join(work_dir, "sim_state", "data"), ["cp"]
     )
@@ -1307,8 +1143,7 @@ def compact_simhash_state(spark: SparkSession, work_dir: str) -> None:
 def compact_lsh_state(spark: SparkSession, work_dir: str) -> None:
     """Fold BOTH of the LSH leg's state tables — ``lsh_state/bands/data``
     (epoch_id, bp) and ``lsh_state/feats/data`` (epoch_id, hp) — into the
-    reserved ``COMPACTED_EPOCH``. Quiesce + local-FS contract as
-    compact_dedup_state.
+    reserved ``COMPACTED_EPOCH``. Quiesce contract as compact_dedup_state.
 
     Two tables, one call: each folds independently through the same
     crash-safe rename dance, and a crash BETWEEN them (bands compacted,
@@ -1316,7 +1151,7 @@ def compact_lsh_state(spark: SparkSession, work_dir: str) -> None:
     the band-state join and the named-slice feats read see exactly the
     rows they saw before; the next call finishes the feats fold (and
     no-ops on bands)."""
-    _require_local_fs(work_dir)
+    _require_quiesced(work_dir, "_lsh_stream_checkpoint")
     _fold_epoch_partitions(
         spark, os.path.join(work_dir, "lsh_state", "bands", "data"), ["bp"]
     )

@@ -152,3 +152,9 @@ def test_bench_compare_noise_vs_regression(tmp_path):
            "q_more": 1.5, "q_small": 0.3}
     c = bench._compare(cur, str(ref_path))
     assert c["only_in_current"] == ["q_new"]
+
+    # no query name in common: fail fast, never a silent 'noise-band'
+    import pytest
+
+    with pytest.raises(ValueError, match="no query name in common"):
+        bench._compare({"q_new": 1.0}, str(ref_path))

@@ -188,52 +188,6 @@ def test_state_partitioned_by_prefix_and_replay_idempotent(spark, tmp_path):
     assert hps <= set(range(N_STATE_PREFIXES))
 
 
-def test_legacy_unpartitioned_state_is_migrated(spark, tmp_path):
-    """A state table written by the pre-(epoch_id, hp) layout (plain
-    unpartitioned append, no hp column) must be upgraded in place at
-    stream start — not wedge every micro-batch with UNRESOLVED_COLUMN,
-    and not lose the seen-hash history."""
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        LEGACY_EPOCH,
-        _dedup_batch,
-        _migrate_legacy_state,
-    )
-    from fast_duplicate_finder_spark.sources.transcripts import (
-        assemble_conversations,
-    )
-
-    t = generate_transcripts(spark, n_convs=30, seed=5)
-    docs = assemble_conversations(t)
-    legacy = docs.select(
-        "conv_id", F.xxhash64("doc").alias("fhash"), "size"
-    )
-    state_data = str(tmp_path / "state" / "data")
-    legacy.write.parquet(state_data)  # old layout: no hp, no epoch_id
-
-    _migrate_legacy_state(spark, state_data)
-    migrated = spark.read.parquet(state_data)
-    assert "hp" in migrated.columns and "epoch_id" in migrated.columns
-    assert migrated.filter(F.col("epoch_id") != LEGACY_EPOCH).count() == 0
-    assert migrated.count() == legacy.count()
-    assert any(
-        d.startswith("epoch_id=") for d in os.listdir(state_data)
-    )
-
-    # a new batch replaying one legacy conversation sees it as a DUP
-    replay = t.filter(
-        F.col("conv_id") == t.select("conv_id").first()["conv_id"]
-    )
-    _dedup_batch(
-        replay, 7, str(tmp_path / "state"), str(tmp_path / "dups")
-    )
-    dups = spark.read.parquet(str(tmp_path / "dups" / "data"))
-    assert dups.count() == 1  # matched against migrated legacy state
-
-    # idempotent: migrating again is a no-op
-    _migrate_legacy_state(spark, state_data)
-    assert spark.read.parquet(state_data).count() == legacy.count()
-
-
 def _one_turn_rows(docs: dict[str, str]):
     import datetime
 
@@ -623,52 +577,6 @@ def test_lsh_crash_windows_replay_identical(
     assert not any("_overflow" in r["conv_id_a"] for r in real.collect())
 
 
-def test_migration_crash_between_renames_recovers(spark, tmp_path):
-    """ADVICE round-3 (medium): the legacy-state migration must not lose
-    the seen-hash state if killed between its renames. Simulate the exact
-    crash window (state_data renamed aside, completed rewrite not yet in
-    place) and assert the next call finishes the swap."""
-    import shutil
-
-    from fast_duplicate_finder_spark.sources.transcripts import (
-        assemble_conversations,
-    )
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        LEGACY_EPOCH,
-        _migrate_legacy_state,
-    )
-
-    t = generate_transcripts(spark, n_convs=20, seed=3)
-    legacy = assemble_conversations(t).select(
-        "conv_id", F.xxhash64("doc").alias("fhash"), "size"
-    )
-    state_data = str(tmp_path / "state" / "data")
-    legacy.write.parquet(state_data)
-    n_legacy = legacy.count()
-
-    # run the migration once to produce the completed rewrite, then rewind
-    # the filesystem to the mid-swap crash window: state_data absent,
-    # '.migrate' complete, '.old' holding the original
-    _migrate_legacy_state(spark, state_data)
-    shutil.copytree(state_data, state_data + ".migrate")
-    os.rename(state_data, state_data + ".old")
-
-    _migrate_legacy_state(spark, state_data)  # restart after the "crash"
-    recovered = spark.read.parquet(state_data)
-    assert recovered.count() == n_legacy
-    assert recovered.filter(F.col("epoch_id") != LEGACY_EPOCH).count() == 0
-    assert not os.path.exists(state_data + ".migrate")
-    assert not os.path.exists(state_data + ".old")
-
-    # a stale INCOMPLETE rewrite next to intact legacy state is rebuilt
-    state2 = str(tmp_path / "s2" / "data")
-    legacy.write.parquet(state2)
-    os.makedirs(state2 + ".migrate")  # no _SUCCESS: aborted write
-    _migrate_legacy_state(spark, state2)
-    assert spark.read.parquet(state2).count() == n_legacy
-    assert not os.path.exists(state2 + ".migrate")
-
-
 def test_zero_row_state_write_does_not_wedge_stream(spark, tmp_path):
     """ADVICE round-3: a first micro-batch whose docs are all filtered out
     (empty texts -> empty shingle sets) writes a state dir holding only
@@ -827,41 +735,6 @@ def test_lsh_first_epoch_crash_does_not_wedge_stream(
     for sub in ("bands/data", "feats/data"):
         assert rows(os.path.join(sd, sub)) == rows(os.path.join(rd, sub))
     assert rows(os.path.join(pd_, "data")) == rows(os.path.join(rp, "data"))
-
-
-def test_pair_log_readers_migrate_pre_flag_epochs(spark, tmp_path):
-    """Epochs written before the ``is_overflow`` column existed must still
-    load: the readers read with the explicit schema and reconstruct the
-    flag from the old marker-row convention (conv_id_a = '_overflow')."""
-    from fast_duplicate_finder_spark.streaming.incremental import (
-        read_lsh_pair_log,
-        read_near_pair_log,
-    )
-
-    old_near = spark.createDataFrame(
-        [("a", "b", 3), ("_overflow", "chunk_1", 7)],
-        "conv_id_a string, conv_id_b string, hamming int",
-    ).withColumn("epoch_id", F.lit(0))
-    new_near = spark.createDataFrame(
-        [("c", "d", 2, False)],
-        "conv_id_a string, conv_id_b string, hamming int, is_overflow boolean",
-    ).withColumn("epoch_id", F.lit(1))
-    near_path = str(tmp_path / "near" / "near_pairs" / "data")
-    old_near.write.partitionBy("epoch_id").parquet(near_path)
-    new_near.write.mode("append").partitionBy("epoch_id").parquet(near_path)
-    got = read_near_pair_log(spark, str(tmp_path / "near"))
-    flags = {(r["conv_id_a"], r["is_overflow"]) for r in got.collect()}
-    assert flags == {("a", False), ("_overflow", True), ("c", False)}
-
-    old_lsh = spark.createDataFrame(
-        [("a", "b", 0.9), ("_overflow", "band_2", 11.0)],
-        "conv_id_a string, conv_id_b string, jaccard double",
-    ).withColumn("epoch_id", F.lit(0))
-    lsh_path = str(tmp_path / "lsh" / "lsh_pairs" / "data")
-    old_lsh.write.partitionBy("epoch_id").parquet(lsh_path)
-    got = read_lsh_pair_log(spark, str(tmp_path / "lsh"))
-    flags = {(r["conv_id_a"], r["is_overflow"]) for r in got.collect()}
-    assert flags == {("a", False), ("_overflow", True)}
 
 
 # --- incremental clustering (pairs stream -> labels) -------------------------
@@ -1147,3 +1020,99 @@ def test_deep_merge_chain_resolves_via_compressed_fallback(spark, tmp_path):
         for r in read_cluster_labels(spark, str(tmp_path)).collect()
     }
     assert labels == {(f"c{i}", "c0") for i in range(10)} | {("d0", "c0")}
+
+
+# --- stream start and compaction guards --------------------------------------
+
+
+def _tree(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_stream_start_recovers_half_swapped_state(spark, corpus_dir, tmp_path):
+    """A compaction that crashed between its renames leaves no live state
+    table and a completed ``.compact`` rewrite. A stream restarted in that
+    window must finish the swap before its first batch: reading "no state"
+    would re-register every known hash as a first, and the duplicates of
+    file 1 in file 2 would go missing from the log."""
+    import shutil
+
+    from fast_duplicate_finder_spark.streaming.incremental import (
+        compact_dedup_state,
+    )
+
+    files = sorted(os.listdir(corpus_dir))  # part0 = file 1, part1 = file 2
+
+    def stream_two_files(name, crash):
+        inp, work = tmp_path / f"in_{name}", str(tmp_path / name)
+        inp.mkdir()
+        for f in files:
+            shutil.copy(os.path.join(corpus_dir, f), inp / f)
+            q = run_incremental_dedup(spark, str(inp), work)
+            assert q.awaitTermination(600)
+            if crash and f == files[0]:
+                compact_dedup_state(spark, work)
+                state = os.path.join(work, "state", "data")
+                os.replace(state, state + ".compact")
+        return sorted(tuple(r) for r in read_dup_log(spark, work).collect())
+
+    ref = stream_two_files("uninterrupted", crash=False)
+    file1 = {
+        r["conv_id"]
+        for r in spark.read.parquet(os.path.join(corpus_dir, files[0]))
+        .select("conv_id")
+        .collect()
+    }
+    # the log holds file-2 duplicates of file-1 conversations
+    assert any(r[4] == 1 and r[3] in file1 for r in ref)
+    assert stream_two_files("crashed", crash=True) == ref
+
+
+def test_compaction_refuses_uncommitted_batch(spark, corpus_dir, tmp_path):
+    """Compaction of a stream whose checkpoint plans a batch (offsets/N)
+    that never committed would fold the batch's half-write into the prior
+    state its replay reads, so every compactor raises before touching
+    state. Once a restarted stream has replayed the batch, compaction
+    runs."""
+    from fast_duplicate_finder_spark.streaming import incremental as inc
+
+    work = str(tmp_path / "work")
+    q = run_incremental_dedup(spark, corpus_dir, work, max_files_per_trigger=1)
+    assert q.awaitTermination(600)
+    commits = os.path.join(work, "_stream_checkpoint", "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last == 1
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    # the other legs' compactors read their own checkpoints
+    for ckpt in ("_simhash_stream_checkpoint", "_lsh_stream_checkpoint"):
+        os.makedirs(os.path.join(work, ckpt, "offsets"))
+        open(os.path.join(work, ckpt, "offsets", "0"), "w").close()
+
+    state = os.path.join(work, "state", "data")
+    dups = sorted(tuple(r) for r in read_dup_log(spark, work).collect())
+    before = _tree(work)
+    for compactor in (
+        inc.compact_dedup_state,
+        inc.compact_simhash_state,
+        inc.compact_lsh_state,
+        inc.compact_cluster_state,
+    ):
+        with pytest.raises(RuntimeError, match="not committed"):
+            compactor(spark, work)
+    assert _tree(work) == before
+
+    # restart: epoch 1 replays, byte-identically, and commits
+    q = run_incremental_dedup(spark, corpus_dir, work, max_files_per_trigger=1)
+    assert q.awaitTermination(600)
+    assert os.path.exists(os.path.join(commits, str(last)))
+    inc.compact_dedup_state(spark, work)
+    assert [d for d in os.listdir(state) if d.startswith("epoch_id=")] == [
+        f"epoch_id={inc.COMPACTED_EPOCH}"
+    ]
+    assert sorted(tuple(r) for r in read_dup_log(spark, work).collect()) == dups
