@@ -30,8 +30,8 @@ class PipelineConfig:
 
     # --- near-duplicate cascade ---------------------------------------------
     shingle_k: int = 3                   # word-shingle width
-    minhash_perms: int = 128             # signature length
-    lsh_bands: int = 32                  # bands (perms = bands * rows)
+    lsh_bands: int = 32                  # bands (signature length =
+                                         # lsh_perms_used = bands * rows)
     lsh_rows: int = 4                    # rows per band
     jaccard_tau: float = 0.7             # verified near-dup threshold
     minhash_seed: int = 42
@@ -57,9 +57,6 @@ class PipelineConfig:
 
     # --- group (folder-analogue) dedup ---------------------------------------
     group_sep: str = "/"                 # conv_id path separator
-
-    # --- misc -----------------------------------------------------------------
-    seed: int = 42
 
     def fingerprint(self) -> str:
         """Stable hash of all parameters — keys phase checkpoints."""

@@ -11,7 +11,8 @@ per-row Python loop (input_hint requirement).
 
 The reference has no near-dup capability; this implements the MinHash leg
 of BASELINE.json's north_star at the fixed config in PipelineConfig
-(minhash_perms/lsh_bands/lsh_rows/jaccard_tau).
+(lsh_bands * lsh_rows = lsh_perms_used permutations, minhash_seed,
+jaccard_tau).
 """
 
 from __future__ import annotations

@@ -1,12 +1,20 @@
-"""Near-duplicate cascade: MinHash/LSH + SimHash + shared-span -> verified
-pairs -> connected components -> clusters.
+"""Near-duplicate operators: the features pass and the three pair legs.
 
 This is the generalization layer BASELINE.json's north_star adds on top of
-the reference's exact cascade. All legs share the JVM-computed shingle-hash
-sets; Python appears only in the two Arrow kernels (MinHash perms, SimHash
-votes) and the per-pair span matcher.
+the reference's exact cascade. ``near_dup_features`` computes every leg's
+input in one conv_id-partitioned pass (shingle-hash sets, MinHash and
+SimHash signatures, supershingle sets); Python appears only in its two
+Arrow kernels. Each leg then reads those columns and returns
+(pairs, overflow):
 
-Pair kinds (expected_near_pairs fixture): exact | minhash | simhash | span.
+* ``minhash_pairs`` — LSH band candidates verified by exact Jaccard;
+* ``simhash_pairs`` — pigeonhole chunk candidates within Hamming h;
+* ``span_pairs`` — anchored supershingle equi-join (shared token span).
+
+plans/pipeline.run_pipeline composes them — one checkpointed phase per leg,
+then the pair union with the exact cascade's star edges and connected
+components. Pair kinds (expected_near_pairs fixture): exact | minhash |
+simhash | span.
 """
 
 from __future__ import annotations
@@ -20,12 +28,9 @@ from fast_duplicate_finder_spark.functions.simhash import (
     simhash_candidate_pairs,
     simhash_udf,
 )
-from fast_duplicate_finder_spark.operators.connected_components import (
-    connected_components,
-)
 from fast_duplicate_finder_spark.operators.lsh import (
     candidate_pairs,
-    fingerprint_candidate_pairs,
+    capped_pairs,
     lsh_band_rows,
 )
 from fast_duplicate_finder_spark.operators.verify import verify_jaccard
@@ -183,29 +188,15 @@ def near_dup_features(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def minhash_pairs(
     features: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """MinHash/LSH candidates verified by exact Jaccard >= tau.
-
-    ``features`` with a precomputed ``minhash`` column (near_dup_features
-    checkpoint) skips signing entirely; otherwise signatures are computed
-    here from ``shset`` (the standalone-query path)."""
+    """MinHash/LSH candidates verified by exact Jaccard >= tau. Reads the
+    ``minhash`` and ``shset`` columns of ``near_dup_features``; returns
+    (conv_id_a, conv_id_b, jaccard) pairs and the capped-bucket overflow."""
     # empty shingle sets are dropped BEFORE banding (like the simhash leg):
     # every empty doc gets the identical all-zero signature, so they would
     # all collide in every band and then "verify" at jaccard 1.0 through
     # the expensive path — the exact cascade owns verbatim-empty dups.
-    if "minhash" in features.columns:
-        # recompute = re-read of the checkpoint table: no eager copy needed
-        sigs = features.filter(F.size("shset") > 0).select(
-            "conv_id", "minhash"
-        )
-    else:
-        mh = make_minhash_udf(cfg.lsh_perms_used, cfg.minhash_seed)
-        # eager: the band self-join + bucket-size window would otherwise
-        # re-evaluate the Arrow kernel once per probe side
-        sigs = (
-            features.filter(F.size("shset") > 0)
-            .select("conv_id", mh("shset").alias("minhash"))
-            .localCheckpoint(eager=True)
-        )
+    # recompute = re-read of the checkpoint table: no eager copy needed
+    sigs = features.filter(F.size("shset") > 0).select("conv_id", "minhash")
     bands = lsh_band_rows(sigs, cfg)
     cands, overflow = candidate_pairs(bands, cfg)
     verified = verify_jaccard(
@@ -217,23 +208,13 @@ def minhash_pairs(
 def simhash_pairs(
     features: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """SimHash fuzz pass: Hamming <= h (exact by construction). Returns
+    """SimHash fuzz pass over the ``simhash`` column of
+    ``near_dup_features``: Hamming <= h (exact by construction). Returns
     (pairs, overflow) — capped hot chunk buckets are counted like the LSH
-    band buckets, never silently dropped. A precomputed ``simhash`` column
-    (near_dup_features checkpoint) skips the Arrow kernel."""
+    band buckets, never silently dropped."""
     # empty docs share simhash 0; drop them (an empty doc is not a fuzz
     # match of another empty doc in any useful sense; exact cascade owns it).
-    if "simhash" in features.columns:
-        sims = features.filter(F.size("shset") > 0).select(
-            "conv_id", "simhash"
-        )
-    else:
-        # eager: the pigeonhole self-join would re-run the kernel per side.
-        sims = (
-            features.filter(F.size("shset") > 0)
-            .select("conv_id", simhash_udf("shset").alias("simhash"))
-            .localCheckpoint(eager=True)
-        )
+    sims = features.filter(F.size("shset") > 0).select("conv_id", "simhash")
     return simhash_candidate_pairs(
         sims,
         cfg.simhash_hamming,
@@ -298,30 +279,15 @@ def _supershingle_set(grams, window: int):
     )
 
 
-def supershingle_rows(features: DataFrame, window: int) -> DataFrame:
-    """(conv_id, sg) distinct anchored supershingle rows.
-
-    Two documents share a token span of >= window + k - 1 tokens IFF they
-    share at least one supershingle (modulo 64-bit hash collision) — the
-    span membership test becomes an exact equi-join, no per-pair
-    verification at all. Per-doc distinctness comes from array_distinct
-    inside ``_supershingle_set``; explode of the empty array drops
-    too-short docs (shorter docs cannot contain the span).
-    """
-    return features.select(
-        "conv_id",
-        F.explode(
-            _supershingle_set(F.col("grams"), window)
-        ).alias("sg"),
-    )
-
-
 def span_pairs(
     features: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared-span pass: anchored supershingle equi-join — EXACT span
+    """Shared-span pass over the ``sgs`` supershingle sets of
+    ``near_dup_features``: anchored supershingle equi-join — EXACT span
     membership (pair qualifies iff a >= span_min_tokens contiguous token
-    span is shared), entirely JVM-side.
+    span is shared), entirely JVM-side. Two documents share a token span
+    of >= window + k - 1 tokens IFF they share at least one supershingle
+    (modulo 64-bit hash collision); too-short docs have an empty set.
 
     Round 1 generated candidates from winnowing fingerprints and verified
     each with a difflib Arrow kernel; at 5M turns the 200-word synthetic
@@ -348,21 +314,11 @@ def span_pairs(
 
     Returns (pairs, overflow): hot supershingle buckets (corpus
     boilerplate >= cfg.max_band_bucket docs) are capped and counted like
-    every other candidate join. A precomputed ``sgs`` array column
-    (near_dup_features checkpoint) skips the gram re-shuffle + window
-    entirely — the round-2 plan re-serialized the full positional gram
-    arrays through a fresh exchange per run, the span leg's largest stage.
+    every other candidate join.
     """
-    from fast_duplicate_finder_spark.operators.lsh import capped_pairs
-
     window = max(cfg.span_min_tokens - cfg.shingle_k + 1, 1)
-    if "sgs" in features.columns:
-        # recompute = checkpoint re-read + explode: cheap on both probe sides
-        sgs = features.select("conv_id", F.explode("sgs").alias("sg"))
-    else:
-        sgs = supershingle_rows(features, window).localCheckpoint(
-            eager=True
-        )  # feeds the bucket-size window plus both sides of the self-join
+    # recompute = checkpoint re-read + explode: cheap on both probe sides
+    sgs = features.select("conv_id", F.explode("sgs").alias("sg"))
     # the shared capped + salted generator (one row per shared
     # supershingle, dedupe=False — each occurrence emitted exactly once,
     # so the count IS the shared-sg count); previously a plain self-join
@@ -394,41 +350,3 @@ def exact_pairs_from_clusters(exact_clusters: DataFrame) -> DataFrame:
         .distinct()
     )
 
-
-def run_near_dup(
-    docs: DataFrame, exact_clusters: DataFrame | None, cfg: PipelineConfig
-) -> dict[str, DataFrame]:
-    features = near_dup_features(docs, cfg).localCheckpoint(eager=True)
-    mh_pairs, mh_overflow = minhash_pairs(features, cfg)
-    sh_pairs, sh_overflow = simhash_pairs(features, cfg)
-    sp_pairs, sp_overflow = span_pairs(features, cfg)
-
-    tagged = (
-        mh_pairs.select("conv_id_a", "conv_id_b", F.lit("minhash").alias("kind"))
-        .union(
-            sh_pairs.select(
-                "conv_id_a", "conv_id_b", F.lit("simhash").alias("kind")
-            )
-        )
-        .union(
-            sp_pairs.select(
-                "conv_id_a", "conv_id_b", F.lit("span").alias("kind")
-            )
-        )
-    )
-    if exact_clusters is not None:
-        tagged = tagged.union(
-            exact_pairs_from_clusters(exact_clusters).select(
-                "conv_id_a", "conv_id_b", F.lit("exact").alias("kind")
-            )
-        )
-    # cluster membership ignores kind; keep kinds for the pair report
-    cluster_edges = tagged.select("conv_id_a", "conv_id_b").distinct()
-    clusters = connected_components(cluster_edges)
-    return {
-        "pairs": tagged,
-        "clusters": clusters,
-        "lsh_overflow": mh_overflow,
-        "simhash_overflow": sh_overflow,
-        "span_overflow": sp_overflow,
-    }

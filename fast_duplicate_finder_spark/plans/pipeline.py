@@ -9,8 +9,10 @@ converging on run_finder.go:23-85):
       p3_exact          full-hash exact clusters          (phase_3.go)
       p4_group_sigs     Merkle folder signatures          (phase_4.go)
       p5_groups         nested suppression + file filter  (phase_5.go)
-      p6_features       shingle/k-gram features           (north_star)
-      p7_pairs          minhash/simhash/span/exact pairs  (north_star)
+      p6_features       shingle sets + leg signatures     (north_star)
+      p7a/p7b/p7c       minhash/simhash/span pair legs,   (north_star)
+                        each with its overflow table
+      p7_pairs          legs + exact star edges           (north_star)
       p8_clusters       connected components              (north_star)
       report            summary + metrics
 
@@ -22,6 +24,7 @@ driver-side summary.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,10 +107,12 @@ def run_pipeline(
     n_phases = 6 + (3 if with_groups else 0) + (7 if with_near_dup else 0)
     counter = {"i": 0}
 
-    def run_phase(phase, compute, lineage, **write_kwargs):
+    def run_phase(phase, compute, lineage, overflow=None, **write_kwargs):
         """Phase boundary: cancellation check + job-group tagging + progress
         fanout around the checkpointed compute (run_finder.go:45-79's
-        between-phase ctx checks; status.go:55-81's callback fanout)."""
+        between-phase ctx checks; status.go:55-81's callback fanout).
+        ``overflow``: (table, compute) of a second checkpoint written
+        inside the same boundary, after the phase's own table."""
         cancel.check()
         counter["i"] += 1
         cancel.enter_phase(phase)
@@ -123,6 +128,9 @@ def run_pipeline(
                 out = store.get_or_compute(
                     phase, compute, lineage, resume, **write_kwargs
                 )
+                metric = store.metrics[-1]
+                if overflow is not None:
+                    store.get_or_compute(*overflow, lineage, resume)
         except PipelineCancelled:
             raise
         except Exception as e:
@@ -137,10 +145,7 @@ def run_pipeline(
                     f"pipeline cancelled during phase {phase}"
                 ) from e
             raise
-        progress.phase_done(
-            phase, counter["i"], n_phases,
-            store.metrics[-1] if store.metrics else {},
-        )
+        progress.phase_done(phase, counter["i"], n_phases, metric)
         return out
 
     stats = run_phase(
@@ -198,8 +203,6 @@ def run_pipeline(
         files_kept = p3
 
     if with_near_dup:
-        # features are recomputed per near-dup phase group (cheap JVM
-        # expressions) but docs come from the p1_docs checkpoint.
         # Near-dup legs consider ALL assembled docs, not only exact-cascade
         # survivors: near-dups differ in size, so assemble everything here.
         all_docs = run_phase(
@@ -229,66 +232,25 @@ def run_pipeline(
         # resume (kill mid-leg loses only that leg), and the fused
         # union-of-three-legs query measured ~2.5x slower than the legs run
         # as separate jobs at high core counts (three Arrow-UDF stage trees
-        # competing inside one DAG). Overflow tables are phases too — the
-        # manifest row count IS the counter (capped, counted, never silent).
-        # A leg's pairs + overflow are written in ONE pass: a resume that
-        # finds either table missing recomputes the leg once, not twice.
-        def _leg_with_overflow(pairs_phase, ovf_phase, fn):
-            cancel.check()
-            counter["i"] += 1
-            cancel.enter_phase(pairs_phase)
-            progress.phase_start(pairs_phase, counter["i"], n_phases)
-            if (
-                resume
-                and store.exists(pairs_phase)
-                and store.exists(ovf_phase)
-            ):
-                leg_metric = {"phase": pairs_phase, "resumed": True}
-                store.metrics.append(leg_metric)
-                out = store.read(pairs_phase)
-            else:
-                import time as _time
-
-                t0 = _time.perf_counter()
-                # the poller wraps fn() too: a leg's dominant work is the
-                # eager candidate-generation checkpoint INSIDE fn(), and
-                # within-phase progress must cover it, not only the final
-                # verify+write
-                with StageProgressPoller(
-                    spark, progress, pairs_phase, counter["i"], n_phases,
-                    interval=progress.poll_interval,
-                ):
-                    leg_pairs, leg_ovf = fn()
-                    out = store.write(
-                        leg_pairs, pairs_phase, lineage=["p6_features"]
-                    )
-                    leg_metric = store.metrics[-1]  # the pairs-table metric
-                    store.write(leg_ovf, ovf_phase, lineage=["p6_features"])
-                leg_metric["seconds"] = round(_time.perf_counter() - t0, 2)
-            progress.phase_done(
-                pairs_phase, counter["i"], n_phases, leg_metric
+        # competing inside one DAG). A leg's overflow table is written in
+        # the pairs phase's boundary — the manifest row count IS the
+        # counter (capped, counted, never silent). Both tables take ONE
+        # memoized (pairs, overflow) result: candidate generation runs
+        # once, and a resume missing either table recomputes only that one.
+        def run_leg(phase, overflow_phase, leg):
+            result = functools.cache(lambda: leg(features, cfg))
+            return run_phase(
+                phase, lambda: result()[0], ["p6_features"],
+                overflow=(overflow_phase, lambda: result()[1]),
             )
-            return out
 
-        mh_pairs_df = _leg_with_overflow(
-            "p7a_minhash_pairs",
-            "p7a_lsh_overflow",
-            lambda: (
-                lambda mh, ovf: (
-                    mh.select("conv_id_a", "conv_id_b", "jaccard"), ovf
-                )
-            )(*minhash_pairs(features, cfg)),
+        mh_pairs_df = run_leg(
+            "p7a_minhash_pairs", "p7a_lsh_overflow", minhash_pairs
         )
-        sh_pairs_df = _leg_with_overflow(
-            "p7b_simhash_pairs",
-            "p7b_simhash_overflow",
-            lambda: simhash_pairs(features, cfg),
+        sh_pairs_df = run_leg(
+            "p7b_simhash_pairs", "p7b_simhash_overflow", simhash_pairs
         )
-        sp_pairs_df = _leg_with_overflow(
-            "p7c_span_pairs",
-            "p7c_span_overflow",
-            lambda: span_pairs(features, cfg),
-        )
+        sp_pairs_df = run_leg("p7c_span_pairs", "p7c_span_overflow", span_pairs)
 
         pairs = run_phase(
             "p7_pairs",

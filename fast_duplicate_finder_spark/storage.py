@@ -136,10 +136,7 @@ class CheckpointStore:
         df: DataFrame,
         phase: str,
         lineage: list[str] | None = None,
-        counters: dict | None = None,
         bucket_by: list[str] | None = None,
-        n_buckets: int = 0,
-        sort_by: list[str] | None = None,
     ) -> DataFrame:
         """Write + manifest; returns the re-read DataFrame (so downstream
         phases read the checkpoint, truncating lineage like the reference's
@@ -153,8 +150,8 @@ class CheckpointStore:
         moment it is written; the widest checkpoint then re-shuffles once
         per consumer). ``bucketBy`` does not itself shuffle: when the
         incoming plan is already hash-partitioned on the bucket columns
-        with ``n_buckets`` partitions (shuffle.partitions default), each
-        task writes exactly one bucket file. (Iceberg swap point: a
+        with shuffle.partitions partitions (the bucket count), each task
+        writes exactly one bucket file. (Iceberg swap point: a
         ``bucket(N, col)`` partition transform + storage-partitioned
         joins express the same contract.)"""
         path = self._dir(phase)
@@ -191,11 +188,9 @@ class CheckpointStore:
         # small (where the rewrite is by construction cheap) rebalance it
         # to defaultParallelism in a second pass.
         target = self.spark.sparkContext.defaultParallelism
+        n_buckets = 0
         if bucket_by:
-            if n_buckets <= 0:
-                n_buckets = int(
-                    self.spark.conf.get("spark.sql.shuffle.partitions")
-                )
+            n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             name = self._table_name(phase)
             # external table may exist from an earlier run against a
             # DIFFERENT path (tests, moved checkpoint dirs): drop the
@@ -203,14 +198,12 @@ class CheckpointStore:
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
             if os.path.isdir(data_path):
                 shutil.rmtree(data_path)
-            writer = (
+            (
                 df.write.mode("overwrite")
                 .option("path", data_path)
                 .bucketBy(n_buckets, *bucket_by)
+                .saveAsTable(name)
             )
-            if sort_by:
-                writer = writer.sortBy(*sort_by)
-            writer.saveAsTable(name)
             out = self.spark.table(name)
         else:
             df.write.mode("overwrite").parquet(data_path)
@@ -246,11 +239,9 @@ class CheckpointStore:
             "rows": int(sum(per_part.values())),
             "partitions": per_part,
             "bucket_by": bucket_by or [],
-            "n_buckets": n_buckets if bucket_by else 0,
-            "sort_by": sort_by or [],
+            "n_buckets": n_buckets,
             "schema_json": df.schema.json() if bucket_by else None,
             "lineage": lineage or [],
-            "counters": counters or {},
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "complete": True,
         }
@@ -308,17 +299,10 @@ class CheckpointStore:
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema
             )
             bucket_cols = ", ".join(f"`{c}`" for c in m["bucket_by"])
-            sorted_by = (
-                " SORTED BY ({})".format(
-                    ", ".join(f"`{c}`" for c in m["sort_by"])
-                )
-                if m.get("sort_by")
-                else ""
-            )
             data_path = os.path.join(self._dir(phase), "data")
             self.spark.sql(
                 f"CREATE TABLE {name} ({cols}) USING PARQUET "
-                f"CLUSTERED BY ({bucket_cols}){sorted_by} "
+                f"CLUSTERED BY ({bucket_cols}) "
                 f"INTO {m['n_buckets']} BUCKETS "
                 f"LOCATION '{os.path.abspath(data_path)}'"
             )

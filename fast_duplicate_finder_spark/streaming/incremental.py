@@ -57,12 +57,8 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.sources.transcripts import (
+    TRANSCRIPT_SCHEMA_DDL,
     assemble_conversations,
-)
-
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
 )
 
 
@@ -70,7 +66,7 @@ def stream_transcripts(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int | None = None,
-    schema: str = TRANSCRIPT_SCHEMA,
+    schema: str = TRANSCRIPT_SCHEMA_DDL,
 ) -> DataFrame:
     """File-stream source over transcript (or ``schema``-shaped) parquet.
     ``path`` follows Spark's file-source listing rules: a directory of FLAT

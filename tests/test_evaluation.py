@@ -16,11 +16,7 @@ from fast_duplicate_finder_spark.evaluation import (
     planted_pairs,
     recall_report,
 )
-from fast_duplicate_finder_spark.operators.exact_cascade import (
-    exact_clusters,
-    full_hash_stage,
-)
-from fast_duplicate_finder_spark.operators.neardup import run_near_dup
+from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
 )
@@ -60,17 +56,18 @@ def test_ground_truth_tiers_from_data(spark):
     truth.unpersist()
 
 
-def test_recall_gate_on_planted_corpus(spark):
+def test_recall_gate_on_planted_corpus(spark, tmp_path):
     """End-to-end: exact cascade + all three near-dup legs + CC, measured
     against the data-derived truth — the >=0.99 BASELINE gate."""
     t = generate_transcripts_distributed(spark, N_CONVS)
     docs = assemble_conversations(t).localCheckpoint(eager=True)
-    exact = exact_clusters(full_hash_stage(docs))
-    nd = run_near_dup(docs, exact, DEFAULT_CONFIG)
+    nd = run_pipeline(
+        spark, t, DEFAULT_CONFIG, str(tmp_path / "c"), with_groups=False
+    )
     truth = ground_truth_tiers(
         docs, planted_pairs(spark, N_CONVS), DEFAULT_CONFIG
     )
-    rep = recall_report(truth, nd["clusters"], nd["pairs"])
+    rep = recall_report(truth, nd.near_clusters, nd.near_pairs)
     assert rep["recall_exact_clusters"] == 1.0
     assert rep["recall_clusters"] >= 0.99, rep
     # the verified pair log alone (before transitive closure) also holds

@@ -15,9 +15,12 @@ from fast_duplicate_finder_spark.functions.shingles import word_shingles
 from fast_duplicate_finder_spark.operators.connected_components import (
     connected_components,
 )
-from fast_duplicate_finder_spark.operators.exact_cascade import run_exact_cascade
-from fast_duplicate_finder_spark.operators.neardup import run_near_dup
-from fast_duplicate_finder_spark.sources.transcripts import assemble_conversations
+from fast_duplicate_finder_spark.operators.neardup import (
+    near_dup_features,
+    simhash_pairs,
+    span_pairs,
+)
+from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
 
 from tests.oracle import assemble_locally, jaccard, near_pairs_oracle, shingles
 
@@ -67,18 +70,16 @@ def test_connected_components_basic(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "a", "d": "d", "e": "d"}
 
 
-def test_near_dup_recall_and_precision_vs_bruteforce(spark):
+def test_near_dup_recall_and_precision_vs_bruteforce(spark, tmp_path):
     df = generate_transcripts(spark, n_convs=300, seed=42)
     rows = df.collect()
     local_docs = assemble_locally([tuple(r) for r in rows])
     oracle = near_pairs_oracle(local_docs, CFG.jaccard_tau, CFG.shingle_k)
 
-    docs = assemble_conversations(df)
-    exact = run_exact_cascade(df, CFG)["clusters"]
-    res = run_near_dup(docs, exact, CFG)
+    rep = run_pipeline(spark, df, CFG, str(tmp_path / "c"), with_groups=False)
     mh = {
         (r["conv_id_a"], r["conv_id_b"])
-        for r in res["pairs"].filter("kind = 'minhash'").collect()
+        for r in rep.near_pairs.filter("kind = 'minhash'").collect()
     }
     # precision is 1.0 by construction (exact Jaccard verify)
     for a, b in mh:
@@ -90,7 +91,7 @@ def test_near_dup_recall_and_precision_vs_bruteforce(spark):
     assert recall >= 0.99, f"missed {sorted(missed)[:5]} of {len(oracle)}"
 
     # clusters: every oracle pair ends up in the same component
-    comp = {r["conv_id"]: r["component"] for r in res["clusters"].collect()}
+    comp = {r["conv_id"]: r["component"] for r in rep.near_clusters.collect()}
     for a, b in oracle:
         assert comp.get(a) is not None and comp[a] == comp.get(b)
 
@@ -102,10 +103,10 @@ def test_simhash_catches_tiny_perturbations(spark):
     df = spark.createDataFrame(
         [("p1", base), ("p2", fuzz), ("q1", far)], "conv_id string, doc string"
     )
-    res = run_near_dup(df, None, CFG)
+    pairs, _ = simhash_pairs(near_dup_features(df, CFG), CFG)
     sh = {
         tuple(sorted((r["conv_id_a"], r["conv_id_b"])))
-        for r in res["pairs"].filter("kind = 'simhash'").collect()
+        for r in pairs.collect()
     }
     assert ("p1", "p2") in sh
     assert ("p1", "q1") not in sh and ("p2", "q1") not in sh
@@ -121,10 +122,10 @@ def test_span_pass_detects_long_shared_span(spark):
     df = spark.createDataFrame(
         [("a", a), ("b", b), ("c", c), ("d", d)], "conv_id string, doc string"
     )
-    res = run_near_dup(df, None, CFG)
+    pairs, _ = span_pairs(near_dup_features(df, CFG), CFG)
     sp = {
         tuple(sorted((r["conv_id_a"], r["conv_id_b"])))
-        for r in res["pairs"].filter("kind = 'span'").collect()
+        for r in pairs.collect()
     }
     assert ("a", "b") in sp
     assert ("c", "d") not in sp

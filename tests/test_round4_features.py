@@ -198,7 +198,10 @@ def test_span_longest_run_occurrence_cap(spark):
     assert all(r["occurrences"] > CFG.max_band_bucket for r in ovf)
 
 
-def test_shuffle_partitions_not_a_pipeline_parameter():
+@pytest.mark.parametrize(
+    "knob", ["shuffle_partitions", "minhash_perms", "seed"]
+)
+def test_shuffle_partitions_not_a_pipeline_parameter(knob):
     """VERDICT round-3 #2: the dead knob is gone from the dataclass AND the
     fingerprint (it invalidated every checkpoint while changing nothing).
     Shuffle parallelism belongs to session.get_spark / spark-submit."""
@@ -206,11 +209,11 @@ def test_shuffle_partitions_not_a_pipeline_parameter():
 
     from fast_duplicate_finder_spark.config import PipelineConfig
 
-    assert "shuffle_partitions" not in {
+    assert knob not in {
         f.name for f in fields(PipelineConfig)
     }
     with pytest.raises(TypeError):
-        PipelineConfig(shuffle_partitions=64)
+        PipelineConfig(**{knob: 64})
 
 
 def test_compute_heavy_exchanges_pin_explicit_width(spark, monkeypatch):
@@ -302,8 +305,14 @@ def test_span_longest_overflow_query_matches_oracle(spark, tmp_path):
     assert got == exp == {(3, 1, n_rep - _SPAN_TOKENS + 1)}
 
 
+@pytest.mark.parametrize(
+    "killed, with_near_dup, last_done",
+    [("p2_partial", False, "p1_docs"),
+     ("p7a_minhash_pairs", True, "p6_features")],
+    ids=["p2_partial", "p7a_minhash_pairs"],
+)
 def test_mid_phase_cancel_surfaces_pipeline_cancelled(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, killed, with_near_dup, last_done
 ):
     """A cancel() landing MID-phase kills the job group, so the in-flight
     action raises a raw Spark job-cancelled error before the next boundary
@@ -326,27 +335,27 @@ def test_mid_phase_cancel_surfaces_pipeline_cancelled(
     orig = CheckpointStore.get_or_compute
 
     def interrupted(self, phase, compute, lineage, resume, **kw):
-        if phase == "p2_partial":
+        if phase == killed:
             token.cancel()  # the kill and the raw error the dying job raises
             raise RuntimeError(
-                "Job 7 cancelled part of cancelled job group p2_partial"
+                f"Job 7 cancelled part of cancelled job group {killed}"
             )
         return orig(self, phase, compute, lineage, resume, **kw)
 
     monkeypatch.setattr(CheckpointStore, "get_or_compute", interrupted)
     ckpt = str(tmp_path / "c")
-    with pytest.raises(PipelineCancelled, match="during phase p2_partial"):
+    with pytest.raises(PipelineCancelled, match=f"during phase {killed}"):
         run_pipeline(
             spark, df, PipelineConfig(), ckpt, with_groups=False,
-            with_near_dup=False, cancel=token,
+            with_near_dup=with_near_dup, cancel=token,
         )
     assert not os.path.exists(
-        os.path.join(ckpt, "p2_partial", "_MANIFEST.json")
+        os.path.join(ckpt, killed, "_MANIFEST.json")
     )
     monkeypatch.undo()
     rep = run_pipeline(
         spark, df, PipelineConfig(), ckpt, with_groups=False,
-        with_near_dup=False,
+        with_near_dup=with_near_dup,
     )
     resumed = {m["phase"] for m in rep.metrics if m.get("resumed")}
-    assert "p1_docs" in resumed  # pre-cancel checkpoints reused
+    assert last_done in resumed  # pre-cancel checkpoints reused

@@ -136,13 +136,13 @@ def _simhash_got(spark, work):
 def _lsh_oracle(spark, cfg):
     from fast_duplicate_finder_spark.operators.neardup import (
         minhash_pairs,
-        shingle_features,
+        near_dup_features,
     )
     from fast_duplicate_finder_spark.sources.transcripts import (
         assemble_conversations,
     )
 
-    feats = shingle_features(assemble_conversations(_all_rows(spark)), cfg)
+    feats = near_dup_features(assemble_conversations(_all_rows(spark)), cfg)
     pairs, overflow = minhash_pairs(feats, cfg)
     assert overflow.count() == 0
     return {

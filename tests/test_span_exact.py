@@ -15,6 +15,7 @@ from fast_duplicate_finder_spark.operators.lsh import (
     fingerprint_candidate_pairs,
 )
 from fast_duplicate_finder_spark.operators.neardup import (
+    near_dup_features,
     shingle_features,
     span_pairs,
     winnow_fingerprint_rows,
@@ -48,7 +49,9 @@ def test_supershingle_span_matches_difflib_oracle(spark):
         assemble_conversations(t), CFG
     ).localCheckpoint(eager=True)
 
-    new_pairs, overflow = span_pairs(features, CFG)
+    new_pairs, overflow = span_pairs(
+        near_dup_features(assemble_conversations(t), CFG), CFG
+    )
     new = {
         (r["conv_id_a"], r["conv_id_b"]): r["span_tokens"]
         for r in new_pairs.collect()

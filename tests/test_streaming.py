@@ -335,7 +335,7 @@ def test_incremental_lsh_matches_batch(spark, tmp_path):
     from fast_duplicate_finder_spark.config import PipelineConfig
     from fast_duplicate_finder_spark.operators.neardup import (
         minhash_pairs,
-        shingle_features,
+        near_dup_features,
     )
     from fast_duplicate_finder_spark.sources.transcripts import (
         assemble_conversations,
@@ -384,7 +384,7 @@ def test_incremental_lsh_matches_batch(spark, tmp_path):
     all_rows = spark.createDataFrame(
         _one_turn_rows({**batch1, **batch2}), _TRANSCRIPT_SCHEMA
     )
-    feats = shingle_features(assemble_conversations(all_rows), cfg)
+    feats = near_dup_features(assemble_conversations(all_rows), cfg)
     batch_pairs, overflow = minhash_pairs(feats, cfg)
     expected = {
         (r["conv_id_a"], r["conv_id_b"], round(r["jaccard"], 9))
