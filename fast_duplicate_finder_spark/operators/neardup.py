@@ -82,59 +82,65 @@ def shingle_features(
     * shset — distinct k-shingle hashes, sorted; 0 < n_words < k degrades
       to one whole-doc shingle (functions/shingles.word_shingles parity);
     * grams — positional (non-distinct) k-gram hashes in token order.
+
+    Each document is read and tokenized ONCE: ``posexplode_outer`` keeps a
+    single (null, null) row for a doc with no tokens, so the word count
+    and the whole-doc hash come out of the same aggregation as the
+    shingles.
     """
     from fast_duplicate_finder_spark.functions.shingles import words
 
     k = cfg.shingle_k
-    w = words(F.col("doc"))
     # ONE doc-granularity exchange up front: hash-partitioning the doc rows
     # by conv_id makes the exploded token rows inherit that partitioning
-    # (Generate preserves child partitioning), so the lead-window, the
-    # collect_list aggregation AND the final rejoin are all exchange-free —
-    # round 1 instead shuffled TOKEN rows (~3-5x corpus bytes of row
-    # overhead) for the window and again for the agg, the plan's dominant
-    # exchange at 10^12 turns.
-    base = _repartition_even(
-        docs.select(
-            "conv_id",
-            F.size(w).alias("n_words"),
-            F.xxhash64(F.array_join(w, " ")).alias("whole_hash"),
-            F.col("doc"),
-        ),
-        even=even_exchange,
-    )
-    toks = base.select(
-        "conv_id", "n_words", F.posexplode(words(F.col("doc"))).alias("pos", "tok")
+    # (Generate preserves child partitioning), so the lead-window and the
+    # aggregation are exchange-free — round 1 instead shuffled TOKEN rows
+    # (~3-5x corpus bytes of row overhead) for the window and again for
+    # the agg, the plan's dominant exchange at 10^12 turns.
+    toks = _repartition_even(
+        docs.select("conv_id", "doc"), even=even_exchange
+    ).select(
+        "conv_id", F.posexplode_outer(words(F.col("doc"))).alias("pos", "tok")
     )
     w_ord = Window.partitionBy("conv_id").orderBy("pos")
-    leads = [F.lead("tok", i).over(w_ord) for i in range(1, k)]
-    valid = leads[-1].isNotNull() if k > 1 else F.lit(True)
-    g = toks.withColumn(
-        "gh",
-        F.when(valid, F.xxhash64(F.concat_ws(" ", F.col("tok"), *leads))),
+    leads = [f"tok{i}" for i in range(1, k)]
+    g = toks.select(
+        "conv_id",
+        "pos",
+        "tok",
+        *[F.lead("tok", i).over(w_ord).alias(c) for i, c in enumerate(leads, 1)],
+    ).select(
+        "conv_id",
+        "pos",
+        "tok",
+        # concat_ws skips null leads, so on the pos-0 row of a doc shorter
+        # than k words h is xxhash64(array_join(words, " ")): the whole-doc
+        # shingle
+        F.xxhash64(F.concat_ws(" ", "tok", *leads)).alias("h"),
+        # the row starts a full k-gram iff its (k-1)-th lead exists
+        F.col(leads[-1] if leads else "tok").isNotNull().alias("full"),
     )
     agg = g.groupBy("conv_id").agg(
+        F.count("tok").alias("n_words"),
+        F.max(F.when(F.col("pos") == 0, F.col("h"))).alias("whole_hash"),
         F.transform(
             F.array_sort(
-                F.collect_list(
-                    F.when(F.col("gh").isNotNull(), F.struct("pos", "gh"))
-                )
+                F.collect_list(F.when(F.col("full"), F.struct("pos", "h")))
             ),
-            lambda s: s.getField("gh"),
+            lambda s: s.getField("h"),
         ).alias("grams"),
-        F.array_sort(F.collect_set("gh")).alias("shset0"),
+        F.array_sort(F.collect_set(F.when(F.col("full"), F.col("h")))).alias(
+            "shset0"
+        ),
     )
-    out = base.join(agg, "conv_id", "left").select(
+    return agg.select(
         "conv_id",
-        F.when(
-            F.col("n_words") >= k, F.coalesce("shset0", F.array().cast("array<bigint>"))
-        )
+        F.when(F.col("n_words") >= k, F.col("shset0"))
         .when(F.col("n_words") > 0, F.array(F.col("whole_hash")))
         .otherwise(F.array().cast("array<bigint>"))
         .alias("shset"),
-        F.coalesce("grams", F.array().cast("array<bigint>")).alias("grams"),
+        "grams",
     )
-    return out
 
 
 def near_dup_features(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -151,16 +157,17 @@ def near_dup_features(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     (~27 s/task x 35 tasks map-side).
 
     Here the token-granularity data is consumed WHERE IT ALREADY LIVES:
-    everything is ONE projection over shingle_features' output (still
-    hash-partitioned by conv_id for the bucketed checkpoint write) —
+    everything is ONE projection over shingle_features' output, which is
+    still hash-partitioned by conv_id for the bucketed checkpoint write —
     supershingles via a per-doc higher-order transform and both Arrow
     signature kernels, so ``grams`` never leaves this operator and no
     row of it is exploded, sorted or joined back. (The round-3a form
     posexploded ~10 gram rows per turn through a ``window``-wide
     collect_list frame — materializing window x |grams| array elements —
     then re-joined per doc; the HOF form measured 1.4x faster on the
-    isolated leg and removes the join entirely.) The p7 legs then
-    shuffle only signatures and band keys — bytes per doc, not bytes
+    isolated leg and removes the join entirely.) The whole plan is one
+    scan of the documents, one conv_id exchange and no join. The p7 legs
+    then shuffle only signatures and band keys — bytes per doc, not bytes
     per token. (Reference analogue: the cascade hands PHASE SUMMARIES
     between phases, never re-derives file contents — phase_2.go:15-40.)
     """

@@ -142,6 +142,12 @@ class CheckpointStore:
         phases read the checkpoint, truncating lineage like the reference's
         phase boundaries).
 
+        A plain checkpoint is written ONCE, as produced, in one Spark job.
+        Its file count does not bound downstream parallelism: every reader
+        starts at an exchange or a cheap narrow step, and a large table
+        re-splits at ``maxPartitionBytes`` on read. The re-read takes the
+        written frame's schema, so no schema-inference job runs.
+
         ``bucket_by`` writes a BUCKETED external table instead of plain
         parquet: the re-read scan carries ``hashpartitioning(bucket_by)``
         output partitioning, so every downstream join/agg keyed on the
@@ -175,19 +181,6 @@ class CheckpointStore:
                 "configured catalog); refusing to silently fall back to "
                 "parquet — pass table_format='parquet' explicitly"
             )
-        # Guarantee downstream parallelism WITHOUT a blanket shuffle: AQE
-        # coalesces small phase outputs to one or two files, and a 1-file
-        # parquet checkpoint then feeds every later stage (including the
-        # Arrow UDF kernels) as a SINGLE task no matter how many executors
-        # exist — measured as p6/p7 running 38 s/54 s flat at both local[8]
-        # and local[32]. Round 1 unconditionally repartitioned EVERY output
-        # to defaultParallelism — at 100 TB that is an extra all-data
-        # exchange per phase for the biggest tables, which need none: a
-        # large checkpoint re-splits at maxPartitionBytes on read anyway.
-        # Now: write as produced; only when the result is BOTH few-file and
-        # small (where the rewrite is by construction cheap) rebalance it
-        # to defaultParallelism in a second pass.
-        target = self.spark.sparkContext.defaultParallelism
         n_buckets = 0
         if bucket_by:
             n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -207,23 +200,7 @@ class CheckpointStore:
             out = self.spark.table(name)
         else:
             df.write.mode("overwrite").parquet(data_path)
-            try:
-                files = [
-                    e
-                    for e in os.scandir(data_path)
-                    if e.name.endswith(".parquet") and e.is_file()
-                ]
-                n_files = len(files)
-                total_bytes = sum(e.stat().st_size for e in files)
-            except OSError:
-                n_files, total_bytes = target, 0
-            if n_files < target and total_bytes < (256 << 20):
-                rebal = self.spark.read.parquet(data_path).repartition(target)
-                tmp_path = data_path + ".rebal"
-                rebal.write.mode("overwrite").parquet(tmp_path)
-                shutil.rmtree(data_path)
-                os.replace(tmp_path, data_path)
-            out = self.spark.read.parquet(data_path)
+            out = self.spark.read.schema(df.schema).parquet(data_path)
         # Per-partition counters from the parquet FOOTERS (driver-side
         # metadata reads), not a Spark job: the old groupBy(partition_id)
         # re-scanned every checkpoint in full — one extra all-data pass per

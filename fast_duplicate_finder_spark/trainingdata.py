@@ -277,6 +277,8 @@ WHERE list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[])
       >= {_ANN_MIN_COS}"""
 
 
+# DuckDB 1.0.0 is the engine this oracle is pinned to; its margin from
+# summation order is asserted in tests/test_queries_vs_duckdb.py.
 ORACLE_ANN_MULTITABLE = _ann_oracle()
 
 

@@ -68,6 +68,34 @@ def test_query_matches_oracle(spark, ddb, name):
     )
 
 
+def test_ann_oracle_has_numeric_margin():
+    """embedding_ann_multitable is compared bit-for-bit with its DuckDB
+    oracle, which replays the plane signs and the cosine threshold. Spark
+    and DuckDB may sum in different orders, so the fixture must keep every
+    plane dot product clear of 0 and every pair cosine clear of min_cos:
+    checked here in float64 over all vectors and all pairs."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from fast_duplicate_finder_spark.operators.ann import rhp_planes
+    from fast_duplicate_finder_spark.trainingdata import (
+        _ANN_MIN_COS,
+        _ANN_PLANES,
+        _ANN_SEED,
+        _ANN_TABLES,
+    )
+
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["embedding"])
+    e = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
+    planes = np.array(
+        rhp_planes(_ANN_TABLES, _ANN_PLANES, 64, _ANN_SEED), dtype=np.float64
+    ).reshape(-1, 64)
+    assert np.abs(e @ planes.T).min() >= 1e-9
+    unit = e / np.linalg.norm(e, axis=1, keepdims=True)
+    cos = (unit @ unit.T)[np.triu_indices(len(e), 1)]
+    assert np.abs(cos - _ANN_MIN_COS).min() >= 1e-9
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0

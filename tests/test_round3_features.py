@@ -109,6 +109,23 @@ def test_manifest_counters_from_footers(spark, tmp_path):
     assert len(m["partitions"]) >= 1
 
 
+def test_plain_checkpoint_is_written_once(spark, tmp_path):
+    """A plain checkpoint costs ONE Spark job: the write. No rewrite pass
+    re-reads a small, few-file output to widen it, and the re-read that
+    write() returns takes the written schema (no inference job)."""
+    store = CheckpointStore(spark, str(tmp_path / "ck"), "fp")
+    sc = spark.sparkContext
+    group = "r3_write_once"
+    sc.setJobGroup(group, "one write, one job")
+    try:
+        out = store.write(spark.range(10).coalesce(1), "p0")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert not (tmp_path / "ck" / "p0" / "data.rebal").exists()
+    assert out.count() == 10 == store.manifest("p0")["rows"]
+
+
 # --- format boundary carrying ----------------------------------------------
 
 @pytest.mark.parametrize(

@@ -265,6 +265,33 @@ def test_compute_heavy_exchanges_pin_explicit_width(spark, monkeypatch):
     assert pairs.count() == sum(8 * 7 // 2 for _ in range(5))
 
 
+def test_near_dup_features_reads_docs_once(spark, tmp_path):
+    """p6 reads and tokenizes each document once (PLANS.md): on a parquet
+    docs table the physical plan has one file scan, exactly one Exchange
+    (the conv_id repartition feeding the window and the aggregation) and
+    no join — the word count and whole-doc hash come out of the token
+    aggregation, not a per-doc branch joined back to it."""
+    from fast_duplicate_finder_spark.config import PipelineConfig
+    from fast_duplicate_finder_spark.corpus import generate_transcripts
+    from fast_duplicate_finder_spark.operators.neardup import (
+        near_dup_features,
+    )
+    from fast_duplicate_finder_spark.sources.transcripts import (
+        assemble_conversations,
+    )
+
+    path = str(tmp_path / "docs")
+    assemble_conversations(generate_transcripts(spark, 60, seed=3)).select(
+        "conv_id", "doc"
+    ).write.parquet(path)
+    feats = near_dup_features(spark.read.parquet(path), PipelineConfig())
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+    assert feats.count() == 60
+
+
 def test_span_longest_overflow_query_matches_oracle(spark, tmp_path):
     """The occurrence-cap counter is a first-class oracle-checked query
     (span_longest_overflow): on a documents table holding a degenerate
