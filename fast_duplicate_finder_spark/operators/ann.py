@@ -1,8 +1,9 @@
 """Multi-table random-hyperplane LSH over embedding columns.
 
-The catalog's single-table query (queries.q_embedding_ann_lsh, 16 planes)
-is exact for *identical* vectors — they share every bucket — but a single
-16-plane table recalls only ~8% of cosine-0.9 neighbors
+The catalog's single-table query (queries.q_embedding_ann_lsh) runs
+``rhp_ann_pairs`` with one table of 16 planes. It is exact for *identical*
+vectors — they share every bucket — but a single 16-plane table recalls
+only ~8% of cosine-0.9 neighbors
 (P[collide] = (1 - theta/pi)^16, theta = acos(0.9)). The production knob
 for near-neighbor recall is the classic (n_tables, n_planes) trade:
 a pair colliding in ANY of L tables is a candidate, so
@@ -128,7 +129,6 @@ def rhp_ann_pairs(
     seed: int = 1234,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    even_exchange: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-neighbor pairs by multi-table RHP-LSH + exact cosine verify.
 
@@ -149,13 +149,7 @@ def rhp_ann_pairs(
         )
     planes = rhp_planes(n_tables, n_planes, dim, seed)
     rows = rhp_bucket_rows(vectors, planes, vec_col, id_col)
-    cand, overflow = capped_pairs(
-        rows,
-        ["t", "bucket"],
-        max_bucket,
-        n_salt,
-        even_exchange=even_exchange,
-    )
+    cand, overflow = capped_pairs(rows, ["t", "bucket"], max_bucket, n_salt)
     emb = vectors.select(F.col(id_col).alias("conv_id"), vec_col)
     verified = (
         attach_pair_payload(cand, emb, vec_col)

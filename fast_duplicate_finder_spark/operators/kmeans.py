@@ -2,7 +2,9 @@
 
 The codebook trainer behind a real IVF index (trainingdata.q_embedding_ivf_topk
 uses fixed seed centroids so its DuckDB oracle stays exact; this operator is
-the production path that replaces them with trained ones). Same iterative
+the production path that replaces them with trained ones). ``in_cell_topk``
+is the one in-cell search: ivf_topk and both catalog IVF queries differ only
+in how they assign cells. Same iterative
 shape as operators/connected_components.py: driver loop, one shuffle per
 iteration, localCheckpoint to truncate lineage.
 
@@ -109,6 +111,39 @@ def kmeans_fit(
     return centroids
 
 
+def in_cell_topk(
+    queries: DataFrame,
+    candidates: DataFrame,
+    topk: int,
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The IVF in-cell search: each query's top-``topk`` neighbors by exact
+    cosine among the candidates sharing one of its cells (ties to the
+    lowest neighbor id). Both sides are (vec_id, <vec_col>, cell); the
+    caller owns the cell assignment. Returns (vec_id, rank, neighbor_id,
+    cos) with cos rounded to 6 places."""
+    q = queries.select(
+        F.col("vec_id").alias("qid"), F.col(vec_col).alias("qemb"), "cell"
+    )
+    cand = candidates.select(
+        F.col("vec_id").alias("nid"), F.col(vec_col).alias("nemb"), "cell"
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
+    return (
+        q.join(cand, "cell")
+        .filter(F.col("qid") != F.col("nid"))
+        .withColumn("cos", cosine(F.col("qemb"), F.col("nemb")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select(
+            F.col("qid").alias("vec_id"),
+            F.col("rank").cast("long").alias("rank"),
+            F.col("nid").alias("neighbor_id"),
+            F.round("cos", 6).alias("cos"),
+        )
+    )
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -125,25 +160,11 @@ def ivf_topk(
     never double-counts a candidate), then each query touches
     ~nprobe*N/k candidates. scripts/ann_recall_probe.py measures the
     recall@k-vs-cost curve per nprobe."""
-    cand = assign_cells(vectors, centroids, vec_col).select(
-        F.col("vec_id").alias("nid"), F.col(vec_col).alias("nemb"), "cell"
-    )
-    q = assign_cells(queries, centroids, vec_col, nprobe=nprobe).select(
-        F.col("vec_id").alias("qid"), F.col(vec_col).alias("qemb"), "cell"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        q.join(cand, "cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn("cos", cosine(F.col("qemb"), F.col("nemb")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("nid").alias("neighbor_id"),
-            F.round("cos", 6).alias("cos"),
-        )
+    return in_cell_topk(
+        assign_cells(queries, centroids, vec_col, nprobe=nprobe),
+        assign_cells(vectors, centroids, vec_col),
+        topk,
+        vec_col,
     )
 
 

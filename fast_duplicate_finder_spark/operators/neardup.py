@@ -268,22 +268,28 @@ def winnow_fingerprint_rows(features: DataFrame, window: int) -> DataFrame:
     )
 
 
-def _supershingle_set(grams, window: int):
-    """Column expression: per-doc DISTINCT anchored supershingles —
-    xxhash64 over every consecutive run of ``window`` k-gram hashes (== a
-    span of window + k - 1 tokens) — computed with per-doc higher-order
-    functions: no explode, no window sort, no re-join. Guarded for short
-    docs: ``sequence(0, size - window)`` DESCENDS when size < window, so
-    they must yield an empty array, not inverted indices."""
-    sgs = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(grams) - window),
-            lambda i: F.xxhash64(F.slice(grams, i + 1, window)),
-        )
+def _supershingles(grams, window: int):
+    """Column expression: per-doc POSITIONAL anchored supershingles —
+    element i is xxhash64 over the ``window`` k-gram hashes starting at
+    token i (== a span of window + k - 1 tokens) — computed with per-doc
+    higher-order functions: no explode, no window sort, no re-join. The
+    one supershingle definition: the span leg's sets and the catalog's
+    positional span queries both derive from it. Guarded for short docs:
+    ``sequence(0, size - window)`` DESCENDS when size < window, so they
+    must yield an empty array, not inverted indices."""
+    ss = F.transform(
+        F.sequence(F.lit(0), F.size(grams) - window),
+        lambda i: F.xxhash64(F.slice(grams, i + 1, window)),
     )
-    return F.when(F.size(grams) >= window, sgs).otherwise(
+    return F.when(F.size(grams) >= window, ss).otherwise(
         F.array().cast("array<bigint>")
     )
+
+
+def _supershingle_set(grams, window: int):
+    """Column expression: per-doc DISTINCT anchored supershingles — the
+    set form of ``_supershingles`` (first-occurrence order)."""
+    return F.array_distinct(_supershingles(grams, window))
 
 
 def span_pairs(
@@ -308,7 +314,8 @@ def span_pairs(
     a shared span internally repeats identical windows (a run of repeated
     tokens collapses to one distinct supershingle): a span-length
     estimate, exact in the common case. When the exact longest run
-    matters, queries.q_span_longest_run keeps supershingle POSITIONS and
+    matters, queries.q_span_longest_run keeps supershingle POSITIONS (a
+    posexplode of ``_supershingles``, whose distinct form is ``sgs``) and
     takes the max consecutive run per (pair, diagonal), which equals
     difflib's longest matching block in all three cases (pinned by
     tests/test_span_exact.py::test_longest_run_matches_difflib_planted).

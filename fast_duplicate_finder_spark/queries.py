@@ -16,8 +16,6 @@ Design rules for oracle parity (see __spark_entry__.py contract):
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -425,6 +423,23 @@ JOIN sizes sb ON sb.doc_id = doc_id_b
 WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5"""
 
 
+def _conv_docs(c: DataFrame) -> DataFrame:
+    """(conv_id, doc) in the pipeline operators' shape: doc_ids zero-padded
+    to 9 digits, so their string order is the numeric order."""
+    return c.select(
+        F.lpad(F.col("doc_id").cast("string"), 9, "0").alias("conv_id"),
+        F.col("text").alias("doc"),
+    )
+
+
+def _doc_id_pair():
+    """A pipeline pair's padded (conv_id_a, conv_id_b) as numerically
+    oriented BIGINT (doc_id_a, doc_id_b)."""
+    ia = F.col("conv_id_a").cast("long")
+    ib = F.col("conv_id_b").cast("long")
+    return F.least(ia, ib).alias("doc_id_a"), F.greatest(ia, ib).alias("doc_id_b")
+
+
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real MinHash/LSH/verify path (north_star) at config tau=0.7.
     Verified by exact Jaccard, so precision is 1.0; the oracle is the
@@ -435,11 +450,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_features,
     )
 
-    c = dup_corpus(spark, sf_dir)
-    docs = c.select(
-        F.lpad(F.col("doc_id").cast("string"), 9, "0").alias("conv_id"),
-        F.col("text").alias("doc"),
-    )
+    docs = _conv_docs(dup_corpus(spark, sf_dir))
     # ONE materialization carrying (shset, minhash): signatures are signed
     # in the same pass that builds the shingle sets, so the banding join
     # and the exact-Jaccard verify both read this checkpoint (the pipeline
@@ -455,12 +466,8 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     verified, _ = minhash_pairs(features, CFG)
-    ia = F.col("conv_id_a").cast("long")
-    ib = F.col("conv_id_b").cast("long")
     return verified.select(
-        F.least(ia, ib).alias("doc_id_a"),
-        F.greatest(ia, ib).alias("doc_id_b"),
-        F.round("jaccard", 6).alias("jaccard"),
+        *_doc_id_pair(), F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -698,50 +705,37 @@ SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
 FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id"""
 
 
-_SPAN_TOKENS = 40  # supershingle width (tokens); cap mirrors the operator
+_SPAN_TOKENS = CFG.span_min_tokens  # shared-span width (tokens)
+_SS_WINDOW = max(_SPAN_TOKENS - CFG.shingle_k + 1, 1)  # k-grams per window
 
 
 def q_span_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT shared-span pairs via anchored supershingles (the pipeline's
-    p7c operator re-expressed portably): two docs share a contiguous span
-    of >= 40 tokens iff they share a 40-token window; span_tokens = shared
-    windows + 39 (== the longest-common-run length for a single shared
-    span). Pure equi-join — the verification step IS the join. Spark joins
-    on xxhash64 of the window string (narrow shuffle), the oracle on the
-    string itself: identical equivalence classes modulo 64-bit collisions."""
-    c = dup_corpus(spark, sf_dir)
-    W = _SPAN_TOKENS
-    toks = c.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
+    """EXACT shared-span pairs: the pipeline's p7c leg itself
+    (shingle_features -> _supershingle_set -> span_pairs) over the planted
+    corpus. Two docs share a contiguous span of >= 40 tokens iff they
+    share a supershingle; span_tokens = shared supershingles + 39 (== the
+    longest-common-run length for a single shared span). Hot supershingle
+    buckets take span_pairs' capped + salted path, as in the pipeline.
+    Spark keys a 40-token window by xxhash64 of its k-gram hashes, the
+    oracle by the window string: identical equivalence classes modulo
+    64-bit collisions. The pipeline splits on whitespace runs, the oracle
+    on single spaces: identical on the catalog corpora, which hold no
+    doubled, leading or trailing whitespace and no tab or newline."""
+    from fast_duplicate_finder_spark.operators.neardup import (
+        _supershingle_set,
+        shingle_features,
+        span_pairs,
     )
-    w_frame = (
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.currentRow, W - 1)
+
+    feats = shingle_features(_conv_docs(dup_corpus(spark, sf_dir)), CFG)
+    pairs, _ = span_pairs(
+        feats.select(
+            "conv_id", _supershingle_set(F.col("grams"), _SS_WINDOW).alias("sgs")
+        ),
+        CFG,
     )
-    ss = (
-        toks.withColumn("arr", F.collect_list("w").over(w_frame))
-        .filter(F.size("arr") == W)
-        .select("doc_id", F.xxhash64(F.array_join("arr", " ")).alias("ss"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    w_bucket = Window.partitionBy("ss")
-    capped = ss.withColumn("n", F.count("*").over(w_bucket)).filter(
-        (F.col("n") >= 2) & (F.col("n") <= CFG.max_band_bucket)
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.ss") == F.col("b.ss"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .agg((F.count("*") + W - 1).cast("long").alias("span_tokens"))
+    return pairs.select(
+        *_doc_id_pair(), F.col("span_tokens").cast("long").alias("span_tokens")
     )
 
 
@@ -761,27 +755,26 @@ GROUP BY 1, 2"""
 
 
 def _span_occ(c: DataFrame) -> DataFrame:
-    """(doc_id, pos, ss, occurrences) positional supershingle windows of a
-    (doc_id, text) DataFrame, with the per-(doc, window value) occurrence
+    """(doc_id, pos, ss, occurrences) positional supershingles of a
+    (doc_id, text) DataFrame — a posexplode of the span leg's own
+    supershingle expression (neardup._supershingles) over
+    shingle_features' grams — with the per-(doc, supershingle) occurrence
     count attached. The single expensive lineage both span-run queries
     start from — callers materialize it ONCE (localCheckpoint here via
     _span_longest_runs, the session _MATERIALIZED cache for the catalog
     pair) and it then feeds the overflow aggregation, the boilerplate
     bucket window AND both self-join sides."""
-    W = _SPAN_TOKENS
-    toks = c.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
+    from fast_duplicate_finder_spark.operators.neardup import (
+        _supershingles,
+        shingle_features,
     )
-    w_frame = (
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.currentRow, W - 1)
-    )
-    sp0 = (
-        toks.withColumn("arr", F.collect_list("w").over(w_frame))
-        .filter(F.size("arr") == W)
-        .select(
-            "doc_id", "pos", F.xxhash64(F.array_join("arr", " ")).alias("ss")
-        )
+
+    docs = c.select(F.col("doc_id").alias("conv_id"), F.col("text").alias("doc"))
+    sp0 = shingle_features(docs, CFG).select(
+        F.col("conv_id").alias("doc_id"),
+        F.posexplode(_supershingles(F.col("grams"), _SS_WINDOW)).alias(
+            "pos", "ss"
+        ),
     )
     occ_w = Window.partitionBy("doc_id", "ss")
     return sp0.withColumn("occurrences", F.count("*").over(occ_w))
@@ -852,8 +845,10 @@ def _span_runs_from_occ(sp_occ: DataFrame) -> DataFrame:
 def _span_longest_runs(
     c: DataFrame, with_overflow: bool = False
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Core of q_span_longest_run over a (doc_id, text) DataFrame —
-    factored out so tests can feed hand-planted repetition cases.
+    """Core of q_span_longest_run over a (doc_id, text) DataFrame — the
+    same shingle_features + positional-supershingle lineage the catalog
+    query reads, factored out so tests can feed hand-planted repetition
+    cases.
 
     ``with_overflow=True`` additionally returns the counted overflow table
     (doc_id, ss, occurrences) of WITHIN-DOC repetition groups dropped by
@@ -869,7 +864,7 @@ def _span_occ_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The catalog corpus's _span_occ table, checkpointed once per
     (session, sf_dir): q_span_longest_run and q_span_longest_overflow both
     read it, so running both in one suite costs ONE sp_occ job instead of
-    re-executing the whole window lineage per query."""
+    re-executing the whole shingle/supershingle lineage per query."""
     return _materialized(
         spark,
         ("span_occ", sf_dir),
@@ -880,7 +875,9 @@ def _span_occ_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_span_longest_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT longest shared contiguous token run per qualifying pair —
     the positional refinement of span_exact_pairs. Supershingles keep
-    their positions; matches land on diagonals (pos_a - pos_b constant)
+    their positions (_span_occ explodes neardup._supershingles, whose
+    distinct form is the span leg's sgs set, so both queries read one
+    definition); matches land on diagonals (pos_a - pos_b constant)
     and a shared run of L >= 40 tokens is exactly L - 39 consecutive
     window matches on one diagonal, so max-run-per-diagonal + 39 ==
     difflib's longest matching block, INCLUDING the two cases where
@@ -940,7 +937,7 @@ def q_span_longest_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-representation-independent (Spark groups by xxhash64'd windows,
     DuckDB by the window strings — per-doc counts agree, raw keys don't).
     Reads the SAME _span_occ checkpoint as q_span_longest_run — the
-    overflow leg no longer re-executes the run leg's window lineage."""
+    overflow leg does not re-execute the run leg's lineage."""
     ovf = _span_overflow_groups(_span_occ_materialized(spark, sf_dir))
     return ovf.groupBy("doc_id").agg(
         F.count("*").alias("n_overflow_groups"),
@@ -1211,46 +1208,23 @@ WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.999"""
 
 
 def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for the same result: random-hyperplane LSH (16 seeded
-    +-1 planes -> one bucket key) prunes the cross join, exact cosine
+    """Scale path for the same result: operators/ann.rhp_ann_pairs with ONE
+    table of 16 seeded +-1 planes prunes the cross join, exact cosine
     verifies. Identical vectors always share a bucket -> recall 1.0 for
-    exact dups, same oracle as the brute-force query."""
-    e = _emb_corpus(spark, sf_dir)
-    dim = 64
-    rng = random.Random(1234)
-    planes = [[rng.choice((-1.0, 1.0)) for _ in range(dim)] for _ in range(16)]
-    bits = [
-        (
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    F.array(*[F.lit(p) for p in plane]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0
-        ).cast("int")
-        for plane in planes
-    ]
-    bucket = F.concat_ws("", *[b.cast("string") for b in bits])
-    keyed = e.withColumn("bucket", bucket)
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn("cos", _cosine(F.col("a.embedding"), F.col("b.embedding")))
-        .filter(F.col("cos") >= 0.999)
-        .select(
-            F.col("a.vec_id").alias("vec_id_a"),
-            F.col("b.vec_id").alias("vec_id_b"),
-        )
+    exact dups, same oracle as the brute-force query. The cap is lifted,
+    as in embedding_ann_multitable (the brute-force oracle caps nothing)."""
+    from fast_duplicate_finder_spark.operators.ann import rhp_ann_pairs
+
+    pairs, _ = rhp_ann_pairs(
+        _emb_corpus(spark, sf_dir),
+        n_tables=1,
+        n_planes=16,
+        min_cos=0.999,
+        seed=1234,
+        max_bucket=1_000_000,
+        n_salt=1,
     )
+    return pairs.select("vec_id_a", "vec_id_b")
 
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,12 +12,11 @@ checkpointed table per phase with a manifest carrying:
 * the input snapshot id when known (Iceberg snapshot-isolation analogue of
   the reference's size-stability recheck, phase_3.go:36-46).
 
-Format: a Hadoop-style Parquet layout with a JSON manifest (the tested
-path). ``table_format='iceberg'`` is the swap point for a cluster with the
-iceberg-spark-runtime jar + a catalog: it is verified at write time via
-``iceberg_available`` and FAILS FAST when the runtime is absent (this
-sandbox has no jar, so the iceberg branch is exercised only as that
-guard) — the parameter is experimental until run against a real catalog.
+Format: a Hadoop-style Parquet layout with a JSON manifest. There is no
+Iceberg writer: an Iceberg-backed store (a ``bucket(N, col)`` partition
+transform in place of ``bucketBy``) is deferred until a runtime jar and a
+catalog are available; ``iceberg_available`` detects the runtime and
+tests/test_iceberg_integration.py exercises it where one is present.
 """
 
 from __future__ import annotations
@@ -81,13 +80,6 @@ class CheckpointStore:
     spark: SparkSession
     base_dir: str
     fingerprint: str
-    table_format: str = "parquet"  # "iceberg" requires the
-                                   # iceberg-spark-runtime jar + a catalog;
-                                   # verified at write time (the sandbox has
-                                   # no jar, so parquet is the TESTED path
-                                   # and iceberg fails fast with a clear
-                                   # error rather than silently writing
-                                   # parquet — see write())
     snapshot_id: str | None = None  # input snapshot (parquet_snapshot_id /
                                     # Iceberg snapshot); resume refuses a
                                     # checkpoint taken of a different input
@@ -172,15 +164,6 @@ class CheckpointStore:
             os.remove(self._manifest_path(phase))
         except FileNotFoundError:
             pass
-        if self.table_format == "iceberg" and not iceberg_available(
-            self.spark
-        ):
-            raise RuntimeError(
-                "table_format='iceberg' requested but no Iceberg runtime is "
-                "on the JVM classpath (need iceberg-spark-runtime + a "
-                "configured catalog); refusing to silently fall back to "
-                "parquet — pass table_format='parquet' explicitly"
-            )
         n_buckets = 0
         if bucket_by:
             n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -211,7 +194,6 @@ class CheckpointStore:
         manifest = {
             "phase": phase,
             "fingerprint": self.fingerprint,
-            "format": self.table_format,
             "snapshot_id": self.snapshot_id,
             "rows": int(sum(per_part.values())),
             "partitions": per_part,

@@ -88,15 +88,14 @@ def _require_local_fs(work_dir: str) -> None:
     state lifecycle here mixes Spark writes (which would work on any
     Hadoop filesystem) with driver-local ``os.walk`` / ``os.replace`` /
     ``shutil`` manipulation (``_has_parts``, the compaction rename dance)
-    that would silently no-op or mis-detect state on a remote URI. At
-    cluster scale the state tables become Iceberg MERGE targets
-    (storage.py's table_format seam) rather than this local parquet
-    layout."""
+    that would silently no-op or mis-detect state on a remote URI. Remote
+    state storage (e.g. Iceberg MERGE targets in place of this local
+    parquet layout) is not implemented."""
     if "://" in work_dir:
         raise ValueError(
             "streaming state work_dir must be a local filesystem path "
             f"(got {work_dir!r}): state maintenance uses driver-local "
-            "renames; use the Iceberg table_format seam for remote storage"
+            "renames, and remote state storage is not implemented"
         )
 
 

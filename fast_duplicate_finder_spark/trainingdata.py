@@ -134,6 +134,7 @@ _IVF_TOPK = 3
 
 
 from fast_duplicate_finder_spark.functions.vectors import cosine as _cosine  # noqa: E402
+from fast_duplicate_finder_spark.operators.kmeans import in_cell_topk  # noqa: E402
 
 
 def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -144,7 +145,8 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the assignment, then one equi-join on cell for the search: the cross
     join brute force is replaced by |cell| ~ N/8 candidates per query —
     the 100 TB path is the same plan with a trained codebook of ~sqrt(N)
-    centroids."""
+    centroids. Only the assignment (cosine to fixed seeds) is this
+    query's own; the search is kmeans.in_cell_topk."""
     e = _load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = e.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
@@ -161,26 +163,9 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r") == 1)
         .select("vec_id", "embedding", F.col("centroid_id").alias("cell"))
     )
-    q = assigned.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"), "cell"
-    )
-    n = assigned.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"), "cell"
-    )
-    cand = q.join(n, "cell").filter(F.col("qid") != F.col("nid"))
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc("cos"), F.asc("nid")
-    )
-    return (
-        cand.withColumn("cos", _cosine(F.col("qemb"), F.col("nemb")))
-        .withColumn("rank", F.row_number().over(w_top))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("nid").alias("neighbor_id"),
-        )
-    )
+    return in_cell_topk(
+        assigned.filter(F.col("vec_id") < 20), assigned, _IVF_TOPK
+    ).select("vec_id", "rank", "neighbor_id")
 
 
 ORACLE_IVF = f"""WITH cents AS (
@@ -436,9 +421,11 @@ def q_embedding_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell assignment — is bit-identical across engines and partitionings,
     and DuckDB can replay the full 3-iteration training in SQL (round 1
     carried this query as a no-oracle row because float Lloyd's is only
-    deterministic up to summation order). In-cell top-3 for the first 20
-    queries by exact cosine of the ORIGINAL float embeddings (same
-    cross-engine-stable expression as the green embedding_topk oracle).
+    deterministic up to summation order). The in-cell top-3 for the first
+    20 queries is kmeans.in_cell_topk — the search ivf_topk and
+    embedding_ivf_topk run — by exact cosine of the ORIGINAL float
+    embeddings (same cross-engine-stable expression as the green
+    embedding_topk oracle); only the cell assignment is integer-exact.
     The float kmeans_fit path keeps its recall-vs-brute-force pin in
     tests/test_kmeans.py."""
     from fast_duplicate_finder_spark.operators.kmeans import (
@@ -453,25 +440,9 @@ def q_embedding_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "cell"
     )
     placed = assigned.join(e, "vec_id")
-    q = placed.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"), "cell"
-    )
-    n = placed.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"), "cell"
-    )
-    w_top = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        q.join(n, "cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn("cos", _cosine(F.col("qemb"), F.col("nemb")))
-        .withColumn("rank", F.row_number().over(w_top))
-        .filter(F.col("rank") <= _KM_TOPK)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("nid").alias("neighbor_id"),
-        )
-    )
+    return in_cell_topk(
+        placed.filter(F.col("vec_id") < 20), placed, _KM_TOPK
+    ).select("vec_id", "rank", "neighbor_id")
 
 
 def _kmeans_oracle() -> str:

@@ -1,10 +1,8 @@
 """Real-Iceberg integration — executable on arrival of the runtime jar.
 
-The sandbox ships no iceberg-spark-runtime, so the ``table_format=
-'iceberg'`` branch fail-fasts (pinned by
-test_round3_features.test_iceberg_format_fails_fast_without_runtime) and
-the north-rule claim "Iceberg tables bucketed by bucket(N, conv_id) feed
-storage-partitioned joins" has only been prose. This test turns that gap
+The checkpoint store writes parquet only (storage.py has no Iceberg
+writer), so the north-rule claim "Iceberg tables bucketed by
+bucket(N, conv_id) feed storage-partitioned joins" has only been prose. This test turns that gap
 into executable code: on any host whose Spark classpath carries the jar
 (``iceberg_available``), it provisions a hadoop catalog in tmp, writes the
 transcript table with a ``bucket(N, conv_id)`` partition transform, checks

@@ -249,19 +249,6 @@ def test_salted_pairs_respect_cap_overflow(spark):
     assert len(ovf) == 1 and ovf[0]["bucket_n"] == 50  # counted, not silent
 
 
-# --- Iceberg swap point: fail fast, never silently write parquet -------------
-
-def test_iceberg_format_fails_fast_without_runtime(spark, tmp_path):
-    from fast_duplicate_finder_spark.storage import iceberg_available
-
-    assert not iceberg_available(spark)  # sandbox ships no iceberg jar
-    store = CheckpointStore(
-        spark, str(tmp_path / "ck"), "fp", table_format="iceberg"
-    )
-    with pytest.raises(RuntimeError, match="iceberg"):
-        store.write(spark.range(3).toDF("v"), "p0")
-
-
 # --- Bucketed checkpoints: distribution survives the write ------------------
 
 def _mk_features(spark):

@@ -332,6 +332,58 @@ def test_span_longest_overflow_query_matches_oracle(spark, tmp_path):
     assert got == exp == {(3, 1, n_rep - _SPAN_TOKENS + 1)}
 
 
+def test_span_exact_pairs_salted_bucket_matches_oracle(spark, tmp_path):
+    """span_exact_pairs runs the pipeline's span leg, so a supershingle
+    bucket above the salt threshold (max_band_bucket // band_salt_buckets)
+    takes capped_pairs' two-level salted branch; the DuckDB oracle's plain
+    self-join must still see every pair exactly once. 300 docs share one
+    40-token window (the hot bucket); one 2-doc pair shares a 45-token
+    span (the cold path). No id is 0, 1 or 2 mod 10, so the catalog's
+    planted-copy corpus adds no rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fast_duplicate_finder_spark.queries import CFG, ORACLES, QUERIES
+
+    n_hot = 300
+    assert CFG.max_band_bucket // CFG.band_salt_buckets < n_hot
+    assert n_hot <= CFG.max_band_bucket
+    shared = " ".join(f"s{i}" for i in range(40))
+    cold = " ".join(f"p{i}" for i in range(45))
+    ids = [10 * i + 5 for i in range(n_hot)] + [4, 6]
+    texts = [f"u{i} {shared}" for i in range(n_hot)] + [cold, cold]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+
+    got = sorted(
+        tuple(r)
+        for r in QUERIES["span_exact_pairs"](spark, str(tmp_path))
+        .select("doc_id_a", "doc_id_b", "span_tokens")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    exp = sorted(
+        map(
+            tuple,
+            con.execute(
+                "SELECT doc_id_a, doc_id_b, span_tokens FROM ("
+                + ORACLES["span_exact_pairs"]
+                + ")"
+            ).fetchall(),
+        )
+    )
+    assert got == exp
+    assert len(got) == n_hot * (n_hot - 1) // 2 + 1 == 44_851
+    assert (4, 6, 45) in got
+
+
 @pytest.mark.parametrize(
     "killed, with_near_dup, last_done",
     [("p2_partial", False, "p1_docs"),
