@@ -88,9 +88,3 @@ def make_minhash_udf(num_perms: int, seed: int):
             return minhash_batch(hash_lists, seeds)
 
     return minhash_sig
-
-
-def estimate_jaccard(sig_a: list[int], sig_b: list[int]) -> float:
-    a = np.asarray(sig_a)
-    b = np.asarray(sig_b)
-    return float((a == b).mean())

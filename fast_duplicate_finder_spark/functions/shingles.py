@@ -1,15 +1,15 @@
-"""Shingling + fingerprinting column expressions — the readable SPEC.
+"""Word shingling column expressions — the readable SPEC.
 
-These higher-order-function (`F.transform`/`F.slice`/`F.array_min`)
-formulations are semantically authoritative but interpreted per-element
-(HOFs are not whole-stage-codegen'd) and were the measured non-scaling hot
-spot of round 1. Production uses the codegen'd window-function re-expressions
-in operators/neardup.py (shingle_features, winnow_fingerprint_rows); the
-differential parity test tests/test_shingle_parity.py pins the two
-formulations to each other, so this module doubles as executable
-documentation and regression oracle. `words` is shared by both paths.
-Python (Arrow UDF) remains reserved for the MinHash/SimHash permutation
-kernels only (BASELINE.json input_hint: no per-row Python).
+These higher-order-function (`F.transform`/`F.slice`) formulations are
+semantically authoritative but interpreted per-element (HOFs are not
+whole-stage-codegen'd) and were the measured non-scaling hot spot of
+round 1. The pipeline uses the codegen'd window-function re-expression
+operators/neardup.shingle_features; the differential parity test
+tests/test_shingle_parity.py pins the two formulations to each other, and
+evaluation.py's brute-force ground truth reads ``shingle_hashes``
+directly. `words` is shared by both paths. Python (Arrow UDF) remains
+reserved for the MinHash/SimHash permutation kernels only (BASELINE.json
+input_hint: no per-row Python).
 """
 
 from __future__ import annotations
@@ -50,38 +50,3 @@ def shingle_hashes(doc: Column, k: int) -> Column:
     Hashing shingle->long before any shuffle shrinks payloads ~10x vs
     shipping shingle strings."""
     return F.transform(word_shingles(doc, k), lambda s: F.xxhash64(s))
-
-
-def kgram_hash_sequence(doc: Column, k: int) -> Column:
-    """POSITIONAL (non-distinct) k-gram hashes — the token-order-preserving
-    sequence used by the shared-span (winnowing) pass."""
-    ws = words(doc)
-    n = F.size(ws)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.xxhash64(F.array_join(F.slice(ws, i + 1, k), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
-def winnow_fingerprints(gram_hashes: Column, window: int) -> Column:
-    """Winnowing (Schleimer/Wilkerson/Aiken, SIGMOD 2003): the min hash of
-    every sliding window of ``window`` consecutive k-gram hashes, distinct.
-
-    Guarantee: two documents sharing a token span of >= window + k - 1
-    tokens share at least one fingerprint -> deterministic recall for the
-    shared-span pass (no probabilistic miss like LSH)."""
-    n = F.size(gram_hashes)
-    return F.when(
-        n >= window,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n - window),
-                lambda i: F.array_min(F.slice(gram_hashes, i + 1, window)),
-            )
-        ),
-    ).when(n > 0, F.array(F.array_min(gram_hashes))).otherwise(
-        F.array().cast("array<bigint>")
-    )

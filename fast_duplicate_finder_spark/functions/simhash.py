@@ -80,12 +80,11 @@ def hamming64(a: Column, b: Column) -> Column:
 
 
 def simhash_candidate_pairs(
-    sims: DataFrame, max_hamming: int, id_col: str = "conv_id",
-    sim_col: str = "simhash", max_bucket: int = 2000, n_salt: int = 8,
-    even_exchange: bool = True,
+    sims: DataFrame, max_hamming: int, max_bucket: int = 2000,
+    n_salt: int = 8, even_exchange: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Pairs within ``max_hamming`` bits — pigeonhole equi-join + exact
-    popcount verification.
+    """(conv_id, simhash) pairs within ``max_hamming`` bits — pigeonhole
+    equi-join + exact popcount verification.
 
     Skew control is the SAME generator as every other leg
     (operators/lsh.capped_pairs): buckets over ``max_bucket`` excluded +
@@ -110,9 +109,9 @@ def simhash_candidate_pairs(
 
     n_chunks = max_hamming + 1
     keyed = sims.select(
-        F.col(id_col).alias("conv_id"),
-        F.col(sim_col).alias("_sim"),
-        F.posexplode(simhash_chunks(F.col(sim_col), n_chunks)).alias(
+        "conv_id",
+        F.col("simhash").alias("_sim"),
+        F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
             "chunk_id", "chunk_val"
         ),
     )

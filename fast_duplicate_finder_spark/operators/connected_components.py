@@ -83,18 +83,14 @@ def _truncated_counted(df: DataFrame, flag_col: str) -> tuple[DataFrame, int]:
     return out, int(obs.get["n"])
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "conv_id_a",
-    dst: str = "conv_id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """``pairs`` -> ``(conv_id, component)`` for every node in any pair.
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+    """``(conv_id_a, conv_id_b)`` pairs -> ``(conv_id, component)`` for
+    every node in any pair.
 
     ``component`` = lexicographic min conv_id reachable via pair edges.
     """
     edges = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
+        F.col("conv_id_a").alias("a"), F.col("conv_id_b").alias("b")
     ).filter(F.col("a") != F.col("b"))
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = _truncated(sym.distinct())

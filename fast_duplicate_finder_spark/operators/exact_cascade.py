@@ -17,7 +17,9 @@ Spark-first design notes:
   ``collect_list`` of 10^12 paths is exactly what must never happen.
 * The cascade itself is pipeline structure, not a Catalyst rewrite
   (run_finder.go:39-76): each phase prunes before the next gets more
-  expensive. Phase 1 never materializes documents at all.
+  expensive. Phase 1 never materializes documents at all. Its one
+  composition is plans/pipeline.run_pipeline (p1_prefilter -> p1_docs ->
+  p2_partial -> p3_exact), which checkpoints each phase.
 """
 
 from __future__ import annotations
@@ -29,13 +31,13 @@ from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.functions.hashing import full_hash, partial_hash
 
 
-def having_at_least(df: DataFrame, keys: list[str], n: int = 2,
-                    count_col: str = "group_n") -> DataFrame:
+def having_at_least(df: DataFrame, keys: list[str]) -> DataFrame:
     """The four-times-repeated reference pruning step (A3): keep rows whose
-    group (by ``keys``) has >= n members. Single-shuffle window count."""
+    group (by ``keys``) has >= 2 members, counted in ``group_n``.
+    Single-shuffle window count."""
     w = Window.partitionBy(*keys)
-    return df.withColumn(count_col, F.count("*").over(w)).filter(
-        F.col(count_col) >= n
+    return df.withColumn("group_n", F.count("*").over(w)).filter(
+        F.col("group_n") >= 2
     )
 
 
@@ -83,23 +85,3 @@ def exact_clusters(full_hash_survivors: DataFrame) -> DataFrame:
         F.min("conv_id").over(w).alias("cluster_id"),
         F.col("group_n").alias("cluster_size"),
     )
-
-
-def run_exact_cascade(
-    transcripts: DataFrame, cfg: PipelineConfig
-) -> dict[str, DataFrame]:
-    """Convenience composition (unchekpointed; the pipeline module adds
-    checkpoints + metrics between phases)."""
-    from fast_duplicate_finder_spark.sources.transcripts import (
-        assemble_conversations,
-        conv_stats,
-    )
-
-    stats = conv_stats(transcripts)
-    p1 = prefilter(stats, cfg)
-    docs = assemble_conversations(transcripts, only_convs=p1)
-    p2 = partial_hash_stage(docs, cfg)
-    p3 = full_hash_stage(p2.select("conv_id", "doc", "size", "n_turns"))
-    clusters = exact_clusters(p3)
-    return {"stats": stats, "p1": p1, "docs": docs, "p2": p2, "p3": p3,
-            "clusters": clusters}

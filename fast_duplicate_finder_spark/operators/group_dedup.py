@@ -218,20 +218,3 @@ def folder_clusters(dup_folders: DataFrame) -> DataFrame:
         F.min("folder").over(w).alias("cluster_id"),
         "cluster_size",
     )
-
-
-def run_group_dedup(
-    conv_hashes: DataFrame, file_clusters: DataFrame, cfg: PipelineConfig
-) -> dict[str, DataFrame]:
-    sigs = folder_signatures(conv_hashes, cfg)
-    dups = duplicate_folders(sigs)
-    top = suppress_nested(dups, cfg.group_sep)
-    files_kept = suppress_files_in_dup_folders(
-        file_clusters, dups, cfg.group_sep
-    )
-    return {
-        "sigs": sigs,
-        "dup_folders": dups,
-        "top_folders": folder_clusters(top),
-        "file_clusters_filtered": files_kept,
-    }

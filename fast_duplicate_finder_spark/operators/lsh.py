@@ -34,13 +34,13 @@ from pyspark.sql import functions as F
 from fast_duplicate_finder_spark.config import PipelineConfig
 
 
-def lsh_band_rows(sigs: DataFrame, cfg: PipelineConfig,
-                  sig_col: str = "minhash") -> DataFrame:
-    """Explode signatures to (conv_id, band_id, band_hash)."""
+def lsh_band_rows(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Explode (conv_id, minhash) signatures to (conv_id, band_id,
+    band_hash)."""
     r = cfg.lsh_rows
     bands = F.array(
         *[
-            F.xxhash64(F.lit(b), F.slice(F.col(sig_col), b * r + 1, r))
+            F.xxhash64(F.lit(b), F.slice(F.col("minhash"), b * r + 1, r))
             for b in range(cfg.lsh_bands)
         ]
     )
@@ -51,9 +51,9 @@ def lsh_band_rows(sigs: DataFrame, cfg: PipelineConfig,
 
 def two_level_pairs(
     rows: DataFrame, key_cols: list[str], n_salt: int,
-    id_col: str = "conv_id", payload_cols: list[str] | None = None,
+    payload_cols: list[str] | None = None,
 ) -> DataFrame:
-    """All unordered id pairs within each key group, generated across
+    """All unordered conv_id pairs within each key group, generated across
     ~``n_salt`` tasks per group instead of one (two-level salted pair
     generation, SURVEY §4).
 
@@ -79,14 +79,14 @@ def two_level_pairs(
     a = rows.select(
         *key_cols,
         *payload_cols,
-        F.col(id_col).alias("ida"),
-        salt_of(F.col(id_col)).alias("cell"),
+        F.col("conv_id").alias("ida"),
+        salt_of(F.col("conv_id")).alias("cell"),
     ).alias("a")
     b = rows.select(
         *key_cols,
         *payload_cols,
-        F.col(id_col).alias("idb"),
-        salt_of(F.col(id_col)).alias("salt_b"),
+        F.col("conv_id").alias("idb"),
+        salt_of(F.col("conv_id")).alias("salt_b"),
         F.explode(
             F.array(*[F.lit(i) for i in range(n_salt)])
         ).alias("cell"),
@@ -134,8 +134,8 @@ def capped_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Shared capped + salted self-join: (conv_id, key...) rows ->
     ((conv_id_a, conv_id_b) pairs, overflow metrics). The ONE pair
-    generator behind every candidate leg (LSH bands, winnow fingerprints,
-    simhash pigeonhole chunks, span supershingles), so the skew controls
+    generator behind every candidate leg (LSH bands, simhash pigeonhole
+    chunks, span supershingles), so the skew controls
     are uniform:
 
     * buckets > ``max_bucket``: excluded + COUNTED (overflow);
@@ -241,14 +241,4 @@ def candidate_pairs(
         cfg.max_band_bucket,
         cfg.band_salt_buckets,
         even_exchange=even_exchange,
-    )
-
-
-def fingerprint_candidate_pairs(
-    fp_rows: DataFrame, cfg: PipelineConfig, key: str = "fp"
-) -> tuple[DataFrame, DataFrame]:
-    """Same capped + salted self-join pattern over winnowing fingerprints
-    (shared-span pass): fp_rows = (conv_id, fp)."""
-    return capped_pairs(
-        fp_rows, [key], cfg.max_band_bucket, cfg.band_salt_buckets
     )

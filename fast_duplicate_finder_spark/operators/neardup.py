@@ -230,44 +230,6 @@ def simhash_pairs(
     )
 
 
-def winnow_fingerprint_rows(features: DataFrame, window: int) -> DataFrame:
-    """(conv_id, fp) distinct winnowing fingerprints via window functions.
-
-    Same fingerprint set as functions/shingles.winnow_fingerprints (the
-    readable HOF spec, kept as the differential-parity oracle in
-    tests/test_shingle_parity.py) but codegen'd O(n) instead of an
-    interpreted O(n*window) HOF — sliding-window min over posexploded gram
-    hashes. Eager-checkpointed by the caller when it feeds a self-join.
-
-    The gram-array rows are repartitioned by conv_id BEFORE posexplode so
-    the per-doc windows and the distinct run without a gram-granularity
-    exchange (same one-exchange-up-front shape as shingle_features)."""
-    g = _repartition_even(features.select("conv_id", "grams")).select(
-        "conv_id", F.posexplode("grams").alias("pos", "gh")
-    )
-    w_frame = (
-        Window.partitionBy("conv_id").orderBy("pos")
-        .rowsBetween(Window.currentRow, window - 1)
-    )
-    w_doc = Window.partitionBy("conv_id")
-    return (
-        g.withColumn("wmin", F.min("gh").over(w_frame))
-        .withColumn("ng", F.count("*").over(w_doc))
-        .withColumn("full_min", F.min("gh").over(w_doc))
-        .withColumn(
-            "fp",
-            F.when(F.col("ng") >= window, F.col("wmin")).otherwise(
-                F.col("full_min")
-            ),
-        )
-        .filter(
-            (F.col("pos") <= F.col("ng") - window) | (F.col("ng") < window)
-        )
-        .select("conv_id", "fp")
-        .distinct()
-    )
-
-
 def _supershingles(grams, window: int):
     """Column expression: per-doc POSITIONAL anchored supershingles —
     element i is xxhash64 over the ``window`` k-gram hashes starting at
@@ -321,10 +283,9 @@ def span_pairs(
     tests/test_span_exact.py::test_longest_run_matches_difflib_planted).
     Pair MEMBERSHIP is exact always
     (>= 1 shared supershingle iff a >= span_min_tokens span is shared,
-    modulo 64-bit collisions). The winnowing operators remain as the
-    candidate-generation path for sub-span similarity (and the
-    winnow_span_candidates oracle query); the difflib kernel remains as
-    the differential-parity oracle (tests/test_span_exact.py).
+    modulo 64-bit collisions). The differential-parity oracle is the
+    driver-side window index + difflib in tests/oracle.span_runs_oracle
+    (tests/test_span_exact.py).
 
     Returns (pairs, overflow): hot supershingle buckets (corpus
     boilerplate >= cfg.max_band_bucket docs) are capped and counted like

@@ -267,22 +267,22 @@ FROM g JOIN (
 # MinHash/LSH (probabilistic path, verified), SimHash, winnowing spans
 # ---------------------------------------------------------------------------
 
-def _shingle_sets(c: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, shset) distinct shingle-hash arrays, int64 elements (narrow
+def _shingle_sets(c: DataFrame) -> DataFrame:
+    """(doc_id, shset) distinct shingle-hash arrays of the docs with >= k
+    words — the pipeline's ``shingle_features`` (int64 elements: narrow
     shuffle payload; the oracle counts shingle strings — identical
     equivalence classes modulo 64-bit collisions). Eagerly materialized
     ONCE: both the blocking self-join and the exact verify derive from this
     checkpoint (at scale this is the p6_features checkpoint table)."""
-    ws = F.split(F.col("text"), " ")
-    sh = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(ws) - k),
-            lambda i: F.xxhash64(F.array_join(F.slice(ws, i + 1, k), " ")),
-        )
+    from fast_duplicate_finder_spark.operators.neardup import shingle_features
+
+    docs = c.select(
+        F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
     return (
-        c.filter(F.size(ws) >= k)
-        .select("doc_id", sh.alias("shset"))
+        shingle_features(docs, CFG)
+        .filter(F.size("grams") > 0)
+        .select(F.col("conv_id").alias("doc_id"), "shset")
         .localCheckpoint(eager=True)
     )
 
@@ -1009,23 +1009,23 @@ SELECT n AS conv_id, min(label) AS component FROM reach GROUP BY n"""
 def q_connected_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over exact-dup star edges — the clustering
     operator with a transitive-closure-free oracle (exact groups ARE the
-    components)."""
+    components). The edges come from the pipeline's own p3 + p8 feed:
+    full_hash_stage -> exact_clusters -> exact_pairs_from_clusters."""
     from fast_duplicate_finder_spark.operators.connected_components import (
         connected_components,
     )
+    from fast_duplicate_finder_spark.operators.exact_cascade import (
+        exact_clusters,
+        full_hash_stage,
+    )
+    from fast_duplicate_finder_spark.operators.neardup import (
+        exact_pairs_from_clusters,
+    )
 
-    c = dup_corpus(spark, sf_dir).withColumn(
-        "conv_id", F.lpad(F.col("doc_id").cast("string"), 9, "0")
+    docs = _conv_docs(dup_corpus(spark, sf_dir)).withColumn(
+        "size", F.length("doc")
     )
-    w = Window.partitionBy(F.xxhash64("text"))
-    labeled = (
-        c.withColumn("n", F.count("*").over(w))
-        .withColumn("hub", F.min("conv_id").over(w))
-        .filter(F.col("n") >= 2)
-    )
-    edges = labeled.filter(F.col("conv_id") != F.col("hub")).select(
-        F.col("hub").alias("conv_id_a"), F.col("conv_id").alias("conv_id_b")
-    )
+    edges = exact_pairs_from_clusters(exact_clusters(full_hash_stage(docs)))
     comp = connected_components(edges)
     return comp.select(
         F.col("conv_id").cast("long").alias("doc_id"),

@@ -7,6 +7,8 @@ corpus construction, so generator and pipeline cannot share a bug.
 from __future__ import annotations
 
 from collections import defaultdict
+from difflib import SequenceMatcher
+from itertools import combinations
 
 SEP = "\n"
 
@@ -62,4 +64,31 @@ def near_pairs_oracle(
             a, b = items[i][0], items[j][0]
             if jaccard(shs[a], shs[b]) >= tau:
                 out.add((a, b))
+    return out
+
+
+def span_runs_oracle(
+    docs: dict[str, str], min_tokens: int
+) -> dict[tuple[str, str], int]:
+    """(a, b) -> longest shared contiguous run of ``doc.split()`` tokens,
+    for every unordered pair sharing a run of >= ``min_tokens`` tokens.
+
+    A pair shares such a run iff it shares one of the ``min_tokens``-token
+    windows indexed here; its length is difflib's longest matching block."""
+    toks = {cid: doc.split() for cid, doc in docs.items()}
+    by_window: dict[tuple[str, ...], set[str]] = defaultdict(set)
+    for cid, ws in toks.items():
+        for i in range(len(ws) - min_tokens + 1):
+            by_window[tuple(ws[i : i + min_tokens])].add(cid)
+    pairs = {
+        p for members in by_window.values()
+        for p in combinations(sorted(members), 2)
+    }
+    out = {}
+    for a, b in pairs:
+        ta, tb = toks[a], toks[b]
+        m = SequenceMatcher(None, ta, tb, autojunk=False).find_longest_match(
+            0, len(ta), 0, len(tb)
+        )
+        out[(a, b)] = m.size
     return out

@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.corpus import generate_transcripts
-from fast_duplicate_finder_spark.operators.exact_cascade import run_exact_cascade
+from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
     conv_stats,
@@ -18,6 +18,14 @@ CFG = PipelineConfig()
 def _rows(spark, n=200):
     df = generate_transcripts(spark, n_convs=n, seed=42)
     return df, df.collect()
+
+
+def _cascade(spark, df, tmp_path):
+    """The exact cascade (p0-p3) as run_pipeline composes it."""
+    return run_pipeline(
+        spark, df, CFG, str(tmp_path / "ckpt"),
+        with_near_dup=False, with_groups=False,
+    )
 
 
 def test_assembly_matches_local_oracle_and_is_order_stable(spark):
@@ -44,11 +52,11 @@ def test_conv_stats_size_equals_doc_length(spark):
         assert stats[cid][0] == len(doc)
 
 
-def test_exact_clusters_match_bruteforce(spark):
+def test_exact_clusters_match_bruteforce(spark, tmp_path):
     df, rows = _rows(spark, 200)
     local_docs = assemble_locally([tuple(r) for r in rows])
     expected = exact_clusters_oracle(local_docs)
-    out = run_exact_cascade(df, CFG)["clusters"].collect()
+    out = _cascade(spark, df, tmp_path).exact_clusters.collect()
     got = {r["conv_id"]: r["cluster_id"] for r in out}
     assert got == expected
     # planted blocks contain pairs and triples (near-dup copies with zero
@@ -58,16 +66,18 @@ def test_exact_clusters_match_bruteforce(spark):
     assert 2 in sizes.values() and 3 in sizes.values()
 
 
-def test_cascade_stages_only_shrink(spark):
+def test_cascade_stages_only_shrink(spark, tmp_path):
     df, _ = _rows(spark, 200)
-    res = run_exact_cascade(df, CFG)
-    n1 = res["p1"].count()
-    n2 = res["p2"].count()
-    n3 = res["p3"].count()
+    rows = {
+        m["phase"]: m["rows"] for m in _cascade(spark, df, tmp_path).metrics
+    }
+    n1 = rows["p1_prefilter"]
+    n2 = rows["p2_partial"]
+    n3 = rows["p3_exact"]
     assert n1 >= n2 >= n3 > 0
 
 
-def test_empty_and_singleton(spark):
+def test_empty_and_singleton(spark, tmp_path):
     from fast_duplicate_finder_spark.corpus import TRANSCRIPT_SCHEMA
     import datetime as dt
 
@@ -79,6 +89,6 @@ def test_empty_and_singleton(spark):
         ("d", 0, "user", "same text", "", ts),
     ]
     df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
-    out = run_exact_cascade(df, CFG)["clusters"].collect()
+    out = _cascade(spark, df, tmp_path).exact_clusters.collect()
     got = {r["conv_id"]: r["cluster_id"] for r in out}
     assert got == {"c": "c", "d": "c"}

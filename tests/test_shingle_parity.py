@@ -1,30 +1,42 @@
 """Differential parity: the readable HOF formulations in
-functions/shingles.py are the executable SPEC for the codegen'd
-window-function formulations that actually run in the pipeline
-(operators/neardup.shingle_features / winnow_fingerprint_rows — the HOFs
-are interpreted per-element and were the measured non-scaling hot spot).
-Any divergence between spec and production formulation fails here."""
+functions/shingles.py (plus ``kgram_hash_sequence`` below, the spec of
+``grams``) are the executable SPEC for the codegen'd window-function
+formulation that actually runs in the pipeline
+(operators/neardup.shingle_features — the HOFs are interpreted
+per-element and were the measured non-scaling hot spot). Any divergence
+between spec and production formulation fails here."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.corpus import generate_transcripts
 from fast_duplicate_finder_spark.functions.shingles import (
-    kgram_hash_sequence,
     shingle_hashes,
-    winnow_fingerprints,
+    words,
 )
-from fast_duplicate_finder_spark.operators.neardup import (
-    shingle_features,
-    winnow_fingerprint_rows,
-)
+from fast_duplicate_finder_spark.operators.neardup import shingle_features
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
 )
 
 CFG = PipelineConfig()
+
+
+def kgram_hash_sequence(doc: Column, k: int) -> Column:
+    """POSITIONAL (non-distinct) k-gram hashes in token order — the spec
+    of shingle_features' ``grams``."""
+    ws = words(doc)
+    n = F.size(ws)
+    return F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(0), n - k),
+            lambda i: F.xxhash64(F.array_join(F.slice(ws, i + 1, k), " ")),
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
 
 
 def _docs(spark):
@@ -54,25 +66,3 @@ def test_shingle_features_match_hof_spec(spark):
     for r in joined:
         assert r["grams"] == r["grams_spec"], r["conv_id"]
         assert sorted(r["shset"]) == list(r["shset_spec"]), r["conv_id"]
-
-
-def test_winnow_rows_match_hof_spec(spark):
-    docs = _docs(spark)
-    k = CFG.shingle_k
-    window = max(CFG.span_min_tokens - k + 1, 1)
-    spec_rows = docs.select(
-        "conv_id",
-        F.explode(
-            winnow_fingerprints(kgram_hash_sequence(F.col("doc"), k), window)
-        ).alias("fp"),
-    )
-    spec = {
-        (r["conv_id"], r["fp"]) for r in spec_rows.collect()
-    }
-    prod = {
-        (r["conv_id"], r["fp"])
-        for r in winnow_fingerprint_rows(
-            shingle_features(docs, CFG), window
-        ).collect()
-    }
-    assert prod == spec

@@ -1,53 +1,37 @@
-"""Differential parity for the supershingle span pass: the round-1
-winnow-candidates + difflib-verify path is the executable oracle for the
-round-2 anchored supershingle equi-join (operators/neardup.span_pairs).
-Winnowing guarantees recall for spans >= span_min_tokens and difflib is an
-exact longest-common-run check, so on an uncapped corpus the two pair SETS
-must be identical; span_tokens must agree for single-span pairs and the
-supershingle count may only exceed difflib (total shared content vs longest
-single run) when a pair shares several disjoint spans."""
+"""Differential parity for the supershingle span pass: a driver-side
+window index + difflib (tests/oracle.span_runs_oracle) is the executable
+oracle for the anchored supershingle equi-join
+(operators/neardup.span_pairs). The window index finds every pair sharing
+a span >= span_min_tokens and difflib is an exact longest-common-run
+check, so on an uncapped corpus the two pair SETS must be identical;
+span_tokens must agree for single-span pairs and the supershingle count
+may only exceed difflib (total shared content vs longest single run) when
+a pair shares several disjoint spans."""
 
 from __future__ import annotations
 
 from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.corpus import generate_transcripts
-from fast_duplicate_finder_spark.operators.lsh import (
-    fingerprint_candidate_pairs,
-)
 from fast_duplicate_finder_spark.operators.neardup import (
     near_dup_features,
-    shingle_features,
     span_pairs,
-    winnow_fingerprint_rows,
-)
-from fast_duplicate_finder_spark.operators.verify import (
-    attach_pair_payload,
-    verify_shared_span,
 )
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
 )
 
+from tests.oracle import span_runs_oracle
+
 CFG = PipelineConfig()
 
 
-def _difflib_span_pairs(features):
-    window = max(CFG.span_min_tokens - CFG.shingle_k + 1, 1)
-    fps = winnow_fingerprint_rows(features, window).localCheckpoint(
-        eager=True
-    )
-    cands, _ = fingerprint_candidate_pairs(fps, CFG)
-    with_grams = attach_pair_payload(
-        cands, features.select("conv_id", "grams"), "grams"
-    )
-    return verify_shared_span(with_grams, CFG)
+def _difflib_span_pairs(docs):
+    local = {r["conv_id"]: r["doc"] for r in docs.collect()}
+    return span_runs_oracle(local, CFG.span_min_tokens)
 
 
 def test_supershingle_span_matches_difflib_oracle(spark):
     t = generate_transcripts(spark, n_convs=300, seed=42)
-    features = shingle_features(
-        assemble_conversations(t), CFG
-    ).localCheckpoint(eager=True)
 
     new_pairs, overflow = span_pairs(
         near_dup_features(assemble_conversations(t), CFG), CFG
@@ -56,10 +40,7 @@ def test_supershingle_span_matches_difflib_oracle(spark):
         (r["conv_id_a"], r["conv_id_b"]): r["span_tokens"]
         for r in new_pairs.collect()
     }
-    old = {
-        (r["conv_id_a"], r["conv_id_b"]): r["span_tokens"]
-        for r in _difflib_span_pairs(features).collect()
-    }
+    old = _difflib_span_pairs(assemble_conversations(t))
     assert overflow.count() == 0  # no capped buckets: sets must be equal
     assert set(new) == set(old), (
         sorted(set(new) - set(old))[:5],
