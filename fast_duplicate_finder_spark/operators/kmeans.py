@@ -1,21 +1,21 @@
-"""Lloyd's k-means over an embedding column — pure DataFrame iteration.
+"""Lloyd's k-means and IVF search over an embedding column — pure DataFrame
+iteration.
 
-The codebook trainer behind a real IVF index (trainingdata.q_embedding_ivf_topk
-uses fixed seed centroids so its DuckDB oracle stays exact; this operator is
-the production path that replaces them with trained ones). ``in_cell_topk``
-is the one in-cell search: ivf_topk and both catalog IVF queries differ only
-in how they assign cells. Same iterative
-shape as operators/connected_components.py: driver loop, one shuffle per
-iteration, localCheckpoint to truncate lineage.
+One trainer (``kmeans_fit``), one assigner (``assign_cells``) and one
+in-cell search (``in_cell_topk``): ivf_topk and both catalog IVF queries
+differ only in how they assign cells, and the catalog's DuckDB oracle
+replays the training bit for bit. Same iterative shape as
+operators/connected_components.py: Python loop, one shuffle per iteration,
+localCheckpoint to truncate lineage.
 
 Design for scale:
-* centroids live in a k x dim broadcast (k ~ sqrt(N) for IVF — thousands,
-  not millions); the assignment join is a broadcast nested loop over k
-  rows, never a shuffle of the vectors;
-* the update step is one groupBy(cluster).avg — a single map-side-combined
-  shuffle of k x dim doubles;
+* centroids live in a k x dim broadcast (k ~ sqrt(N) for IVF); the
+  assignment join is a broadcast nested loop over k rows, never a shuffle
+  of the vectors;
+* the update step is one groupBy(cell, dim) sum — a single
+  map-side-combined shuffle of k x dim longs;
 * deterministic: seed centroids are the first k vec_ids, iteration count is
-  fixed, ties broken by centroid id — same input -> same codebook.
+  fixed, ties broken by centroid id, and all arithmetic is integer (below).
 """
 
 from __future__ import annotations
@@ -25,32 +25,73 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
 
+# ---------------------------------------------------------------------------
+# Integer fixed point
+# ---------------------------------------------------------------------------
+#
+# Float Lloyd's is deterministic only up to summation order: Spark's partial
+# aggregation adds doubles in partition order, so trained centroids (and
+# occasionally an assignment on a near-tie) differ in the last ulp between
+# engines AND between partitionings of the same data. So vectors are
+# quantized to integers and every distance / update stays in BIGINT fixed
+# point — associative, order-independent, bit-identical on any engine (the
+# DuckDB oracle replicates it verbatim in SQL). ``qv`` is stored already in
+# centroid scale, so neither the distance nor the update rescales it:
+#
+# * qv_i  = round(x_i * Q_SCALE) * M_SCALE       exact per-row, no aggregation
+# * dist  = sum((qv_i - m_i)^2)                  BIGINT (fits: |qv|<=6e7,
+#                                                squared * 64 dims < 2^63)
+# * m_i   = floor(sum(qv_i) / n + 0.5)           one exact-int double division
+#
+# Quantization error (1e-4 relative) is irrelevant for codebook training;
+# tie-breaks (dist, then centroid_id) are exact-integer comparisons.
 
-def _sq_dist(a, b):
+Q_SCALE = 10_000
+M_SCALE = 1024
+
+
+def quantize_vectors(
+    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+) -> DataFrame:
+    """(vec_id, <vec_col>, qv) — the vectors beside their BIGINT
+    fixed-point copies in centroid (M_SCALE) scale."""
+    return vectors.select(
+        F.col(id_col).alias("vec_id"),
+        vec_col,
+        F.transform(
+            F.col(vec_col),
+            lambda x: F.round(x.cast("double") * Q_SCALE).cast("long")
+            * M_SCALE,
+        ).alias("qv"),
+    )
+
+
+def _int_dist(qv, m):
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
+        F.zip_with(qv, m, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
 
 
-def assign_cells(vectors: DataFrame, centroids: DataFrame,
-                 vec_col: str = "embedding", nprobe: int = 1) -> DataFrame:
-    """(vec_id, <vec_col>, cell) — the ``nprobe`` nearest centroids by
-    squared L2 (one output row each; ties to the lowest centroid_id).
-    ``nprobe=1`` is the storage assignment (a vector lives in exactly one
-    cell); ``nprobe>1`` is the QUERY-side recall knob — probing the k
-    nearest cells recovers true neighbors that fell just across a Voronoi
-    boundary. centroids: (centroid_id, centroid)."""
-    scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "_d", _sq_dist(F.col(vec_col), F.col("centroid"))
+def assign_cells(
+    qvecs: DataFrame, centroids: DataFrame, nprobe: int = 1
+) -> DataFrame:
+    """``qvecs``' columns plus ``cell`` — the ``nprobe`` nearest centroids
+    by exact integer squared L2 (one output row each; ties to the lowest
+    centroid_id). ``qvecs`` is quantize_vectors output; centroids:
+    (centroid_id, m). ``nprobe=1`` is the storage assignment (a vector
+    lives in exactly one cell); ``nprobe>1`` is the QUERY-side recall knob
+    — probing the nearest cells recovers true neighbors that fell just
+    across a Voronoi boundary."""
+    scored = qvecs.crossJoin(F.broadcast(centroids)).withColumn(
+        "_d", _int_dist(F.col("qv"), F.col("m"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.asc("_d"), F.asc("centroid_id"))
     return (
         scored.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= nprobe)
-        .select("vec_id", vec_col, F.col("centroid_id").alias("cell"))
+        .select(*qvecs.columns, F.col("centroid_id").alias("cell"))
     )
 
 
@@ -61,12 +102,13 @@ def kmeans_fit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Train a k-centroid codebook; returns (centroid_id, centroid).
+    """Train a k-centroid codebook; returns (centroid_id, m) with m in
+    M_SCALE fixed point.
 
     Seeds = the k lowest ids (deterministic). Empty clusters keep their
     previous centroid (standard Lloyd's fallback).
     """
-    v = vectors.select(F.col(id_col).alias("vec_id"), vec_col)
+    v = quantize_vectors(vectors, vec_col, id_col)
     seeds = (
         v.orderBy("vec_id")
         .limit(k)
@@ -74,7 +116,7 @@ def kmeans_fit(
             (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
                 "centroid_id"
             ),
-            F.col(vec_col).alias("centroid"),
+            F.col("qv").alias("m"),
         )
         .localCheckpoint(eager=True)
     )
@@ -82,29 +124,35 @@ def kmeans_fit(
         raise ValueError("kmeans_fit: empty input")
     centroids = seeds
     for _ in range(n_iter):
-        assigned = assign_cells(v, centroids, vec_col)
-        means = assigned.select(
-            "cell", F.posexplode(vec_col).alias("i", "x")
-        ).groupBy("cell", "i").agg(F.avg("x").alias("m"))
-        new_centroids = (
-            means.groupBy("cell")
+        assigned = assign_cells(v, centroids)
+        sums = (
+            assigned.select("cell", F.posexplode("qv").alias("j", "x"))
+            .groupBy("cell", "j")
+            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
+        )
+        upd = (
+            sums.withColumn(
+                "mj",
+                F.floor(F.col("s").cast("double") / F.col("n") + 0.5).cast(
+                    "long"
+                ),
+            )
+            .groupBy("cell")
             .agg(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))),
-                    lambda s: s.getField("m").cast("float"),
-                ).alias("centroid")
+                    F.array_sort(F.collect_list(F.struct("j", "mj"))),
+                    lambda st: st.getField("mj"),
+                ).alias("m_new")
             )
-            .select(F.col("cell").alias("centroid_id"), "centroid")
+            .select(F.col("cell").alias("centroid_id"), "m_new")
         )
         # empty clusters: fall back to the previous centroid
         centroids = (
             centroids.alias("old")
-            .join(new_centroids.alias("new"), "centroid_id", "left")
+            .join(upd.alias("new"), "centroid_id", "left")
             .select(
                 "centroid_id",
-                F.coalesce(F.col("new.centroid"), F.col("old.centroid")).alias(
-                    "centroid"
-                ),
+                F.coalesce(F.col("new.m_new"), F.col("old.m")).alias("m"),
             )
             .localCheckpoint(eager=True)
         )
@@ -152,8 +200,9 @@ def ivf_topk(
     vec_col: str = "embedding",
     nprobe: int = 1,
 ) -> DataFrame:
-    """IVF search with a trained codebook: assign both sides to cells,
-    search within the query's ``nprobe`` nearest cells. Returns (vec_id,
+    """IVF search with a trained codebook (kmeans_fit output): quantize and
+    assign both sides to cells, search within the query's ``nprobe``
+    nearest cells by exact cosine of the float vectors. Returns (vec_id,
     rank, neighbor_id, cos). The 100 TB layout writes
     `assign_cells(vectors)` partitioned by cell once (always nprobe=1 —
     each candidate lives in exactly one cell, so probing q-side cells
@@ -161,131 +210,8 @@ def ivf_topk(
     ~nprobe*N/k candidates. scripts/ann_recall_probe.py measures the
     recall@k-vs-cost curve per nprobe."""
     return in_cell_topk(
-        assign_cells(queries, centroids, vec_col, nprobe=nprobe),
-        assign_cells(vectors, centroids, vec_col),
+        assign_cells(quantize_vectors(queries, vec_col), centroids, nprobe),
+        assign_cells(quantize_vectors(vectors, vec_col), centroids),
         topk,
         vec_col,
     )
-
-
-# ---------------------------------------------------------------------------
-# Integer-exact Lloyd's — the oracle-checkable sibling of kmeans_fit
-# ---------------------------------------------------------------------------
-#
-# Float Lloyd's is deterministic only up to summation order: Spark's partial
-# aggregation adds doubles in partition order, so the trained centroids (and
-# occasionally an assignment on a near-tie) differ in the last ulp between
-# engines AND between partitionings of the same data. The exact variant
-# quantizes vectors to integers and keeps every distance / update in BIGINT
-# fixed point — associative, order-independent, bit-identical on any engine
-# (the DuckDB oracle replicates it verbatim in SQL):
-#
-# * qv_i  = round(x_i * Q_SCALE)                exact per-row, no aggregation
-# * dist  = sum((M_SCALE*qv_i - m_i)^2)         BIGINT (fits: |1024*q|<=6e7,
-#                                               squared * 64 dims < 2^63)
-# * m_i   = floor(M_SCALE*sum(qv_i)/n + 0.5)    one exact-int double division
-#
-# Quantization error (1e-4 relative) is irrelevant for codebook training;
-# tie-breaks (dist, then centroid_id) are exact-integer comparisons.
-
-Q_SCALE = 10_000
-M_SCALE = 1024
-
-
-def quantize_vectors(
-    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """(vec_id, qv) — BIGINT-quantized copies of the vectors."""
-    return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * Q_SCALE).cast("long"),
-        ).alias("qv"),
-    )
-
-
-def _int_dist(qv, m):
-    scale = F.lit(M_SCALE).cast("long")
-    return F.aggregate(
-        F.zip_with(qv, m, lambda x, y: (scale * x - y) * (scale * x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def assign_cells_exact(qvecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, qv, cell) — nearest centroid by exact integer squared L2,
-    ties to the lowest centroid_id. centroids: (centroid_id, m) in M-scale."""
-    scored = qvecs.crossJoin(F.broadcast(centroids)).withColumn(
-        "_d", _int_dist(F.col("qv"), F.col("m"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("_d"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select("vec_id", "qv", F.col("centroid_id").alias("cell"))
-    )
-
-
-def kmeans_fit_exact(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Integer-exact Lloyd's codebook; returns (centroid_id, m) with m in
-    M_SCALE fixed point. Seeds = the k lowest ids; empty cells keep their
-    previous centroid. Same broadcast-assign + single k x dim shuffle shape
-    as kmeans_fit."""
-    v = quantize_vectors(vectors, vec_col, id_col)
-    scale = F.lit(M_SCALE).cast("long")
-    seeds = (
-        v.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
-                "centroid_id"
-            ),
-            F.transform(F.col("qv"), lambda x: scale * x).alias("m"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    if not seeds.take(1):
-        raise ValueError("kmeans_fit_exact: empty input")
-    centroids = seeds
-    for _ in range(n_iter):
-        assigned = assign_cells_exact(v, centroids)
-        sums = (
-            assigned.select("cell", F.posexplode("qv").alias("j", "x"))
-            .groupBy("cell", "j")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-        )
-        upd = (
-            sums.withColumn(
-                "mj",
-                F.floor(
-                    F.col("s").cast("double") * float(M_SCALE) / F.col("n")
-                    + 0.5
-                ).cast("long"),
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("j", "mj"))),
-                    lambda st: st.getField("mj"),
-                ).alias("m_new")
-            )
-            .select(F.col("cell").alias("centroid_id"), "m_new")
-        )
-        centroids = (
-            centroids.alias("old")
-            .join(upd.alias("new"), "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce(F.col("new.m_new"), F.col("old.m")).alias("m"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return centroids

@@ -623,7 +623,11 @@ ORACLE_SIMHASH = _simhash_oracle()
 def q_winnow_span_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint candidates with a PORTABLE fingerprint (the
     lexicographic min 3-gram per 20-gram window) so DuckDB can replicate:
-    pairs sharing a fingerprint == candidates for a >=22-token shared span."""
+    pairs sharing a fingerprint == candidates for a >=22-token shared span.
+
+    Catalog-only: no pipeline phase or stream leg winnows (the span leg is
+    shingle_features -> span_pairs), so this is the package's one
+    winnowing implementation, kept for the query and its DuckDB oracle."""
     c = dup_corpus(spark, sf_dir)
     W = 20
     # window-function winnowing: sliding-window min via a frame over
@@ -760,10 +764,10 @@ def _span_occ(c: DataFrame) -> DataFrame:
     supershingle expression (neardup._supershingles) over
     shingle_features' grams — with the per-(doc, supershingle) occurrence
     count attached. The single expensive lineage both span-run queries
-    start from — callers materialize it ONCE (localCheckpoint here via
-    _span_longest_runs, the session _MATERIALIZED cache for the catalog
-    pair) and it then feeds the overflow aggregation, the boilerplate
-    bucket window AND both self-join sides."""
+    start from — callers materialize it ONCE (the session _MATERIALIZED
+    cache for the catalog pair, a localCheckpoint in tests) and it then
+    feeds the overflow aggregation, the boilerplate bucket window AND both
+    self-join sides."""
     from fast_duplicate_finder_spark.operators.neardup import (
         _supershingles,
         shingle_features,
@@ -840,24 +844,6 @@ def _span_runs_from_occ(sp_occ: DataFrame) -> DataFrame:
     return runs.groupBy("doc_id_a", "doc_id_b").agg(
         (F.max("run") + W - 1).cast("long").alias("longest_run_tokens")
     )
-
-
-def _span_longest_runs(
-    c: DataFrame, with_overflow: bool = False
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Core of q_span_longest_run over a (doc_id, text) DataFrame — the
-    same shingle_features + positional-supershingle lineage the catalog
-    query reads, factored out so tests can feed hand-planted repetition
-    cases.
-
-    ``with_overflow=True`` additionally returns the counted overflow table
-    (doc_id, ss, occurrences) of WITHIN-DOC repetition groups dropped by
-    the occurrence cap. (The catalog pair q_span_longest_run /
-    q_span_longest_overflow shares ONE _span_occ materialization via
-    _MATERIALIZED instead of calling this twice.)"""
-    sp_occ = _span_occ(c).localCheckpoint(eager=True)
-    out = _span_runs_from_occ(sp_occ)
-    return (out, _span_overflow_groups(sp_occ)) if with_overflow else out
 
 
 def _span_occ_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:

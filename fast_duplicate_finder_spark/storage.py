@@ -28,7 +28,6 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def parquet_snapshot_id(path: str) -> str:
@@ -63,6 +62,22 @@ def parquet_snapshot_id(path: str) -> str:
     return hashlib.sha256(blob).hexdigest()[:16]
 
 
+def _require_local_fs(path: str) -> None:
+    """Fail fast on a URI-shaped path (hdfs://, s3a://, ...). Spark writes
+    would work on any Hadoop filesystem, but the checkpoint manifests and
+    the streaming state lifecycle are local file operations
+    (``open``, ``os.walk``, ``os.replace``, ``shutil``) that would silently
+    write beside, no-op on or mis-detect a remote URI. Remote storage
+    (e.g. Iceberg tables in place of this local parquet layout) is not
+    implemented."""
+    if "://" in path:
+        raise ValueError(
+            f"{path!r} must be a local filesystem path: manifests and state "
+            "maintenance use local file operations, and remote "
+            "storage is not implemented"
+        )
+
+
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg runtime is on the JVM classpath (the
     iceberg-spark-runtime jar ships ``org.apache.iceberg.Table``)."""
@@ -84,6 +99,9 @@ class CheckpointStore:
                                     # Iceberg snapshot); resume refuses a
                                     # checkpoint taken of a different input
     metrics: list[dict] = field(default_factory=list)
+
+    def __post_init__(self) -> None:
+        _require_local_fs(self.base_dir)
 
     def _dir(self, phase: str) -> str:
         return os.path.join(self.base_dir, phase)
@@ -216,24 +234,14 @@ class CheckpointStore:
         return out
 
     def _footer_counts(self, data_path: str) -> dict[str, int]:
-        """{file_name: num_rows} from parquet footer metadata; falls back
-        to one Spark count job if footers are unreadable (non-local FS)."""
-        try:
-            import pyarrow.parquet as pq
+        """{file_name: num_rows} from parquet footer metadata."""
+        import pyarrow.parquet as pq
 
-            return {
-                e.name: pq.ParquetFile(e.path).metadata.num_rows
-                for e in os.scandir(data_path)
-                if e.name.endswith(".parquet") and e.is_file()
-            }
-        except Exception:
-            df = self.spark.read.parquet(data_path)
-            per = (
-                df.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .collect()
-            )
-            return {str(r["pid"]): int(r["count"]) for r in per}
+        return {
+            e.name: pq.ParquetFile(e.path).metadata.num_rows
+            for e in os.scandir(data_path)
+            if e.name.endswith(".parquet") and e.is_file()
+        }
 
     def read(self, phase: str) -> DataFrame:
         try:

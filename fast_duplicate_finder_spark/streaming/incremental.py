@@ -60,6 +60,7 @@ from fast_duplicate_finder_spark.sources.transcripts import (
     TRANSCRIPT_SCHEMA_DDL,
     assemble_conversations,
 )
+from fast_duplicate_finder_spark.storage import _require_local_fs
 
 
 def stream_transcripts(
@@ -81,22 +82,6 @@ def stream_transcripts(
 
 
 N_STATE_PREFIXES = 64  # hash-prefix partitions of the state table
-
-
-def _require_local_fs(work_dir: str) -> None:
-    """Fail fast on a URI-shaped ``work_dir`` (hdfs://, s3a://, ...): the
-    state lifecycle here mixes Spark writes (which would work on any
-    Hadoop filesystem) with driver-local ``os.walk`` / ``os.replace`` /
-    ``shutil`` manipulation (``_has_parts``, the compaction rename dance)
-    that would silently no-op or mis-detect state on a remote URI. Remote
-    state storage (e.g. Iceberg MERGE targets in place of this local
-    parquet layout) is not implemented."""
-    if "://" in work_dir:
-        raise ValueError(
-            "streaming state work_dir must be a local filesystem path "
-            f"(got {work_dir!r}): state maintenance uses driver-local "
-            "renames, and remote state storage is not implemented"
-        )
 
 
 def _has_parts(path: str) -> bool:

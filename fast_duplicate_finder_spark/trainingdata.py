@@ -134,7 +134,11 @@ _IVF_TOPK = 3
 
 
 from fast_duplicate_finder_spark.functions.vectors import cosine as _cosine  # noqa: E402
-from fast_duplicate_finder_spark.operators.kmeans import in_cell_topk  # noqa: E402
+from fast_duplicate_finder_spark.operators.kmeans import (  # noqa: E402
+    in_cell_topk,
+    ivf_topk,
+    kmeans_fit,
+)
 
 
 def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,10 +147,11 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in for a k-means codebook); each query (vec_id < 20) searches only
     its own cell. The centroid table is 8 rows -> broadcast nested-loop on
     the assignment, then one equi-join on cell for the search: the cross
-    join brute force is replaced by |cell| ~ N/8 candidates per query —
-    the 100 TB path is the same plan with a trained codebook of ~sqrt(N)
-    centroids. Only the assignment (cosine to fixed seeds) is this
-    query's own; the search is kmeans.in_cell_topk."""
+    join brute force is replaced by |cell| ~ N/8 candidates per query.
+    Only the assignment (cosine to fixed seeds) is this query's own; the
+    search is kmeans.in_cell_topk. The trained-codebook path (~sqrt(N)
+    centroids at scale) is embedding_kmeans_ivf_topk, which runs
+    kmeans.kmeans_fit and kmeans.ivf_topk."""
     e = _load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = e.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
@@ -415,38 +420,25 @@ _KM_TOPK = 3
 
 
 def q_embedding_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-codebook IVF with the INTEGER-EXACT Lloyd's trainer
-    (operators/kmeans.kmeans_fit_exact): vectors quantized to BIGINT, every
-    distance/update in fixed point, so the trained codebook — and therefore
-    the cell assignment — is bit-identical across engines and partitionings,
-    and DuckDB can replay the full 3-iteration training in SQL (round 1
-    carried this query as a no-oracle row because float Lloyd's is only
-    deterministic up to summation order). The in-cell top-3 for the first
-    20 queries is kmeans.in_cell_topk — the search ivf_topk and
-    embedding_ivf_topk run — by exact cosine of the ORIGINAL float
-    embeddings (same cross-engine-stable expression as the green
-    embedding_topk oracle); only the cell assignment is integer-exact.
-    The float kmeans_fit path keeps its recall-vs-brute-force pin in
-    tests/test_kmeans.py."""
-    from fast_duplicate_finder_spark.operators.kmeans import (
-        assign_cells_exact,
-        kmeans_fit_exact,
-        quantize_vectors,
-    )
-
+    """Trained-codebook IVF: operators/kmeans.kmeans_fit (Lloyd's in
+    BIGINT fixed point, so the trained codebook — and therefore the cell
+    assignment — is bit-identical across engines and partitionings, and
+    DuckDB can replay the full 3-iteration training in SQL), then
+    kmeans.ivf_topk for the first 20 queries: the in-cell top-3 by exact
+    cosine of the ORIGINAL float embeddings (same cross-engine-stable
+    expression as the green embedding_topk oracle); only the cell
+    assignment is integer-exact."""
     e = _load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_fit_exact(e, k=_KM_K, n_iter=_KM_ITER)
-    assigned = assign_cells_exact(quantize_vectors(e), cents).select(
-        "vec_id", "cell"
-    )
-    placed = assigned.join(e, "vec_id")
-    return in_cell_topk(
-        placed.filter(F.col("vec_id") < 20), placed, _KM_TOPK
+    return ivf_topk(
+        e,
+        e.filter(F.col("vec_id") < 20),
+        kmeans_fit(e, k=_KM_K, n_iter=_KM_ITER),
+        topk=_KM_TOPK,
     ).select("vec_id", "rank", "neighbor_id")
 
 
 def _kmeans_oracle() -> str:
-    """DuckDB replica of kmeans_fit_exact + in-cell top-k: the 3 Lloyd's
+    """DuckDB replica of kmeans_fit + in-cell top-k: the 3 Lloyd's
     iterations are unrolled as CTE pairs (assign a{i} under codebook c{i},
     update c{i+1} with empty-cell fallback). All arithmetic is BIGINT fixed
     point — bit-identical to the Spark operator by construction."""

@@ -9,15 +9,19 @@ unit gaussians with planted neighbors at EXACT cosine bands
   settings — measured per-band recall is reported NEXT TO the closed-form
   theory 1-(1-(1-acos(c)/pi)^planes)^tables, so the implementation is
   checked against the math it claims to implement;
-* trained-codebook IVF (operators/kmeans.kmeans_fit + ivf_topk) across
-  nprobe — planted-partner recall per band (true near neighbors) plus
-  brute-force top-5 recall on a query sample (the uniform-tail curve,
-  reported not gated: IVF prunes poorly on structureless data by design).
+* trained-codebook IVF (operators/kmeans.kmeans_fit, the integer-exact
+  Lloyd's trainer, + ivf_topk) across nprobe — planted-partner recall per
+  band (true near neighbors) plus brute-force top-5 recall on a query
+  sample (the uniform-tail curve, reported not gated: IVF prunes poorly on
+  structureless data by design).
 
     python scripts/ann_recall_probe.py --n-base 100000
 
-Writes BENCH/ann_recall_r5.json. The pytest gate at small scale is
-tests/test_ann.py (same generator, same operators, fixed settings).
+Writes BENCH/ann_recall_r5.json. The recorded file was measured with the
+float Lloyd's trainer that the integer-exact one replaced, so its IVF
+figures are not a baseline for the current trainer. The pytest gate at
+small scale is tests/test_ann.py (same generator, same operators, fixed
+settings).
 """
 
 from __future__ import annotations

@@ -9,6 +9,7 @@ from fast_duplicate_finder_spark.operators.kmeans import (
     assign_cells,
     ivf_topk,
     kmeans_fit,
+    quantize_vectors,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,12 +23,12 @@ def _emb(spark):
 
 def test_kmeans_is_deterministic_and_covers(spark):
     e = _emb(spark)
-    c1 = {r["centroid_id"]: r["centroid"] for r in kmeans_fit(e, k=8, n_iter=3).collect()}
-    c2 = {r["centroid_id"]: r["centroid"] for r in kmeans_fit(e, k=8, n_iter=3).collect()}
+    c1 = {r["centroid_id"]: r["m"] for r in kmeans_fit(e, k=8, n_iter=3).collect()}
+    c2 = {r["centroid_id"]: r["m"] for r in kmeans_fit(e, k=8, n_iter=3).collect()}
     assert set(c1) == set(range(8))
     for k in c1:
         assert c1[k] == c2[k], f"centroid {k} not deterministic"
-    cells = assign_cells(e, kmeans_fit(e, k=8, n_iter=3))
+    cells = assign_cells(quantize_vectors(e), kmeans_fit(e, k=8, n_iter=3))
     assert cells.count() == e.count()  # every vector assigned exactly once
     assert cells.select("vec_id").distinct().count() == e.count()
 
@@ -35,23 +36,22 @@ def test_kmeans_is_deterministic_and_covers(spark):
 def test_kmeans_improves_over_seed_centroids(spark):
     """3 Lloyd iterations must not increase total within-cluster distance
     vs the raw seed assignment."""
-    from fast_duplicate_finder_spark.operators.kmeans import _sq_dist
+    from fast_duplicate_finder_spark.operators.kmeans import _int_dist
 
     e = _emb(spark)
     seeds = kmeans_fit(e, k=8, n_iter=0)
     trained = kmeans_fit(e, k=8, n_iter=3)
 
     def cost(cents):
-        a = assign_cells(e, cents)
+        a = assign_cells(quantize_vectors(e), cents)
         joined = a.join(
-            cents.select(F.col("centroid_id").alias("cell"), "centroid"),
-            "cell",
+            cents.select(F.col("centroid_id").alias("cell"), "m"), "cell"
         )
         return joined.select(
-            _sq_dist(F.col("embedding"), F.col("centroid")).alias("d")
+            _int_dist(F.col("qv"), F.col("m")).alias("d")
         ).agg(F.sum("d")).collect()[0][0]
 
-    assert cost(trained) <= cost(seeds) + 1e-9
+    assert cost(trained) <= cost(seeds)
 
 
 def test_trained_ivf_recall_vs_bruteforce(spark):

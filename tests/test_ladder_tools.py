@@ -3,7 +3,8 @@
 The scaling gate's evidence chain runs through scripts/ladder_report.py
 (pooling + best-of-N efficiency) — pin its timed-wall recovery so a
 format drift in leg artifacts can't silently mis-pool warm-ups as timed
-runs (which would overstate efficiency in either direction).
+runs (which would overstate efficiency in either direction). Cross-run
+benchmark verdicts come from perfbench/compare.py, pinned the same way.
 """
 
 from __future__ import annotations
@@ -110,51 +111,54 @@ def test_ladder_profile_best_run_excludes_warmup_and_picks_min():
     assert best["wall_sec"] == 200.0
 
 
-def test_bench_compare_noise_vs_regression(tmp_path):
-    """bench.py --compare's mechanical verdict: a uniform slowdown (host
-    window) is 'noise-band' no matter how large; a single query moving on
-    its own is flagged by name; sub-second wobble below the absolute
-    floor is never flagged."""
-    spec = importlib.util.spec_from_file_location(
-        "bench", pathlib.Path(__file__).resolve().parent.parent / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    ref = {
-        "value": 20.0,
-        "queries": {"q_big": 6.0, "q_mid": 3.0, "q_small": 0.3,
-                    "q_other": 2.0, "q_more": 1.5},
-    }
-    ref_path = tmp_path / "ref.json"
-    ref_path.write_text(json.dumps(ref))
-
-    # uniform 1.4x: host-shaped, nothing flagged
-    cur = {q: t * 1.4 for q, t in ref["queries"].items()}
-    c = bench._compare(cur, str(ref_path))
-    assert c["verdict"] == "noise-band"
-    assert abs(c["host_factor_median_ratio"] - 1.4) < 0.01
-
-    # one query 3x while the rest hold: flagged by name
-    cur = dict(ref["queries"])
-    cur["q_big"] = 18.0
-    c = bench._compare(cur, str(ref_path))
-    assert c["flagged"] == ["q_big"]
-    assert c["verdict"].startswith("regression: q_big")
-
-    # sub-second query doubles (0.3 -> 0.6): under the 0.5 s floor
-    cur = dict(ref["queries"])
-    cur["q_small"] = 0.6
-    assert bench._compare(cur, str(ref_path))["verdict"] == "noise-band"
-
-    # disjoint query sets are reported, not crashed on
-    cur = {"q_new": 1.0, "q_big": 6.0, "q_mid": 3.0, "q_other": 2.0,
-           "q_more": 1.5, "q_small": 0.3}
-    c = bench._compare(cur, str(ref_path))
-    assert c["only_in_current"] == ["q_new"]
-
-    # no query name in common: fail fast, never a silent 'noise-band'
+def test_perfbench_compare_verdicts():
+    """perfbench/compare.py's verdict per (workload, metric): worse than
+    the bound is a regression, a spread above the bound is unresolved,
+    otherwise within-bound or better; result sets that share no workload
+    or no metric are refused, never reported as "no change"."""
     import pytest
 
-    with pytest.raises(ValueError, match="no query name in common"):
-        bench._compare({"q_new": 1.0}, str(ref_path))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_compare",
+        pathlib.Path(__file__).resolve().parent.parent / "perfbench"
+        / "compare.py",
+    )
+    cmp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cmp)
+    bench_spec = {"end_to_end": [
+        {"name": "turns_per_s", "better": "higher", "bound": 0.25},
+        {"name": "setup_s", "better": "lower", "bound": 0.25},
+    ]}
+
+    def runs(workload, metric, values):
+        return [{"workload": workload, "trace": 0,
+                 "result": {"metrics": {metric: {"value": v}}}}
+                for v in values]
+
+    def verdict(metric, parent, change):
+        out = cmp.compare(runs("w", metric, parent), runs("w", metric, change),
+                          bench_spec)
+        return out["w"][metric]["verdict"]
+
+    steady = [100.0, 101.0, 99.0, 100.0, 100.5]
+    assert verdict("turns_per_s", steady, [98.0, 99.0, 97.0, 98.0, 98.5]) \
+        == "within-bound"
+    assert verdict("turns_per_s", steady, [110.0, 111.0, 109.0, 110.0, 110.5]) \
+        == "better"
+    assert verdict("setup_s", steady, [90.0, 91.0, 89.0, 90.0, 90.5]) \
+        == "better"
+    # 40 % fewer turns/s, and 40 % more setup seconds, are past the bound
+    assert verdict("turns_per_s", steady, [60.0, 61.0, 59.0, 60.0, 60.5]) \
+        == "regression"
+    assert verdict("setup_s", steady, [140.0, 141.0, 139.0, 140.0, 140.5]) \
+        == "regression"
+    # medians agree, but the parent's quartile spread (0.7) is over 0.25
+    assert verdict("turns_per_s", [50.0, 80.0, 100.0, 120.0, 150.0], steady) \
+        == "unresolved"
+
+    with pytest.raises(ValueError, match="no workload in common"):
+        cmp.compare(runs("a", "turns_per_s", steady),
+                    runs("b", "turns_per_s", steady), bench_spec)
+    with pytest.raises(ValueError, match="no metric name in common"):
+        cmp.compare(runs("w", "turns_per_s", steady),
+                    runs("w", "setup_s", steady), bench_spec)

@@ -202,33 +202,28 @@ def test_streaming_replayed_epoch_does_not_inflate_dup_log(spark, tmp_path):
 
 
 def test_kmeans_fit_exact_partition_invariant(spark):
-    from fast_duplicate_finder_spark.operators.kmeans import kmeans_fit_exact
+    from fast_duplicate_finder_spark.operators.kmeans import kmeans_fit
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     c1 = {
         r["centroid_id"]: r["m"]
-        for r in kmeans_fit_exact(e, k=8, n_iter=3).collect()
+        for r in kmeans_fit(e, k=8, n_iter=3).collect()
     }
     c2 = {
         r["centroid_id"]: r["m"]
-        for r in kmeans_fit_exact(e.repartition(7), k=8, n_iter=3).collect()
+        for r in kmeans_fit(e.repartition(7), k=8, n_iter=3).collect()
     }
     assert c1 == c2  # bit-identical under any partitioning
 
 
 def test_kmeans_fit_empty_input_raises(spark):
-    from fast_duplicate_finder_spark.operators.kmeans import (
-        kmeans_fit,
-        kmeans_fit_exact,
-    )
+    from fast_duplicate_finder_spark.operators.kmeans import kmeans_fit
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError):
         kmeans_fit(empty)
-    with pytest.raises(ValueError):
-        kmeans_fit_exact(empty)
 
 
 def test_format_helpers():

@@ -174,7 +174,12 @@ def test_span_longest_run_occurrence_cap(spark):
     positional self-join occ_a x occ_b. The within-doc occurrence cap
     (max_band_bucket) drops such groups WITH a visible counter; normal
     shared spans are untouched."""
-    from fast_duplicate_finder_spark.queries import CFG, _span_longest_runs
+    from fast_duplicate_finder_spark.queries import (
+        CFG,
+        _span_occ,
+        _span_overflow_groups,
+        _span_runs_from_occ,
+    )
 
     shared = " ".join(f"s{i}" for i in range(60))  # 60-token shared run
     adversarial = " ".join(["tok"] * 5000)  # >> max_band_bucket occurrences
@@ -187,7 +192,8 @@ def test_span_longest_run_occurrence_cap(spark):
         ],
         "doc_id int, text string",
     )
-    runs, overflow = _span_longest_runs(c, with_overflow=True)
+    sp_occ = _span_occ(c).localCheckpoint(eager=True)
+    runs, overflow = _span_runs_from_occ(sp_occ), _span_overflow_groups(sp_occ)
     got = {(r["doc_id_a"], r["doc_id_b"]): r["longest_run_tokens"]
            for r in runs.collect()}
     # the planted 60-token run survives, exact

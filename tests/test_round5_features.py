@@ -294,10 +294,14 @@ def test_clusters_batch_filters_marker_on_both_sides(spark, tmp_path):
 
 def test_streaming_work_dir_must_be_local(spark, tmp_path):
     """URI-shaped work dirs fail fast: the state lifecycle uses
-    driver-local renames that would silently no-op on hdfs://s3a://."""
+    local renames that would silently no-op on hdfs://s3a://, and
+    the checkpoint store would write its manifests under a local
+    ``./hdfs:/...`` directory."""
+    from fast_duplicate_finder_spark.storage import CheckpointStore
     from fast_duplicate_finder_spark.streaming import incremental as inc
 
     for fn in (
+        lambda: CheckpointStore(spark, "hdfs://nn/x", "fp"),
         lambda: inc.run_incremental_dedup(spark, str(tmp_path), "hdfs://nn/x"),
         lambda: inc.run_incremental_clusters(
             spark, str(tmp_path), "s3a://bucket/x"

@@ -71,7 +71,8 @@ def test_longest_run_matches_difflib_planted(spark):
 
     from fast_duplicate_finder_spark.queries import (
         _SPAN_TOKENS,
-        _span_longest_runs,
+        _span_occ,
+        _span_runs_from_occ,
     )
 
     W = _SPAN_TOKENS  # 40
@@ -99,7 +100,9 @@ def test_longest_run_matches_difflib_planted(spark):
     )
     got = {
         (r["doc_id_a"], r["doc_id_b"]): r["longest_run_tokens"]
-        for r in _span_longest_runs(df).collect()
+        for r in _span_runs_from_occ(
+            _span_occ(df).localCheckpoint(eager=True)
+        ).collect()
     }
     exp = {}
     for a in docs:
@@ -126,7 +129,8 @@ def test_longest_run_matches_difflib_low_vocab_random(spark):
 
     from fast_duplicate_finder_spark.queries import (
         _SPAN_TOKENS,
-        _span_longest_runs,
+        _span_occ,
+        _span_runs_from_occ,
     )
 
     W = _SPAN_TOKENS
@@ -148,7 +152,9 @@ def test_longest_run_matches_difflib_low_vocab_random(spark):
     )
     got = {
         (r["doc_id_a"], r["doc_id_b"]): r["longest_run_tokens"]
-        for r in _span_longest_runs(df).collect()
+        for r in _span_runs_from_occ(
+            _span_occ(df).localCheckpoint(eager=True)
+        ).collect()
     }
     exp = {}
     for a in docs:
