@@ -14,14 +14,12 @@ helpers/calculate_hash.go); this module supplies the Spark-side plumbing a
   JPEG (SOF frame header) container bytes in pure Python — no image
   library needed for dimensions; payloads in neither container fall back
   to ``decode_stub``'s deterministic fake fields (the documented
-  unknown-codec fallback). A full pixel decoder (PIL / torchaudio / pyav)
-  swaps in via the ``decoder=`` seam — batch shape, schema, and
-  partitioning contract stay identical.
+  unknown-codec fallback).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -169,14 +167,9 @@ def png_payload_col(width: Column, height: Column, body: Column) -> Column:
     )
 
 
-def extract_media_meta(
-    df: DataFrame,
-    id_col: str = "id",
-    payload_col: str = "payload",
-    media_type_col: str = "media_type",
-    decoder: Callable[[bytes], dict] = decode_media,
-) -> DataFrame:
-    """``mapInPandas`` metadata extraction over binary payloads.
+def extract_media_meta(df: DataFrame) -> DataFrame:
+    """``mapInPandas`` metadata extraction (decode_media) over the
+    ``(id, payload, media_type)`` convention.
 
     Input partitioning is preserved (narrow transformation — no shuffle);
     at 100 TB the payload bytes never move between executors.
@@ -185,12 +178,13 @@ def extract_media_meta(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             metas = [
-                decoder(p if p is not None else b"") for p in pdf[payload_col]
+                decode_media(p if p is not None else b"")
+                for p in pdf["payload"]
             ]
             out = pd.DataFrame(
                 {
-                    "id": pdf[id_col].astype("int64"),
-                    "media_type": pdf[media_type_col],
+                    "id": pdf["id"].astype("int64"),
+                    "media_type": pdf["media_type"],
                     "n_bytes": [m["n_bytes"] for m in metas],
                     "width": [m["width"] for m in metas],
                     "height": [m["height"] for m in metas],
@@ -218,14 +212,12 @@ def frame_sample_indices(
     )
 
 
-def payload_dedup_keys(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
+def payload_dedup_keys(df: DataFrame) -> DataFrame:
     """Exact binary dedup keys: (id, n_bytes, xxhash64(payload)) — the
     multimodal analogue of the reference's size->hash cascade, entirely
     JVM-side (no Python sees the bytes)."""
     return df.select(
-        F.col(id_col).alias("id"),
-        F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        F.xxhash64(F.col(payload_col)).alias("payload_hash"),
+        "id",
+        F.length("payload").cast("long").alias("n_bytes"),
+        F.xxhash64("payload").alias("payload_hash"),
     )

@@ -78,10 +78,7 @@ def _dot_lit(vec_col, plane: list[float]):
 
 
 def rhp_bucket_rows(
-    vectors: DataFrame,
-    planes: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    vectors: DataFrame, planes: list[list[list[float]]]
 ) -> DataFrame:
     """(conv_id, t, bucket) — one row per (vector, table); bucket packs the
     table's plane signs into one BIGINT. Column is named ``conv_id`` for
@@ -90,9 +87,8 @@ def rhp_bucket_rows(
     for table in planes:
         b = F.lit(0).cast("long")
         for i, plane in enumerate(table):
-            b = b + (_dot_lit(F.col(vec_col), plane) > 0).cast("long") * F.lit(
-                1 << i
-            )
+            hit = _dot_lit(F.col("embedding"), plane) > 0
+            b = b + hit.cast("long") * F.lit(1 << i)
         buckets.append(b)
     # Per-row dim guard: a vector shorter/longer than the planes would
     # zip_with to a null dot -> null bucket, never equi-join, and silently
@@ -101,19 +97,19 @@ def rhp_bucket_rows(
     # take(1) check catches the all-rows-wrong case before any job runs).
     dim = len(planes[0][0])
     guarded = F.when(
-        F.size(vec_col) == dim, F.array(*buckets)
+        F.size("embedding") == dim, F.array(*buckets)
     ).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"rhp_bucket_rows: expected {dim}-element vectors, got "),
-                F.size(vec_col).cast("string"),
+                F.size("embedding").cast("string"),
                 F.lit(" for id "),
-                F.col(id_col).cast("string"),
+                F.col("vec_id").cast("string"),
             )
         )
     )
     return vectors.select(
-        F.col(id_col).alias("conv_id"),
+        F.col("vec_id").alias("conv_id"),
         F.posexplode(guarded).alias("t", "bucket"),
     )
 
@@ -127,8 +123,6 @@ def rhp_ann_pairs(
     max_bucket: int = 2000,
     n_salt: int = 8,
     seed: int = 1234,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Near-neighbor pairs by multi-table RHP-LSH + exact cosine verify.
 
@@ -141,25 +135,23 @@ def rhp_ann_pairs(
     # take(1)-validation idiom as kmeans_fit) — catches the common
     # whole-corpus mistake cheaply; rhp_bucket_rows' per-row raise_error
     # covers the minority-of-rows case (corrupt writer) mid-job.
-    first = vectors.select(F.size(vec_col).alias("d")).first()
+    first = vectors.select(F.size("embedding").alias("d")).first()
     if first is not None and first["d"] != dim:
         raise ValueError(
-            f"rhp_ann_pairs: dim={dim} but {vec_col!r} has "
+            f"rhp_ann_pairs: dim={dim} but 'embedding' has "
             f"{first['d']} elements"
         )
     planes = rhp_planes(n_tables, n_planes, dim, seed)
-    rows = rhp_bucket_rows(vectors, planes, vec_col, id_col)
+    rows = rhp_bucket_rows(vectors, planes)
     cand, overflow = capped_pairs(rows, ["t", "bucket"], max_bucket, n_salt)
-    emb = vectors.select(F.col(id_col).alias("conv_id"), vec_col)
+    emb = vectors.select(F.col("vec_id").alias("conv_id"), "embedding")
     verified = (
-        attach_pair_payload(cand, emb, vec_col)
-        .withColumn(
-            "cos", cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
-        )
+        attach_pair_payload(cand, emb, "embedding")
+        .withColumn("cos", cosine(F.col("embedding_a"), F.col("embedding_b")))
         .filter(F.col("cos") >= min_cos)
         .select(
-            F.col("conv_id_a").alias(f"{id_col}_a"),
-            F.col("conv_id_b").alias(f"{id_col}_b"),
+            F.col("conv_id_a").alias("vec_id_a"),
+            F.col("conv_id_b").alias("vec_id_b"),
             "cos",
         )
     )

@@ -50,16 +50,14 @@ Q_SCALE = 10_000
 M_SCALE = 1024
 
 
-def quantize_vectors(
-    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """(vec_id, <vec_col>, qv) — the vectors beside their BIGINT
+def quantize_vectors(vectors: DataFrame) -> DataFrame:
+    """(vec_id, embedding, qv) — the vectors beside their BIGINT
     fixed-point copies in centroid (M_SCALE) scale."""
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        vec_col,
+        "vec_id",
+        "embedding",
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.round(x.cast("double") * Q_SCALE).cast("long")
             * M_SCALE,
         ).alias("qv"),
@@ -95,20 +93,14 @@ def assign_cells(
     )
 
 
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def kmeans_fit(vectors: DataFrame, k: int = 8, n_iter: int = 3) -> DataFrame:
     """Train a k-centroid codebook; returns (centroid_id, m) with m in
     M_SCALE fixed point.
 
     Seeds = the k lowest ids (deterministic). Empty clusters keep their
     previous centroid (standard Lloyd's fallback).
     """
-    v = quantize_vectors(vectors, vec_col, id_col)
+    v = quantize_vectors(vectors)
     seeds = (
         v.orderBy("vec_id")
         .limit(k)
@@ -160,21 +152,18 @@ def kmeans_fit(
 
 
 def in_cell_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    topk: int,
-    vec_col: str = "embedding",
+    queries: DataFrame, candidates: DataFrame, topk: int
 ) -> DataFrame:
     """The IVF in-cell search: each query's top-``topk`` neighbors by exact
     cosine among the candidates sharing one of its cells (ties to the
-    lowest neighbor id). Both sides are (vec_id, <vec_col>, cell); the
+    lowest neighbor id). Both sides are (vec_id, embedding, cell); the
     caller owns the cell assignment. Returns (vec_id, rank, neighbor_id,
     cos) with cos rounded to 6 places."""
     q = queries.select(
-        F.col("vec_id").alias("qid"), F.col(vec_col).alias("qemb"), "cell"
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"), "cell"
     )
     cand = candidates.select(
-        F.col("vec_id").alias("nid"), F.col(vec_col).alias("nemb"), "cell"
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb"), "cell"
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
     return (
@@ -197,7 +186,6 @@ def ivf_topk(
     queries: DataFrame,
     centroids: DataFrame,
     topk: int = 5,
-    vec_col: str = "embedding",
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF search with a trained codebook (kmeans_fit output): quantize and
@@ -210,8 +198,7 @@ def ivf_topk(
     ~nprobe*N/k candidates. scripts/ann_recall_probe.py measures the
     recall@k-vs-cost curve per nprobe."""
     return in_cell_topk(
-        assign_cells(quantize_vectors(queries, vec_col), centroids, nprobe),
-        assign_cells(quantize_vectors(vectors, vec_col), centroids),
+        assign_cells(quantize_vectors(queries), centroids, nprobe),
+        assign_cells(quantize_vectors(vectors), centroids),
         topk,
-        vec_col,
     )

@@ -123,6 +123,43 @@ def two_level_pairs(
     )
 
 
+def _repartition_even(
+    df: DataFrame, key_cols: list[str], even: bool = True
+) -> DataFrame:
+    """``key_cols`` hash exchange; with ``even``, at an EXPLICIT partition
+    count (the session's shuffle.partitions — the same number the bare
+    form starts from).
+
+    A bare ``repartition(*key_cols)`` lets AQE re-coalesce the exchange
+    toward advisoryPartitionSizeInBytes — balancing BYTES. The stages fed
+    by these exchanges cost far more than their bytes suggest, so a
+    byte-targeted merge breaks WAVE balance:
+    * shingle_features' conv_id exchange feeds posexplode + lead-window +
+      collect_list and the Arrow signature kernels (~20x CPU per input
+      byte). On the 5.2M-turn ladder corpus at local-cluster[8,1,10240],
+      AQE merged 16 even buckets into 14 (two double-width): max task ~2x
+      median (38-58 s vs 17-28 s), a ~25 s one-straggler tail with 7 of 8
+      cores idle (BENCH/ladder_r4_subknee.json, scripts/p6_probe.py).
+    * capped_pairs' key exchange satisfies the bucket-size window, and the
+      checkpoint keeps that partitioning, so the SELF-JOIN inherits it
+      exchange-free at a cost quadratic per bucket: AQE's 16 -> 11 uneven
+      merge at local-cluster[8,1] ran max ~2x median (6.7 s vs 3.2 s) on
+      every pair leg (scripts/p7_probe.py).
+    An explicit count is never AQE-coalesced, so the hash buckets stay
+    even and the waves stay full; it is still exactly ONE exchange. Skew
+    handling is unaffected: AQE skew-join operates on join exchanges.
+
+    ``even=False`` keeps the bare form: the wave-balance argument only
+    holds for corpus-sized inputs. A streaming micro-batch is tiny, and
+    pinning shuffle.partitions near-empty tasks onto every checkpointed
+    frame of every trigger is pure scheduling overhead — there AQE's
+    coalesce-to-few is exactly right."""
+    if not even:
+        return df.repartition(*key_cols)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *key_cols)
+
+
 def capped_pairs(
     rows: DataFrame,
     key_cols: list[str],
@@ -156,12 +193,8 @@ def capped_pairs(
     should be re-attached to the (few) emitted pairs via
     operators/verify.attach_pair_payload instead.
 
-    ``even_exchange``: as in neardup._repartition_even — True pins the key
-    exchange at shuffle.partitions so AQE cannot byte-balance-coalesce the
-    quadratic-cost buckets uneven (the corpus-sized wave-balance fix);
-    False keeps the bare key repartition so AQE coalesces-to-few — the
-    right shape for a streaming micro-batch, where pinning hundreds of
-    near-empty tasks onto every trigger is pure scheduling overhead.
+    ``even_exchange``: _repartition_even's ``even`` for the key exchange
+    (True for corpus-sized inputs, False for a streaming micro-batch).
     """
     payload_cols = payload_cols or []
     w = Window.partitionBy(*key_cols)
@@ -171,26 +204,9 @@ def capped_pairs(
     # shuffle over EVERY row re-executes per action (and per self-join
     # side). Only rows in buckets >= 2 survive the filter, so the
     # materialized set is the interesting minority, not the corpus.
-    #
-    # The key exchange is EXPLICIT-N (never AQE-coalesced): the window's
-    # own exchange gets byte-balance-coalesced (16 -> 11 uneven at
-    # local-cluster[8,1], scripts/p7_probe.py), and since the checkpoint
-    # preserves that partitioning, the SELF-JOIN below inherits the uneven
-    # buckets exchange-free — its cost is quadratic per bucket, so the
-    # merged partitions ran max ~2x median (6.7 s vs 3.2 s), a one-task
-    # tail on every pair leg. An explicit count satisfies the window's
-    # required distribution (still exactly ONE exchange) and keeps the
-    # downstream join waves even. Same trap + fix as
-    # operators/neardup._repartition_even.
-    if even_exchange:
-        n_shuffle = int(
-            rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        rows = rows.repartition(n_shuffle, *key_cols)
-    else:
-        rows = rows.repartition(*key_cols)
     sized = (
-        rows.withColumn("bucket_n", F.count("*").over(w))
+        _repartition_even(rows, key_cols, even_exchange)
+        .withColumn("bucket_n", F.count("*").over(w))
         .filter(F.col("bucket_n") >= 2)
         .localCheckpoint(eager=True)
     )

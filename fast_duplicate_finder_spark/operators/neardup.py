@@ -29,40 +29,12 @@ from fast_duplicate_finder_spark.functions.simhash import (
     simhash_udf,
 )
 from fast_duplicate_finder_spark.operators.lsh import (
+    _repartition_even,
     candidate_pairs,
     capped_pairs,
     lsh_band_rows,
 )
 from fast_duplicate_finder_spark.operators.verify import verify_jaccard
-
-
-def _repartition_even(df: DataFrame, even: bool = True) -> DataFrame:
-    """conv_id hash exchange with an EXPLICIT partition count (the session's
-    shuffle.partitions — the same number the bare form starts from).
-
-    ``repartition("conv_id")`` without a count lets AQE re-coalesce the
-    exchange toward advisoryPartitionSizeInBytes — balancing BYTES. The
-    stages fed by this exchange (posexplode + lead-window + collect_list,
-    then the Arrow signature kernels) cost ~20x CPU per input byte, so a
-    byte-targeted merge breaks WAVE balance: measured on the 5.2M-turn
-    ladder corpus at local-cluster[8,1,10240], AQE merged 16 even buckets
-    into 14 (two double-width), making the stage's max task ~2x its median
-    (38-58 s vs 17-28 s) — a ~25 s one-straggler tail with 7 of 8 cores
-    idle, HALF the phase's scaling loss (BENCH/ladder_r4_subknee.json,
-    scripts/p6_probe.py). An explicit count is never AQE-coalesced, so the
-    16 hash buckets stay even (1.01 max/avg byte ratio) and the waves stay
-    full. Skew handling is unaffected: AQE skew-join operates on join
-    exchanges, not this one.
-
-    ``even=False`` keeps the bare form: the wave-balance argument only
-    holds for corpus-sized inputs. A streaming micro-batch is tiny, and
-    pinning shuffle.partitions near-empty tasks onto every checkpointed
-    frame of every trigger is pure scheduling overhead — there AQE's
-    coalesce-to-few is exactly right."""
-    if not even:
-        return df.repartition("conv_id")
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, "conv_id")
 
 
 def shingle_features(
@@ -98,7 +70,7 @@ def shingle_features(
     # (~3-5x corpus bytes of row overhead) for the window and again for
     # the agg, the plan's dominant exchange at 10^12 turns.
     toks = _repartition_even(
-        docs.select("conv_id", "doc"), even=even_exchange
+        docs.select("conv_id", "doc"), ["conv_id"], even_exchange
     ).select(
         "conv_id", F.posexplode_outer(words(F.col("doc"))).alias("pos", "tok")
     )

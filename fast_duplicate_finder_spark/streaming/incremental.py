@@ -7,36 +7,34 @@ results current without reprocessing history.
 As the reference's phases 1-3 repeat one group-by-key step with a new key,
 every leg runs ONE epoch-state step per ``foreachBatch`` micro-batch:
 
-1. key the batch's rows, tag each with its state prefix (``_prefix``) and
-   collect the batch's prefix set on the checkpoint job
-   (``_checkpoint_prefixes``);
-2. read PRIOR state pruned to those prefixes and to epochs other than the
-   current one (``_prior_state``): no full-state scan per micro-batch, and
-   a replayed epoch never sees its own half-write, with no epoch-probe job;
+1. key the batch's rows and materialize them once (``localCheckpoint``);
+2. read PRIOR state, every epoch but the current one (``_prior_state``): a
+   replayed epoch never sees its own half-write, with no epoch-probe job;
 3. near-dup legs cap hot state buckets (``_cap_state``) into counted
    ``is_overflow`` marker rows of the pair log, never silently dropped;
 4. write the pair log, then the state, each a dynamic overwrite of exactly
    the epoch's own partitions (``_write_epoch``), so an at-least-once
    replay, even one that crashed between the writes, is byte-identical.
 
-State tables are parquet partitioned by (epoch_id, prefix); at scale this
-layout is the Iceberg MERGE target. The legs differ in their keys:
+State tables are parquet partitioned by epoch_id alone. A hash-prefix
+sub-partitioning would prune nothing: a batch of more than ~300 distinct
+keys touches all of 64 prefixes, and every prefix multiplies the file
+count. At scale this layout is the Iceberg MERGE target. The legs differ
+in their keys:
 
 * ``run_incremental_dedup`` — exact: xxhash64 of the assembled
-  conversation (prefix ``hp``). State holds one row per first-seen hash,
-  so it is not capped; hashes seen before or repeated in the batch go to
-  the dup log.
+  conversation. State holds one row per first-seen hash, so it is not
+  capped; hashes seen before or repeated in the batch go to the dup log.
 * ``run_incremental_simhash`` — (chunk_id, chunk_val) pigeonhole chunks of
-  the 64-bit SimHash (prefix ``cp``); signatures ride the rows, so the
-  Hamming verify is inline.
-* ``run_incremental_lsh`` — (band_id, band_hash) MinHash bands (prefix
-  ``bp``), verified by exact Jaccard against a second state table of
-  shingle sets keyed by conv id (prefix ``hp``), read pruned to the state
-  convs the candidates name.
-* ``run_incremental_clusters`` — conv id (prefix ``cp``) over a stream of
-  duplicate pairs (any leg's output): an epoch-append-only union-find of
-  ``base`` labels plus a ``merges`` log (prefix ``mp``), with
-  connected_components run over only the touched subgraph.
+  the 64-bit SimHash; signatures ride the rows, so the Hamming verify is
+  inline.
+* ``run_incremental_lsh`` — (band_id, band_hash) MinHash bands, verified
+  by exact Jaccard against a second state table of shingle sets keyed by
+  conv id.
+* ``run_incremental_clusters`` — conv id over a stream of duplicate pairs
+  (any leg's output): an epoch-append-only union-find of ``base`` labels
+  plus a ``merges`` log, with connected_components run over only the
+  touched subgraph.
 * ``sessionize`` — event-time session windows with a watermark; the same
   expression on a batch DataFrame and on a stream.
 
@@ -72,16 +70,29 @@ def stream_transcripts(
     """File-stream source over transcript (or ``schema``-shaped) parquet.
     ``path`` follows Spark's file-source listing rules: a directory of FLAT
     parquet files, or a glob over writer-produced subdirectories
-    (``.../in/*``) — a plain directory whose parquet files sit one level
-    down (each ``df.write.parquet`` makes a subdirectory) streams ZERO
-    rows, silently."""
+    (``.../in/*``). A plain directory whose parquet files sit one level
+    down (each ``df.write.parquet`` makes a subdirectory) would stream
+    ZERO rows, silently, so a local one raises ValueError instead."""
+    if os.path.isdir(path):
+        names = [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+        flat = any(
+            n.endswith(".parquet") and os.path.isfile(os.path.join(path, n))
+            for n in names
+        )
+        nested = [
+            n for n in names
+            if "=" not in n and _has_parts(os.path.join(path, n))
+        ]
+        if nested and not flat:
+            raise ValueError(
+                f"{path!r} holds no parquet file at its top level but its "
+                f"subdirectory {nested[0]!r} does; stream the glob "
+                f"{os.path.join(path, '*')!r} instead"
+            )
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
-
-
-N_STATE_PREFIXES = 64  # hash-prefix partitions of the state table
 
 
 def _has_parts(path: str) -> bool:
@@ -112,39 +123,16 @@ def _has_parts(path: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _prefix(col) -> Column:
-    """State-partition prefix of a 64-bit hash column."""
-    return F.pmod(col, F.lit(N_STATE_PREFIXES)).cast("int")
-
-
-def _checkpoint_prefixes(df: DataFrame, prefix_col: str, *metrics):
-    """(``df`` materialized, Observation of its ``prefix_col`` set and any
-    extra ``metrics``). The prefix list rides the checkpoint job (the
-    connected_components._truncated_counted pattern): per-trigger fixed
-    cost is the stream's latency floor, and a separate distinct+collect
-    job per trigger is pure overhead."""
-    obs = Observation()
-    df = df.observe(
-        obs, F.collect_set(prefix_col).alias("prefixes"), *metrics
-    ).localCheckpoint(eager=True)
-    return df, obs
-
-
 def _prior_state(
-    spark: SparkSession, path: str, epoch_id: int, prefix_col: str, obs
+    spark: SparkSession, path: str, epoch_id: int
 ) -> DataFrame | None:
-    """Prior epochs' rows of the state table at ``path`` whose
-    ``prefix_col`` is among the prefixes ``obs`` collected (a partition
-    filter); ``None`` while the table holds no part file. Excluding the
-    current epoch is the replay contract: a re-run epoch computes its rows
-    from the same prior state, never from its own half-write."""
+    """Prior epochs' rows of the state table at ``path``; ``None`` while
+    the table holds no part file. Excluding the current epoch (a partition
+    filter) is the replay contract: a re-run epoch computes its rows from
+    the same prior state, never from its own half-write."""
     if not _has_parts(path):
         return None
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("epoch_id") != epoch_id)
-        .filter(F.col(prefix_col).isin(sorted(obs.get["prefixes"] or [])))
-    )
+    return spark.read.parquet(path).filter(F.col("epoch_id") != epoch_id)
 
 
 def _overflow_markers(
@@ -202,17 +190,15 @@ def _cross_pairs(matches: DataFrame, metric) -> DataFrame:
     ).withColumn("is_overflow", F.lit(False))
 
 
-def _write_epoch(
-    df: DataFrame, epoch_id: int, path: str, *prefix_cols: str
-) -> None:
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
     """Write ``df`` as epoch ``epoch_id`` of the table at ``path``,
-    partitioned by (epoch_id, *prefix_cols). The dynamic overwrite replaces
-    exactly this epoch's partitions, so a replayed epoch (including one
-    that crashed between its writes) rewrites its rows instead of
-    appending a second copy."""
+    partitioned by epoch_id. The dynamic overwrite replaces exactly this
+    epoch's partition, so a replayed epoch (including one that crashed
+    between its writes) rewrites its rows instead of appending a second
+    copy."""
     df.withColumn("epoch_id", F.lit(epoch_id)).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
-    ).partitionBy("epoch_id", *prefix_cols).parquet(path)
+    ).partitionBy("epoch_id").parquet(path)
 
 
 def _leg_dirs(work_dir: str, *names: str) -> list[str]:
@@ -247,17 +233,16 @@ def _dedup_batch(
     batch: DataFrame, epoch_id: int, state_dir: str, dups_dir: str
 ) -> None:
     """One micro-batch: assemble -> hash -> split into (seen = duplicate,
-    unseen = new state). Runs on the executors; only paths and the batch's
-    (tiny, <= N_STATE_PREFIXES) prefix list touch the driver."""
+    unseen = new state). Runs on the executors; only paths touch the
+    driver."""
     spark = batch.sparkSession
-    hashed, obs = _checkpoint_prefixes(
+    hashed = (
         assemble_conversations(batch)
         .select("conv_id", F.xxhash64("doc").alias("fhash"), "size")
-        .withColumn("hp", _prefix("fhash")),
-        "hp",
-    )  # reused by prefix scan + two joins
+        .localCheckpoint(eager=True)
+    )  # reused by two joins
     state_data = os.path.join(state_dir, "data")
-    seen = _prior_state(spark, state_data, epoch_id, "hp", obs)
+    seen = _prior_state(spark, state_data, epoch_id)
     new_rows = (
         hashed.join(seen.select("fhash"), "fhash", "left_anti")
         if seen is not None
@@ -274,7 +259,7 @@ def _dedup_batch(
                 seen.select("fhash", F.col("conv_id").alias("first_conv_id")),
                 "fhash",
             )
-            .select("conv_id", "fhash", "size", "hp", "first_conv_id")
+            .select("conv_id", "fhash", "size", "first_conv_id")
             .unionByName(dups)
         )
     _write_epoch(
@@ -284,10 +269,7 @@ def _dedup_batch(
     )
     firsts = tagged.filter(F.col("conv_id") == F.col("first_conv_id"))
     _write_epoch(
-        firsts.select("fhash", "conv_id", "size", "hp"),
-        epoch_id,
-        state_data,
-        "hp",
+        firsts.select("fhash", "conv_id", "size"), epoch_id, state_data
     )
 
 
@@ -337,23 +319,20 @@ def read_dup_log(spark: SparkSession, work_dir: str) -> DataFrame:
 
 
 def sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
+    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:
-    """Event-time session windows per user. Works on batch and streaming
-    DataFrames alike; on a stream the watermark bounds session state."""
+    """Event-time session windows per ``user_id`` over ``ts``. Works on
+    batch and streaming DataFrames alike; on a stream the watermark bounds
+    session state."""
     e = events
     if e.isStreaming:
-        e = e.withWatermark(ts_col, watermark)
+        e = e.withWatermark("ts", watermark)
     return e.groupBy(
-        F.col(user_col), F.session_window(F.col(ts_col), gap).alias("session")
+        "user_id", F.session_window("ts", gap).alias("session")
     ).agg(
         F.count("*").alias("n_events"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
     )
 
 
@@ -374,7 +353,7 @@ def _simhash_batch_fn(
 
     State is the EXPLODED pigeonhole index: one row per (chunk_id,
     chunk_val) of every conversation's 64-bit signature, partitioned by
-    (epoch_id, cp = chunk_val % N_STATE_PREFIXES).
+    epoch_id.
 
     Pairs per batch = (new x new) through the shared capped+salted
     generator (simhash_candidate_pairs, signatures riding as payload) +
@@ -402,16 +381,13 @@ def _simhash_batch_fn(
         .localCheckpoint(eager=True)  # feeds chunks + intra-batch self-join
     )
     n_chunks = cfg.simhash_hamming + 1
-    chunks, cp_obs = _checkpoint_prefixes(
-        sims.select(
-            "conv_id",
-            "simhash",
-            F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
-                "chunk_id", "chunk_val"
-            ),
-        ).withColumn("cp", _prefix("chunk_val")),
-        "cp",
-    )
+    chunks = sims.select(
+        "conv_id",
+        "simhash",
+        F.posexplode(simhash_chunks(F.col("simhash"), n_chunks)).alias(
+            "chunk_id", "chunk_val"
+        ),
+    ).localCheckpoint(eager=True)  # state join + state write
 
     intra, intra_ovf = simhash_candidate_pairs(
         sims,
@@ -433,7 +409,7 @@ def _simhash_batch_fn(
         )
     )
     state_data = os.path.join(state_dir, "data")
-    state = _prior_state(spark, state_data, epoch_id, "cp", cp_obs)
+    state = _prior_state(spark, state_data, epoch_id)
     if state is not None:
         kept, hot = _cap_state(
             state, ["chunk_id", "chunk_val"], cfg.max_band_bucket
@@ -449,7 +425,7 @@ def _simhash_batch_fn(
         ).filter(F.col("hamming") <= cfg.simhash_hamming)
         pairs = pairs.unionByName(cross).unionByName(state_markers)
     _write_epoch(pairs.distinct(), epoch_id, os.path.join(pairs_dir, "data"))
-    _write_epoch(chunks, epoch_id, state_data, "cp")
+    _write_epoch(chunks, epoch_id, state_data)
 
 
 def run_incremental_simhash(
@@ -502,15 +478,12 @@ def _lsh_batch_fn(
     signatures ride the join rows). Two state tables:
 
     * ``bands/data`` — (conv_id, band_id, band_hash) rows partitioned by
-      (epoch_id, bp = band_hash % N_STATE_PREFIXES): candidate generation;
-      the per-batch read is pruned to the batch's own band prefixes.
-    * ``feats/data`` — (conv_id, shset) partitioned by (epoch_id,
-      hp = xxhash64(conv_id) % N_STATE_PREFIXES): exact-Jaccard verify
-      payload. hp is DERIVABLE FROM THE ID, so the verify read is pruned
-      to the prefixes of exactly the state conversations named by the
-      surviving candidates — shingle sets are too wide to carry through
-      the band join (the measured width rule, PLANS.md), and this layout
-      reads back only the needed slice instead of the whole history.
+      epoch_id: candidate generation.
+    * ``feats/data`` — (conv_id, shset) partitioned by epoch_id: the
+      exact-Jaccard verify payload, joined to the candidates that survive
+      the capped band join by the state member's conv id — shingle sets
+      are too wide to carry through the band join (the measured width
+      rule, PLANS.md).
 
     Intra-batch pairs go through `operators/neardup.minhash_pairs`'s exact
     path (capped+salted band join, array_intersect verify); cross-batch
@@ -541,10 +514,8 @@ def _lsh_batch_fn(
     )
     mh = make_minhash_udf(cfg.lsh_perms_used, cfg.minhash_seed)
     sigs = feats.select("conv_id", mh("shset").alias("minhash"))
-    bands, bp_obs = _checkpoint_prefixes(
-        lsh_band_rows(sigs, cfg).withColumn("bp", _prefix("band_hash")),
-        "bp",
-    )  # self-join + state join + state write
+    # feeds the self-join, the state join and the state write
+    bands = lsh_band_rows(sigs, cfg).localCheckpoint(eager=True)
 
     cands, overflow = candidate_pairs(
         bands, cfg, even_exchange=False  # micro-batch: AQE coalesce-to-few
@@ -566,7 +537,7 @@ def _lsh_batch_fn(
     # wedge the stream forever. With only this epoch's (excluded) rows in
     # bands state, skipping the cross path loses nothing.
     sbands = (
-        _prior_state(spark, bands_data, epoch_id, "bp", bp_obs)
+        _prior_state(spark, bands_data, epoch_id)
         if _has_parts(feats_data)
         else None
     )
@@ -577,13 +548,13 @@ def _lsh_batch_fn(
         state_markers = _overflow_markers(
             hot, "band_id", "state_band_", F.count("*").cast("double"), "jaccard"
         )
-        cross_cand, hp_obs = _checkpoint_prefixes(
+        cross_cand = (
             _state_matches(kept, bands, ["band_id", "band_hash"])
-            .select("sc", "bc", _prefix(F.xxhash64("sc")).alias("hp"))
-            .distinct(),
-            "hp",
-        )  # feeds verify join (both sides)
-        sfeats = _prior_state(spark, feats_data, epoch_id, "hp", hp_obs)
+            .select("sc", "bc")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )  # few rows: sizes the two verify joins
+        sfeats = _prior_state(spark, feats_data, epoch_id)
         # two payload joins, unlike verify_jaccard's one payload table: the
         # state member's set comes from state, the batch member's from the
         # batch
@@ -610,13 +581,8 @@ def _lsh_batch_fn(
         ).unionByName(state_markers)
 
     _write_epoch(pairs.distinct(), epoch_id, os.path.join(pairs_dir, "data"))
-    _write_epoch(bands, epoch_id, bands_data, "bp")
-    _write_epoch(
-        feats.withColumn("hp", _prefix(F.xxhash64("conv_id"))),
-        epoch_id,
-        feats_data,
-        "hp",
-    )
+    _write_epoch(bands, epoch_id, bands_data)
+    _write_epoch(feats, epoch_id, feats_data)
 
 
 def run_incremental_lsh(
@@ -681,60 +647,6 @@ def _follow_merges(
     )
 
 
-def _resolve_labels(
-    spark: SparkSession,
-    merges_data: str,
-    labels: DataFrame,
-    epoch_id: int,
-    prune_rounds: int = 4,
-) -> DataFrame:
-    """Follow the merge DAG from ``labels.label`` to each current root.
-
-    Every stored merge edge pointed at the merging epoch's then-current
-    root, so a label's chase length equals the number of LATER epochs that
-    re-merged its component. Two regimes:
-
-    * COMMON (chase depth ≤ ``prune_rounds``, i.e. recently compacted or
-      rarely re-merged): per-hop merge-log reads pruned to the mp prefixes
-      of the touched labels (the same partition-filter discipline as every
-      other state read), one hop per round;
-    * DEEP (long-lived stream, no compaction): after ``prune_rounds``
-      pruned hops, fall back to ONE full-log compressed map
-      (_compressed_merge_map: path doubling, log2(depth) rounds over the
-      small one-row-per-dethroned-root log) and join it once — resolution
-      therefore never fails on chase depth, no matter how many epochs have
-      re-merged a hot component. compact_cluster_state resets the depth
-      (and the fallback's full-log read cost) to zero.
-
-    Label order strictly decreases along every edge (roots are component
-    minima), so the DAG is acyclic and both regimes terminate.
-    """
-    if not _has_parts(merges_data):
-        return labels
-    for _ in range(prune_rounds):
-        cur, obs = _checkpoint_prefixes(
-            labels.withColumn("mp", _prefix(F.xxhash64("label"))), "mp"
-        )
-        step = (
-            _prior_state(spark, merges_data, epoch_id, "mp", obs)
-            if obs.get["prefixes"]
-            else None
-        )
-        if step is None:
-            return cur.drop("mp")
-        hop = Observation()
-        labels = _follow_merges(cur.drop("mp"), "label", step, hop)
-        if not int(hop.get["hits"] or 0):
-            return labels
-    # deep chain: one full-log path-doubled map resolves every label in a
-    # single join (the map sends any dethroned root to its FINAL root, so
-    # partially-advanced labels finish in one hop)
-    m = _compressed_merge_map(spark, merges_data, exclude_epoch=epoch_id)
-    if m is None:  # raced a compaction's log removal: labels are current
-        return labels
-    return _follow_merges(labels, "label", m)
-
-
 def _clusters_batch(
     batch: DataFrame, epoch_id: int, base_dir: str, merges_dir: str
 ) -> None:
@@ -743,22 +655,20 @@ def _clusters_batch(
 
     State is an epoch-append-only union-find:
 
-    * ``base`` (conv_id, label, epoch_id, cp) — each conv's label at FIRST
-      sight (the component minimum at that time), partitioned by
-      (epoch_id, conv-id prefix);
-    * ``merges`` (label_from, label_to, epoch_id, mp) — one edge per
+    * ``base`` (conv_id, label, epoch_id) — each conv's label at FIRST
+      sight (the component minimum at that time);
+    * ``merges`` (label_from, label_to, epoch_id) — one edge per
       component whose minimum dropped when batches connected it to a
-      smaller id, partitioned by (epoch_id, label_from prefix). Edges
-      always point old-root -> new-root, so current labels are the merge
-      DAG's closure over base labels.
+      smaller id. Edges always point old-root -> new-root, so current
+      labels are the merge DAG's closure over base labels.
 
-    Per batch: resolve the touched convs' current roots (prefix-pruned
-    reads), run the EXISTING connected_components operator over just the
-    touched subgraph — the batch's pairs plus one (conv -> current root)
-    edge per known conv, so each current root stands in for its entire
-    membership and merging relabels every member transitively — then
-    append base rows for first-seen convs and merge edges for dethroned
-    roots.
+    Per batch: resolve the touched convs' current roots (_resolve_labels
+    over the prior epochs' merges), run the EXISTING connected_components
+    operator over just the touched subgraph — the batch's pairs plus one
+    (conv -> current root) edge per known conv, so each current root
+    stands in for its entire membership and merging relabels every member
+    transitively — then append base rows for first-seen convs and merge
+    edges for dethroned roots.
     """
     from fast_duplicate_finder_spark.operators.connected_components import (
         connected_components,
@@ -779,28 +689,26 @@ def _clusters_batch(
         .filter(F.col("conv_id_a") != F.col("conv_id_b"))
         .distinct()
     )
-    ids, obs = _checkpoint_prefixes(
+    obs = Observation()
+    ids = (
         pairs.select(F.col("conv_id_a").alias("conv_id"))
         .union(pairs.select(F.col("conv_id_b")))
         .distinct()
-        .withColumn("cp", _prefix(F.xxhash64("conv_id"))),
-        "cp",
-        F.count(F.lit(1)).alias("n"),
-    )  # prefix list + known split + CC input
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )  # known split + CC input
     if not int(obs.get["n"] or 0):
         return  # marker-only/empty batch: nothing to write
     base_data = os.path.join(base_dir, "data")
     merges_data = os.path.join(merges_dir, "data")
-    known = _prior_state(spark, base_data, epoch_id, "cp", obs)
+    known = _prior_state(spark, base_data, epoch_id)
     edges = pairs
     if known is not None:
         known = _resolve_labels(
             spark,
             merges_data,
-            known.select("conv_id", "label").join(
-                ids.select("conv_id"), "conv_id"
-            ),
-            epoch_id,
+            known.select("conv_id", "label").join(ids, "conv_id"),
+            exclude_epoch=epoch_id,
         ).localCheckpoint(eager=True)  # edges + merge rows + anti-join
         edges = edges.unionByName(
             known.filter(F.col("conv_id") != F.col("label")).select(
@@ -815,9 +723,9 @@ def _clusters_batch(
         else ids
     )
     base_new = new_ids.join(comp, "conv_id").select(
-        "conv_id", F.col("component").alias("label"), "cp"
+        "conv_id", F.col("component").alias("label")
     )
-    _write_epoch(base_new, epoch_id, base_data, "cp")
+    _write_epoch(base_new, epoch_id, base_data)
     if known is not None:
         merges_new = (
             known.select(F.col("label").alias("label_from"))
@@ -830,9 +738,8 @@ def _clusters_batch(
                 "label_from",
             )
             .filter(F.col("label_from") != F.col("label_to"))
-            .withColumn("mp", _prefix(F.xxhash64("label_from")))
         )
-        _write_epoch(merges_new, epoch_id, merges_data, "mp")
+        _write_epoch(merges_new, epoch_id, merges_data)
 
 
 def run_incremental_clusters(
@@ -874,9 +781,7 @@ def _compressed_merge_map(
     path-doubling over the whole merge DAG — both join sides compress each
     round, so chase depth halves per round and ``max_rounds=20`` covers
     chains ~10^6 deep. Small table (one row per dethroned root), joined
-    exactly once against ``base`` (read_cluster_labels) or a batch's known
-    labels (_resolve_labels' deep-chain fallback, which passes
-    ``exclude_epoch`` so a replayed epoch never reads its own rows)."""
+    exactly once by _resolve_labels."""
     if not _has_parts(merges_data):
         return None
     m = spark.read.parquet(merges_data)
@@ -894,6 +799,23 @@ def _compressed_merge_map(
     )
 
 
+def _resolve_labels(
+    spark: SparkSession,
+    merges_data: str,
+    labels: DataFrame,
+    exclude_epoch: int | None = None,
+) -> DataFrame:
+    """``labels`` with each ``label`` moved to its component's current
+    root: one join against the path-doubled merge map, so resolution never
+    fails on chase depth, however many later epochs re-merged a hot
+    component. A batch passes its own ``exclude_epoch`` (the replay
+    contract); a missing log (none yet, or removed by a compaction) means
+    the labels are current. Label order strictly decreases along every
+    merge edge (roots are component minima), so the DAG is acyclic."""
+    m = _compressed_merge_map(spark, merges_data, exclude_epoch=exclude_epoch)
+    return labels if m is None else _follow_merges(labels, "label", m)
+
+
 def read_cluster_labels(spark: SparkSession, work_dir: str) -> DataFrame:
     """(conv_id, label) for every conv that ever appeared in a pair; label
     is the component's minimum conv_id — exactly connected_components'
@@ -904,11 +826,11 @@ def read_cluster_labels(spark: SparkSession, work_dir: str) -> DataFrame:
     base_data = os.path.join(work_dir, "base", "data")
     if not _has_parts(base_data):
         return spark.createDataFrame([], CLUSTER_LABEL_SCHEMA)
-    labels = spark.read.parquet(base_data).select("conv_id", "label")
-    m = _compressed_merge_map(
-        spark, os.path.join(work_dir, "merges", "data")
+    return _resolve_labels(
+        spark,
+        os.path.join(work_dir, "merges", "data"),
+        spark.read.parquet(base_data).select("conv_id", "label"),
     )
-    return labels if m is None else _follow_merges(labels, "label", m)
 
 
 # ---------------------------------------------------------------------------
@@ -973,14 +895,11 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     base_data = os.path.join(work_dir, "base", "data")
 
     def write_rewrite(tmp: str) -> bool:
-        resolved = read_cluster_labels(spark, work_dir).withColumn(
-            "cp", _prefix(F.xxhash64("conv_id"))
-        )
         # a plain overwrite, not _write_epoch: a dynamic-overwrite write
         # leaves no _SUCCESS marker, and the swap reads completion from it
-        resolved.withColumn("epoch_id", F.lit(COMPACTED_EPOCH)).write.mode(
-            "overwrite"
-        ).partitionBy("epoch_id", "cp").parquet(tmp)
+        read_cluster_labels(spark, work_dir).withColumn(
+            "epoch_id", F.lit(COMPACTED_EPOCH)
+        ).write.mode("overwrite").partitionBy("epoch_id").parquet(tmp)
         return True
 
     _crash_safe_swap(
@@ -992,20 +911,16 @@ def compact_cluster_state(spark: SparkSession, work_dir: str) -> None:
     )
 
 
-def _fold_epoch_partitions(
-    spark: SparkSession, data_path: str, partition_cols: list[str]
-) -> None:
+def _fold_epoch_partitions(spark: SparkSession, data_path: str) -> None:
     """Rewrite an epoch-partitioned state table under the single reserved
-    epoch ``COMPACTED_EPOCH``, preserving every row and the secondary
-    prefix partitioning.
+    epoch ``COMPACTED_EPOCH``, preserving every row.
 
-    Why: prefix pruning bounds the BYTES each micro-batch reads, but not
-    the file/partition COUNT — every epoch's dynamic-overwrite adds one
-    ``epoch_id=K`` directory (times N_STATE_PREFIXES prefix subdirs), so a
-    long-lived stream (10^5 epochs) degrades every state read's listing
-    and planning even though the data volume is flat. Folding resets the
-    directory count to N_STATE_PREFIXES + 1 without changing a single row:
-    the per-batch readers filter ``epoch_id != current`` and
+    Why: every epoch's dynamic overwrite adds one ``epoch_id=K`` directory
+    of part files, so a long-lived stream (10^5 epochs) degrades every
+    state read's listing and planning even though the data volume is
+    flat. Folding leaves one directory holding one part file per read task
+    (Spark packs the small files into a few splits) without changing a
+    single row: the per-batch readers filter ``epoch_id != current`` and
     ``COMPACTED_EPOCH`` (-2) is never a real epoch id, so folded rows are
     always read back as prior state. The parquet analogue of Iceberg's
     rewrite_data_files maintenance, same as compact_cluster_state.
@@ -1019,21 +934,9 @@ def _fold_epoch_partitions(
         ]
         if visible == [f"epoch_id={COMPACTED_EPOCH}"]:
             return False  # already compacted
-        folded = (
-            spark.read.parquet(data_path)
-            .drop("epoch_id")
-            .withColumn("epoch_id", F.lit(COMPACTED_EPOCH))
-            # one task -> one part file per (epoch, prefix) directory: the
-            # point of compaction is FILE count, not just directory count —
-            # without this the fold preserves the read's task parallelism
-            # and leaves ~N_epochs small files inside each folded prefix
-            # dir. The prefix IS a hash slice, so the shuffle is even by
-            # construction.
-            .repartition("epoch_id", *partition_cols)
-        )
-        folded.write.mode("overwrite").partitionBy(
-            "epoch_id", *partition_cols
-        ).parquet(tmp)
+        spark.read.parquet(data_path).withColumn(
+            "epoch_id", F.lit(COMPACTED_EPOCH)
+        ).write.mode("overwrite").partitionBy("epoch_id").parquet(tmp)
         return True
 
     _crash_safe_swap(data_path, write_rewrite)
@@ -1096,45 +999,39 @@ def _crash_safe_swap(
 
 
 def compact_dedup_state(spark: SparkSession, work_dir: str) -> None:
-    """Fold the exact leg's seen-hash state (``state/data``, partitioned by
-    (epoch_id, hp)) into the reserved ``COMPACTED_EPOCH``. Raises unless
-    the stream is quiesced (_require_quiesced): for this leg a folded
-    half-write would have the replayed convs join against their own hashes
-    and be logged as duplicates of themselves."""
+    """Fold the exact leg's seen-hash state (``state/data``) into the
+    reserved ``COMPACTED_EPOCH``. Raises unless the stream is quiesced
+    (_require_quiesced): for this leg a folded half-write would have the
+    replayed convs join against their own hashes and be logged as
+    duplicates of themselves."""
     _require_quiesced(work_dir, "_stream_checkpoint")
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "state", "data"), ["hp"]
-    )
+    _fold_epoch_partitions(spark, os.path.join(work_dir, "state", "data"))
 
 
 def compact_simhash_state(spark: SparkSession, work_dir: str) -> None:
     """Fold the SimHash leg's exploded chunk-index state
-    (``sim_state/data``, partitioned by (epoch_id, cp)) into the reserved
-    ``COMPACTED_EPOCH``. Quiesce contract as compact_dedup_state; a folded
-    half-write would hand a replayed epoch its own chunks as prior state
-    (self-pairs are filtered by the ``sc != bc`` guard, but the epoch's
-    pair set would stop being byte-identical under replay)."""
+    (``sim_state/data``) into the reserved ``COMPACTED_EPOCH``. Quiesce
+    contract as compact_dedup_state; a folded half-write would hand a
+    replayed epoch its own chunks as prior state (self-pairs are filtered
+    by the ``sc != bc`` guard, but the epoch's pair set would stop being
+    byte-identical under replay)."""
     _require_quiesced(work_dir, "_simhash_stream_checkpoint")
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "sim_state", "data"), ["cp"]
-    )
+    _fold_epoch_partitions(spark, os.path.join(work_dir, "sim_state", "data"))
 
 
 def compact_lsh_state(spark: SparkSession, work_dir: str) -> None:
     """Fold BOTH of the LSH leg's state tables — ``lsh_state/bands/data``
-    (epoch_id, bp) and ``lsh_state/feats/data`` (epoch_id, hp) — into the
-    reserved ``COMPACTED_EPOCH``. Quiesce contract as compact_dedup_state.
+    and ``lsh_state/feats/data`` — into the reserved ``COMPACTED_EPOCH``.
+    Quiesce contract as compact_dedup_state.
 
     Two tables, one call: each folds independently through the same
     crash-safe rename dance, and a crash BETWEEN them (bands compacted,
     feats not) is consistent by construction — folding changes no row, so
-    the band-state join and the named-slice feats read see exactly the
-    rows they saw before; the next call finishes the feats fold (and
-    no-ops on bands)."""
+    the band-state join and the feats verify join see exactly the rows
+    they saw before; the next call finishes the feats fold (and no-ops on
+    bands)."""
     _require_quiesced(work_dir, "_lsh_stream_checkpoint")
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "lsh_state", "bands", "data"), ["bp"]
-    )
-    _fold_epoch_partitions(
-        spark, os.path.join(work_dir, "lsh_state", "feats", "data"), ["hp"]
-    )
+    for table in ("bands", "feats"):
+        _fold_epoch_partitions(
+            spark, os.path.join(work_dir, "lsh_state", table, "data")
+        )

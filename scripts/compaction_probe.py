@@ -4,14 +4,14 @@
 Drives the exact leg's `_dedup_batch` directly for N epochs (the stream's
 own per-batch function, minus StreamingQuery trigger overhead — this probe
 measures STATE layout cost, not trigger latency), leaving the seen-hash
-state with one `epoch_id=K` directory (x N_STATE_PREFIXES prefix subdirs)
-per epoch. Then measures the per-batch pruned state read — listing +
-planning + scan of an 8-prefix slice, the read every micro-batch performs —
-before and after `compact_dedup_state`, plus raw directory/file counts.
+state with one `epoch_id=K` directory per epoch. Then measures the state
+read every micro-batch performs — listing + planning + scan of all prior
+epochs (`_prior_state`) — before and after `compact_dedup_state`, plus raw
+directory/file counts.
 
-The claim under test: prefix pruning bounds BYTES per read, but partition
-COUNT grows with stream lifetime and degrades listing/planning; compaction
-folds it back to a single reserved epoch with zero row changes.
+The claim under test: partition and file COUNT grow with stream lifetime
+and degrade listing/planning even at flat data volume; compaction folds
+them back to a single reserved epoch with zero row changes.
 
     python scripts/compaction_probe.py --epochs 100 --convs-per-epoch 400
 """
@@ -94,18 +94,13 @@ def main() -> int:
     build_wall = time.perf_counter() - t0
 
     def timed_state_read() -> tuple[float, int]:
-        """min wall of the per-batch pruned read shape: fresh DataFrame per
-        rep (planning + file listing included, which is the point)."""
+        """min wall of the per-batch state read (every epoch but a future
+        one): fresh DataFrame per rep (planning + file listing included,
+        which is the point)."""
         best = float("inf")
-        prefixes = list(range(8))  # a typical small batch's prefix slice
         for _ in range(args.reads):
             r0 = time.perf_counter()
-            n = (
-                spark.read.parquet(state_data)
-                .filter(F.col("epoch_id") != F.lit(10**9))
-                .filter(F.col("hp").isin(prefixes))
-                .count()
-            )
+            n = inc._prior_state(spark, state_data, 10**9).count()
             best = min(best, time.perf_counter() - r0)
         return best, n
 
@@ -154,16 +149,16 @@ def main() -> int:
         "before": {
             "partition_dirs": dirs_before,
             "part_files": files_before,
-            "pruned_read_min_sec": round(read_before, 3),
+            "state_read_min_sec": round(read_before, 3),
         },
         "after": {
             "partition_dirs": dirs_after,
             "part_files": files_after,
-            "pruned_read_min_sec": round(read_after, 3),
+            "state_read_min_sec": round(read_after, 3),
         },
         "read_speedup": round(read_before / read_after, 2),
         "compact_wall_sec": round(compact_wall, 1),
-        "state_rows_slice": rows_after,
+        "state_rows": rows_after,
         "dup_rows_before": dup_rows_before,
         "dup_rows_after_post_epoch": dup_rows_post,
     }

@@ -2,7 +2,7 @@
 """Per-stage scaling probe for the p7 pair legs + p8 clustering, reading
 the p6_features checkpoint scripts/p6_probe.py leaves behind. Same
 busy-core + task-summary instrumentation; locates AQE merge-skew
-stragglers (see operators/neardup._repartition_even) in the band-join
+stragglers (see operators/lsh._repartition_even) in the band-join
 exchanges.
 
     python scripts/p7_probe.py --master 'local-cluster[8,1,10240]'

@@ -8,7 +8,7 @@ Writes the planted corpus as K parquet files, streams them with
 per-batch latency, and turns/s to BENCH/stream_r4.json.
 
 ``--even-exchange`` A/Bs the micro-batch exchange decision
-(operators/neardup._repartition_even ``even=False`` on the stream path):
+(operators/lsh._repartition_even ``even=False`` on the stream path):
 it monkeypatches shingle_features back to the pinned-width form so the
 cost of shuffle.partitions near-empty tasks per checkpointed frame per
 trigger is measured, not asserted.

@@ -5,6 +5,7 @@ sessionizer; the stream itself runs end to end with availableNow."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -15,6 +16,7 @@ from fast_duplicate_finder_spark.streaming.incremental import (
     read_dup_log,
     run_incremental_dedup,
     sessionize,
+    stream_transcripts,
 )
 
 
@@ -42,6 +44,26 @@ def corpus_dir(spark, tmp_path_factory):
                 os.rename(base / sub / f, flat / f"part{i}.parquet")
                 i += 1
     return str(flat)
+
+
+def test_stream_transcripts_rejects_parquet_one_level_down(spark, tmp_path):
+    """A plain directory whose parquet sits one level down (what
+    ``df.write.parquet`` makes) would stream zero rows: fail fast, naming
+    the glob. The glob itself, key=value partition directories and empty
+    directories still open as streams."""
+    nested = tmp_path / "nested"
+    spark.range(3).write.parquet(str(nested / "w1"))
+    glob = os.path.join(str(nested), "*")
+    with pytest.raises(ValueError, match=re.escape(repr(glob))):
+        stream_transcripts(spark, str(nested))
+    parted = tmp_path / "parted"
+    spark.range(3).withColumn("k", F.lit(1)).write.partitionBy("k").parquet(
+        str(parted)
+    )
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (glob, str(parted), str(empty)):
+        assert stream_transcripts(spark, path).isStreaming
 
 
 def _batch_expected_dups(spark, corpus_dir):
@@ -138,13 +160,25 @@ def test_sessionize_streaming_runs(spark, tmp_path):
     assert 0 <= emitted <= batch_n
 
 
+def _epoch_dirs_hold_only_parts(state_path):
+    """Every ``epoch_id=K`` directory of a state table holds part files and
+    no sub-directory (the table is partitioned by epoch_id alone)."""
+    epochs = [d for d in os.listdir(state_path) if d.startswith("epoch_id=")]
+    assert epochs
+    for d in epochs:
+        names = os.listdir(os.path.join(state_path, d))
+        assert any(n.startswith("part-") for n in names)
+        assert not any(
+            os.path.isdir(os.path.join(state_path, d, n)) for n in names
+        )
+
+
 def test_state_partitioned_by_prefix_and_replay_idempotent(spark, tmp_path):
-    """Round-3: state layout is (epoch_id, hp) partitions (docstring and
-    code agree); an at-least-once replay of the SAME epoch — including the
+    """Round-3: state is partitioned by epoch_id alone (docstring and code
+    agree); an at-least-once replay of the SAME epoch — including the
     crash-between-writes window — leaves state and dup log byte-identical,
     with no epoch-probe job."""
     from fast_duplicate_finder_spark.streaming.incremental import (
-        N_STATE_PREFIXES,
         _dedup_batch,
     )
 
@@ -158,10 +192,7 @@ def test_state_partitioned_by_prefix_and_replay_idempotent(spark, tmp_path):
     _dedup_batch(b2, 1, sd, dd)
 
     state_path = os.path.join(sd, "data")
-    top = set(os.listdir(state_path))
-    assert any(d.startswith("epoch_id=") for d in top)  # layout: epoch dirs
-    ep0 = os.path.join(state_path, "epoch_id=0")
-    assert any(d.startswith("hp=") for d in os.listdir(ep0))  # hash-prefix dirs
+    _epoch_dirs_hold_only_parts(state_path)
 
     state1 = sorted(
         tuple(r) for r in spark.read.parquet(state_path).collect()
@@ -182,10 +213,6 @@ def test_state_partitioned_by_prefix_and_replay_idempotent(spark, tmp_path):
     )
     assert state1 == state2
     assert dups1 == dups2
-    hps = {
-        r["hp"] for r in spark.read.parquet(state_path).select("hp").collect()
-    }
-    assert hps <= set(range(N_STATE_PREFIXES))
 
 
 def _one_turn_rows(docs: dict[str, str]):
@@ -282,7 +309,7 @@ def test_incremental_simhash_replay_idempotent_and_partitioned(
 ):
     """An at-least-once replay of the SAME epoch leaves the pair log and
     the exploded pigeonhole state byte-identical, and the state lands in
-    (epoch_id, cp) partitions."""
+    epoch_id partitions."""
     import os as _os
 
     from fast_duplicate_finder_spark.config import PipelineConfig
@@ -304,11 +331,7 @@ def test_incremental_simhash_replay_idempotent_and_partitioned(
     _simhash_batch_fn(b2, 1, sd, pd_, cfg)
 
     state_path = _os.path.join(sd, "data")
-    assert any(
-        d.startswith("epoch_id=") for d in _os.listdir(state_path)
-    )
-    ep0 = _os.path.join(state_path, "epoch_id=0")
-    assert any(d.startswith("cp=") for d in _os.listdir(ep0))
+    _epoch_dirs_hold_only_parts(state_path)
 
     state1 = sorted(tuple(r) for r in spark.read.parquet(state_path).collect())
     pairs1 = sorted(
@@ -401,7 +424,7 @@ def test_incremental_lsh_matches_batch(spark, tmp_path):
 def test_incremental_lsh_replay_idempotent_and_partitioned(spark, tmp_path):
     """Replaying an epoch of the LSH stream leaves pair log, band state
     and feature state byte-identical; both state tables land in their
-    documented (epoch_id, prefix) partitions."""
+    documented epoch_id partitions."""
     import os as _os
 
     from fast_duplicate_finder_spark.config import PipelineConfig
@@ -426,14 +449,8 @@ def test_incremental_lsh_replay_idempotent_and_partitioned(spark, tmp_path):
 
     bands_path = _os.path.join(sd, "bands", "data")
     feats_path = _os.path.join(sd, "feats", "data")
-    assert any(
-        d.startswith("bp=")
-        for d in _os.listdir(_os.path.join(bands_path, "epoch_id=0"))
-    )
-    assert any(
-        d.startswith("hp=")
-        for d in _os.listdir(_os.path.join(feats_path, "epoch_id=0"))
-    )
+    _epoch_dirs_hold_only_parts(bands_path)
+    _epoch_dirs_hold_only_parts(feats_path)
 
     def snap():
         return (
@@ -960,10 +977,9 @@ def test_compact_cluster_state(spark, tmp_path):
     # label_from values are dethroned roots absent from base, so the
     # closure join must match nothing
     stale = spark.createDataFrame(
-        [("w", "q", 2, hash("w") % 1)], "label_from string, label_to string, "
-        "epoch_id int, mp int"
+        [("w", "q", 2)], "label_from string, label_to string, epoch_id int"
     )
-    stale.write.mode("overwrite").partitionBy("epoch_id", "mp").parquet(
+    stale.write.mode("overwrite").partitionBy("epoch_id").parquet(
         os.path.join(md, "data")
     )
     assert labels() == before
@@ -993,11 +1009,11 @@ def test_compact_cluster_state(spark, tmp_path):
 
 
 def test_deep_merge_chain_resolves_via_compressed_fallback(spark, tmp_path):
-    """A chase deeper than _resolve_labels' pruned hops (prune_rounds=4)
-    must fall back to the path-doubled full-log map instead of wedging the
-    stream: 9 epochs each dethrone the root with a smaller conv (an 8-hop
-    chain c8->c7->...->c0), then a batch touches the chain's tail conv
-    whose base label needs the full chase."""
+    """A deep merge chain resolves through the one path-doubled merge map
+    (_resolve_labels) instead of wedging the stream: 9 epochs each dethrone
+    the root with a smaller conv (an 8-hop chain c8->c7->...->c0), then a
+    batch touches the chain's tail conv whose base label needs the full
+    chase."""
     from fast_duplicate_finder_spark.streaming.incremental import (
         _clusters_batch,
         read_cluster_labels,
@@ -1013,7 +1029,7 @@ def test_deep_merge_chain_resolves_via_compressed_fallback(spark, tmp_path):
     _clusters_batch(df([("c9", "c8")]), 0, bd, md)  # base: c9 -> c8
     for i in range(1, 9):  # epoch i dethrones c{9-i} with c{8-i}
         _clusters_batch(df([(f"c{8 - i}", f"c{9 - i}")]), i, bd, md)
-    # epoch 9: c9's base label c8 now chases 8 hops > prune_rounds
+    # epoch 9: c9's base label c8 now chases 8 hops
     _clusters_batch(df([("c9", "d0")]), 9, bd, md)
     labels = {
         (r["conv_id"], r["label"])
