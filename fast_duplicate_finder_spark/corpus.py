@@ -133,7 +133,6 @@ def generate_transcripts(
     n_convs: int = 500,
     seed: int = 42,
     max_turns: int = 12,
-    shuffle_rows: bool = True,
 ) -> DataFrame:
     """Flat corpus with planted exact/near/truncated duplicate families."""
     rows: list[tuple] = []
@@ -152,8 +151,8 @@ def generate_transcripts(
                 max_turns=max_turns,
             )
         )
-    if shuffle_rows:  # turn_order_scramble fixture: physical order is irrelevant
-        _rng(seed, "shuffle").shuffle(rows)
+    # turn_order_scramble fixture: physical order is irrelevant
+    _rng(seed, "shuffle").shuffle(rows)
     return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
 
 
@@ -310,7 +309,6 @@ def generate_embeddings_distributed(
     dim: int = 64,
     seed: int = 7,
     bands: tuple[float, ...] = EMB_BANDS,
-    plant_every: int = 2,
 ) -> "DataFrame":
     """(vec_id bigint, embedding array<float>) with planted neighbors at
     EXACT cosine bands — the ANN-recall ground-truth corpus.
@@ -319,7 +317,7 @@ def generate_embeddings_distributed(
     xxhash64 uniforms — pure column expressions from ``spark.range``, no
     driver loop, no UDF, same scaling story as
     :func:`generate_transcripts_distributed`). Base ``i`` gets one planted
-    neighbor ``vec_id = n_base + i`` iff ``i % (len(bands) * plant_every)
+    neighbor ``vec_id = n_base + i`` iff ``i % (2 * len(bands))
     < len(bands)``, at cosine ``bands[that index]`` EXACTLY (up to fp): the
     neighbor is ``c*v + sqrt(1-c^2)*g_perp`` with the gaussian noise
     orthogonalized against ``v`` before mixing, so the realized cosine does
@@ -345,7 +343,7 @@ def generate_embeddings_distributed(
             )
         ).alias("v"),
     )
-    period = len(bands) * plant_every
+    period = 2 * len(bands)
     band_arr = F.array(*[F.lit(float(c)) for c in bands])
     planted = base.withColumn(
         "slot", F.pmod(F.col("vec_id"), F.lit(period))
@@ -394,12 +392,11 @@ def planted_neighbors(
     spark,
     n_base: int,
     bands: tuple[float, ...] = EMB_BANDS,
-    plant_every: int = 2,
 ) -> "DataFrame":
     """(vec_id_a, vec_id_b, band) for every planted neighbor pair of
     :func:`generate_embeddings_distributed` — a < b always holds (the
     neighbor id is base + n_base)."""
-    period = len(bands) * plant_every
+    period = 2 * len(bands)
     band_arr = F.array(*[F.lit(float(c)) for c in bands])
     return (
         spark.range(n_base)

@@ -56,13 +56,11 @@ PLANTED_PAIR_OFFSETS: list[tuple[int, int]] = [
 _PLANTED_OFFSETS = sorted({o for p in PLANTED_PAIR_OFFSETS for o in p})
 
 
-def planted_pairs(spark: SparkSession, n_convs: int, pad: int = 9) -> DataFrame:
-    """``(conv_id_a, conv_id_b)`` for every planted same-content-base pair.
-
-    ``pad`` matches the generator's conv-id zero padding (9 for
-    :func:`corpus.generate_transcripts_distributed`, 6 for the driver-side
-    generator). Only complete 20-conv blocks are enumerated — a trailing
-    partial block plants no complete families.
+def planted_pairs(spark: SparkSession, n_convs: int) -> DataFrame:
+    """``(conv_id_a, conv_id_b)`` for every planted same-content-base pair
+    of :func:`corpus.generate_transcripts_distributed`. Only complete
+    20-conv blocks are enumerated — a trailing partial block plants no
+    complete families.
     """
     n_blocks = n_convs // 20
     pair_lits = F.array(
@@ -74,7 +72,7 @@ def planted_pairs(spark: SparkSession, n_convs: int, pad: int = 9) -> DataFrame:
 
     def cid(off: F.Column) -> F.Column:
         i = F.col("id") * 20 + off
-        return F.concat(F.lit("conv"), F.lpad(i.cast("string"), pad, "0"))
+        return F.concat(F.lit("conv"), F.lpad(i.cast("string"), 9, "0"))
 
     return (
         spark.range(n_blocks)

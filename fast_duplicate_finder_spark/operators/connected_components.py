@@ -85,7 +85,7 @@ def _truncated_counted(df: DataFrame, flag_col: str) -> tuple[DataFrame, int]:
 
 def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """``(conv_id_a, conv_id_b)`` pairs -> ``(conv_id, component)`` for
-    every node in any pair.
+    every node in any pair of two distinct ids (a self-pair is dropped).
 
     ``component`` = lexicographic min conv_id reachable via pair edges.
     """

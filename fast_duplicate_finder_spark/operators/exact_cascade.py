@@ -17,9 +17,9 @@ Spark-first design notes:
   ``collect_list`` of 10^12 paths is exactly what must never happen.
 * The cascade itself is pipeline structure, not a Catalyst rewrite
   (run_finder.go:39-76): each phase prunes before the next gets more
-  expensive. Phase 1 never materializes documents at all. Its one
-  composition is plans/pipeline.run_pipeline (p1_prefilter -> p1_docs ->
-  p2_partial -> p3_exact), which checkpoints each phase.
+  expensive. Phase 1 reads only (conv_id, size, n_turns), never the
+  document. Its one composition is plans/pipeline.run_pipeline (p1_docs ->
+  p1_prefilter -> p2_partial -> p3_exact), which checkpoints each phase.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def having_at_least(df: DataFrame, keys: list[str]) -> DataFrame:
 def prefilter(stats: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Phase 1: size (+ turn-count) groups with >=2 members.
 
-    Input: conv_stats output (conv_id, size, n_turns) — no documents touched.
+    Input: (conv_id, size, n_turns) — no documents touched.
     """
     keys = ["size", "n_turns"] if cfg.filter_by_turns else ["size"]
     # zero-size exclusion (phase_1.go:49 drops Size()==0): an empty

@@ -4,6 +4,7 @@ Query lifecycle (SURVEY.md §3, mirroring the three reference entry points
 converging on run_finder.go:23-85):
 
     run_pipeline(spark, transcripts, cfg, checkpoint_dir)
+      p1_docs           every conversation, assembled once
       p1_prefilter      size/turn-count groups >= 2       (phase_1.go)
       p2_partial        (size, partial-hash) groups >= 2  (phase_2.go)
       p3_exact          full-hash exact clusters          (phase_3.go)
@@ -55,10 +56,7 @@ from fast_duplicate_finder_spark.operators.connected_components import (
     connected_components,
 )
 from fast_duplicate_finder_spark.plans import report as report_mod
-from fast_duplicate_finder_spark.sources.transcripts import (
-    assemble_conversations,
-    conv_stats,
-)
+from fast_duplicate_finder_spark.sources.transcripts import assemble_conversations
 from fast_duplicate_finder_spark.storage import CheckpointStore
 
 
@@ -104,7 +102,7 @@ def run_pipeline(
     store = CheckpointStore(
         spark, checkpoint_dir, cfg.fingerprint(), snapshot_id=input_snapshot
     )
-    n_phases = 6 + (3 if with_groups else 0) + (7 if with_near_dup else 0)
+    n_phases = 5 + (3 if with_groups else 0) + (6 if with_near_dup else 0)
     counter = {"i": 0}
 
     def run_phase(phase, compute, lineage, overflow=None, **write_kwargs):
@@ -148,23 +146,20 @@ def run_pipeline(
         progress.phase_done(phase, counter["i"], n_phases, metric)
         return out
 
-    stats = run_phase(
-        "p0_stats", lambda: conv_stats(transcripts), ["input"]
+    docs = run_phase(
+        "p1_docs", lambda: assemble_conversations(transcripts), ["input"]
     )
     p1 = run_phase(
-        "p1_prefilter", lambda: prefilter(stats, cfg), ["p0_stats"]
-    )
-    docs = run_phase(
-        "p1_docs",
-        lambda: assemble_conversations(transcripts, only_convs=p1),
-        ["input", "p1_prefilter"],
+        "p1_prefilter",
+        lambda: prefilter(docs.select("conv_id", "size", "n_turns"), cfg),
+        ["p1_docs"],
     )
     p2 = run_phase(
         "p2_partial",
-        lambda: partial_hash_stage(docs, cfg).select(
-            "conv_id", "doc", "size", "n_turns"
-        ),
-        ["p1_docs"],
+        lambda: partial_hash_stage(
+            docs.join(p1.select("conv_id"), "conv_id", "left_semi"), cfg
+        ).select("conv_id", "doc", "size", "n_turns"),
+        ["p1_docs", "p1_prefilter"],
     )
     p3 = run_phase(
         "p3_exact",
@@ -173,7 +168,7 @@ def run_pipeline(
     )
 
     if with_groups:
-        conv_hashes = stats.select("conv_id").join(
+        conv_hashes = docs.select("conv_id").join(
             p3.select("conv_id", "fhash").withColumn("is_dup", F.lit(True)),
             "conv_id",
             "left",
@@ -181,7 +176,7 @@ def run_pipeline(
         sigs = run_phase(
             "p4_group_sigs",
             lambda: folder_signatures(conv_hashes, cfg),
-            ["p0_stats", "p3_exact"],
+            ["p1_docs", "p3_exact"],
         )
         dups = duplicate_folders(sigs)
         top = run_phase(
@@ -204,12 +199,7 @@ def run_pipeline(
 
     if with_near_dup:
         # Near-dup legs consider ALL assembled docs, not only exact-cascade
-        # survivors: near-dups differ in size, so assemble everything here.
-        all_docs = run_phase(
-            "p6_all_docs",
-            lambda: assemble_conversations(transcripts),
-            ["input"],
-        )
+        # survivors: near-dups differ in size.
         # ONE conv_id-partitioned pass computes every leg's features
         # (shset + minhash/simhash signatures + supershingle sets); the
         # positional gram arrays never leave it, so the p7 legs below
@@ -223,8 +213,8 @@ def run_pipeline(
         # broadcast, and any resumed session) reads it exchange-free
         features = run_phase(
             "p6_features",
-            lambda: near_dup_features(all_docs, cfg),
-            ["p6_all_docs"],
+            lambda: near_dup_features(docs, cfg),
+            ["p1_docs"],
             bucket_by=["conv_id"],
         )
 

@@ -24,9 +24,7 @@ from fast_duplicate_finder_spark.functions.hashing import hash_hex
 
 
 def summarize(
-    exact_clusters: DataFrame,
-    top_folders: DataFrame | None,
-    near_clusters: DataFrame | None,
+    exact_clusters: DataFrame, top_folders: DataFrame, near_clusters: DataFrame
 ) -> DataFrame:
     """One-row summary table (file_sets, folder_sets, near_dup_clusters,
     wasted_space_chars)."""
@@ -44,37 +42,26 @@ def summarize(
     # (agg-without-groupBy always yields exactly one row, even on empty
     # input), so the caller's one collect runs everything as one plan — the
     # old form ran two extra driver-side count() actions per report
-    folders_1row = (
-        top_folders.agg(
-            F.count_distinct("cluster_id").alias("folder_sets")
+    return (
+        per_set.crossJoin(
+            top_folders.agg(F.count_distinct("cluster_id").alias("folder_sets"))
         )
-        if top_folders is not None
-        else None
-    )
-    near_1row = (
-        near_clusters.agg(
-            F.count_distinct("component").alias("near_dup_clusters")
+        .crossJoin(
+            near_clusters.agg(
+                F.count_distinct("component").alias("near_dup_clusters")
+            )
         )
-        if near_clusters is not None
-        else None
-    )
-    out = per_set
-    if folders_1row is not None:
-        out = out.crossJoin(folders_1row)
-    else:
-        out = out.withColumn("folder_sets", F.lit(0).cast("long"))
-    if near_1row is not None:
-        out = out.crossJoin(near_1row)
-    else:
-        out = out.withColumn("near_dup_clusters", F.lit(0).cast("long"))
-    return out.select(
-        "file_sets", "folder_sets", "near_dup_clusters", "wasted_space_chars"
+        .select(
+            "file_sets", "folder_sets", "near_dup_clusters",
+            "wasted_space_chars",
+        )
     )
 
 
-def file_sets_report(exact_clusters: DataFrame, max_sets: int = 1000) -> DataFrame:
-    """Deterministically sorted duplicate sets with member lists — member
-    lists are ONLY collected here, at the small report edge (SURVEY.md §1.2)."""
+def file_sets_report(exact_clusters: DataFrame) -> DataFrame:
+    """The first 1,000 deterministically sorted duplicate sets with member
+    lists — member lists are ONLY collected here, at the small report edge
+    (SURVEY.md §1.2)."""
     return (
         exact_clusters.groupBy("cluster_id")
         .agg(
@@ -85,16 +72,15 @@ def file_sets_report(exact_clusters: DataFrame, max_sets: int = 1000) -> DataFra
         )
         .withColumn("wasted_chars", F.col("size_chars") * (F.col("n_members") - 1))
         .orderBy("hash12")
-        .limit(max_sets)
+        .limit(1000)
     )
 
 
 def folder_sets_report(
     top_folders: DataFrame,
     folder_sizes: DataFrame | None = None,
-    max_sets: int = 1000,
 ) -> DataFrame:
-    """Folder duplicate sets; with ``folder_sizes`` (from
+    """The first 1,000 folder duplicate sets; with ``folder_sizes`` (from
     operators.group_dedup.folder_recursive_sizes) each set also reports the
     recursive member size and wasted space — FolderSet.sizeBytes parity
     (generate_report.go:13-33). Members of a set share a Merkle signature,
@@ -116,7 +102,7 @@ def folder_sets_report(
         out = out.withColumn(
             "wasted_chars", F.col("size_chars") * (F.col("n_members") - 1)
         )
-    return out.orderBy("sig12").limit(max_sets)
+    return out.orderBy("sig12").limit(1000)
 
 
 def stringify_report(

@@ -1,7 +1,6 @@
 from fast_duplicate_finder_spark.sources.transcripts import (
     assemble_conversations,
-    conv_stats,
     load_transcripts,
 )
 
-__all__ = ["assemble_conversations", "conv_stats", "load_transcripts"]
+__all__ = ["assemble_conversations", "load_transcripts"]

@@ -8,11 +8,10 @@ per-row invariant from BASELINE.json input_hint (per-turn text equality
 under stable turn ordering). Physical row order never matters
 (turn_order_scramble fixture).
 
-Scale design: phase 1 needs only (size, n_turns) per conversation — computed
-with a partially-aggregable sum/count (map-side combine, one shuffle), never
-materializing the document. Full documents are assembled only for phase-1
-survivors (the cheap->expensive cascade of run_finder.go:39-76 re-expressed
-as Spark jobs).
+Scale design: each conversation is assembled once, into the pipeline's
+``p1_docs`` checkpoint. The size prefilter, the exact cascade and the
+near-dup features all read that one table, so the transcripts are read
+and shuffled once per run.
 """
 
 from __future__ import annotations
@@ -46,44 +45,16 @@ def load_transcripts(
     return spark.read.parquet(path)
 
 
-def conv_stats(transcripts: DataFrame) -> DataFrame:
-    """Per-conversation cheap stats: ``(conv_id, size, n_turns)``.
-
-    ``size`` = chars of the assembled doc = sum(length(text)) + (n_turns-1)
-    separators — the file-size analogue (file_info.go:6). Partial+final
-    hash aggregation comes free from Catalyst; no document is materialized.
-    """
-    return (
-        transcripts.groupBy("conv_id")
-        .agg(
-            F.sum(F.length(F.coalesce("text", F.lit("")))).alias("text_chars"),
-            F.count("*").alias("n_turns"),
-        )
-        .select(
-            "conv_id",
-            (F.col("text_chars") + F.col("n_turns") - 1).alias("size"),
-            F.col("n_turns").cast("int").alias("n_turns"),
-        )
-    )
-
-
-def assemble_conversations(
-    transcripts: DataFrame, only_convs: DataFrame | None = None
-) -> DataFrame:
-    """Window-ordered concat -> ``(conv_id, doc, size, n_turns)``.
+def assemble_conversations(transcripts: DataFrame) -> DataFrame:
+    """Window-ordered concat -> ``(conv_id, doc, n_turns, size)``.
 
     ``array_sort(collect_list(struct(turn_idx, text)))`` sorts by the struct's
     first field (turn_idx), giving stable assembly regardless of physical row
-    order. ``only_convs`` (a DataFrame with a ``conv_id`` column) restricts
-    assembly to cascade survivors via a semi join — at 10^12 turns this is
-    the difference between shuffling every byte and shuffling ~the duplicate
-    candidates only.
+    order. ``size`` is ``length(doc)``, the file-size analogue
+    (file_info.go:6).
     """
-    t = transcripts
-    if only_convs is not None:
-        t = t.join(only_convs.select("conv_id").distinct(), "conv_id", "left_semi")
     return (
-        t.groupBy("conv_id")
+        transcripts.groupBy("conv_id")
         .agg(
             F.array_join(
                 F.transform(

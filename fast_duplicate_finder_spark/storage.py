@@ -122,7 +122,12 @@ class CheckpointStore:
     def _manifest_path(self, phase: str) -> str:
         return os.path.join(self._dir(phase), "_MANIFEST.json")
 
-    def exists(self, phase: str) -> bool:
+    def exists(self, phase: str, lineage: list[str] | None = None) -> bool:
+        """A complete checkpoint of this fingerprint (and input snapshot,
+        when pinned) whose manifest records the same input phases
+        (``lineage``, default none, as ``write`` records it): a checkpoint
+        from a different phase graph holds a different table under the
+        same name."""
         mp = self._manifest_path(phase)
         if not os.path.exists(mp):
             return False
@@ -132,6 +137,8 @@ class CheckpointStore:
         except (OSError, json.JSONDecodeError):
             return False
         if m.get("fingerprint") != self.fingerprint or not m.get("complete"):
+            return False
+        if m.get("lineage") != (lineage or []):
             return False
         if self.snapshot_id is not None:
             # a manifest with NO snapshot is unknown provenance: when the
@@ -288,8 +295,9 @@ class CheckpointStore:
         **write_kwargs,
     ) -> DataFrame:
         """Skip phases whose checkpoint exists under the same config
-        fingerprint — the resume contract (BASELINE.md resumability row)."""
-        if resume and self.exists(phase):
+        fingerprint and lineage — the resume contract (BASELINE.md
+        resumability row)."""
+        if resume and self.exists(phase, lineage):
             self.metrics.append({"phase": phase, "resumed": True})
             return self.read(phase)
         t0 = time.perf_counter()

@@ -54,6 +54,10 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fast_duplicate_finder_spark.operators.connected_components import (
+    _truncated_counted,
+    connected_components,
+)
 from fast_duplicate_finder_spark.sources.transcripts import (
     TRANSCRIPT_SCHEMA_DDL,
     assemble_conversations,
@@ -624,13 +628,9 @@ PAIR_STREAM_SCHEMA = "conv_id_a string, conv_id_b string, is_overflow boolean"
 CLUSTER_LABEL_SCHEMA = "conv_id string, label string"
 
 
-def _follow_merges(
-    df: DataFrame, col: str, merges: DataFrame, hop: Observation | None = None
-) -> DataFrame:
+def _follow_merges(df: DataFrame, col: str, merges: DataFrame) -> DataFrame:
     """``df`` with every ``col`` value that is a ``merges.label_from``
-    moved one hop, to its ``label_to``. With ``hop``, the step is
-    materialized and ``hop`` counts the values that moved (``hits``; zero
-    means a fixpoint)."""
+    moved one hop, to its ``label_to``."""
     moved = df.join(
         merges.select(
             F.col("label_from").alias(col), F.col("label_to").alias("_next")
@@ -638,10 +638,6 @@ def _follow_merges(
         col,
         "left",
     )
-    if hop is not None:
-        moved = moved.observe(
-            hop, F.sum(F.col("_next").isNotNull().cast("long")).alias("hits")
-        ).localCheckpoint(eager=True)
     return moved.select(
         *[F.coalesce("_next", c).alias(c) if c == col else c for c in df.columns]
     )
@@ -670,10 +666,6 @@ def _clusters_batch(
     transitively — then append base rows for first-seen convs and merge
     edges for dethroned roots.
     """
-    from fast_duplicate_finder_spark.operators.connected_components import (
-        connected_components,
-    )
-
     spark = batch.sparkSession
     pairs = batch
     if "is_overflow" in pairs.columns:
@@ -772,29 +764,35 @@ def run_incremental_clusters(
 
 
 def _compressed_merge_map(
-    spark: SparkSession,
-    merges_data: str,
-    max_rounds: int = 20,
-    exclude_epoch: int | None = None,
+    spark: SparkSession, merges_data: str, exclude_epoch: int | None = None
 ) -> DataFrame | None:
     """(label_from -> current root) for every label that ever lost a merge:
     path-doubling over the whole merge DAG — both join sides compress each
-    round, so chase depth halves per round and ``max_rounds=20`` covers
-    chains ~10^6 deep. Small table (one row per dethroned root), joined
-    exactly once by _resolve_labels."""
+    round, so chase depth halves per round and 20 rounds cover chains
+    ~10^6 deep. Each round is one materialization through
+    connected_components' stats-resetting checkpoint (a plain checkpoint
+    fed to the next round's self-join doubles the plan's size estimate's
+    bit length every round). Small table (one row per dethroned root),
+    joined exactly once by _resolve_labels."""
     if not _has_parts(merges_data):
         return None
     m = spark.read.parquet(merges_data)
     if exclude_epoch is not None:
         m = m.filter(F.col("epoch_id") != F.lit(exclude_epoch))
     m = m.select("label_from", "label_to")
-    for _ in range(max_rounds):
-        hop = Observation()
-        m = _follow_merges(m, "label_to", m, hop)
-        if not int(hop.get["hits"] or 0):
+    for _ in range(20):
+        hop = _follow_merges(
+            m.withColumn("_prev", F.col("label_to")), "label_to", m
+        )
+        m, moved = _truncated_counted(
+            hop.withColumn("_moved", F.col("label_to") != F.col("_prev"))
+            .drop("_prev"),
+            "_moved",
+        )
+        if not moved:
             return m
     raise RuntimeError(
-        f"merge-map compression did not converge in {max_rounds} doubling "
+        "merge-map compression did not converge in 20 doubling "
         "rounds — compact the cluster state"
     )
 

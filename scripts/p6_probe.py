@@ -72,7 +72,7 @@ def main() -> int:
     warm = F.pandas_udf(lambda s: s, LongType())
     spark.range(0, 100_000, 1, shuffle).select(warm("id")).count()
 
-    # p6_all_docs equivalent, checkpointed once so every step reads the
+    # p1_docs equivalent, checkpointed once so every step reads the
     # same materialized input (as the pipeline does)
     ck = f"/tmp/fdf_p6_probe_{total_cores}"
     store = CheckpointStore(spark, ck, cfg.fingerprint())

@@ -92,3 +92,21 @@ def span_runs_oracle(
         )
         out[(a, b)] = m.size
     return out
+
+
+def components(pairs) -> dict[str, str]:
+    """conv_id -> smallest conv_id of its connected component, by
+    union-find over ``(conv_id_a, conv_id_b)`` pairs."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}

@@ -5,10 +5,7 @@ from pyspark.sql import functions as F
 from fast_duplicate_finder_spark.config import PipelineConfig
 from fast_duplicate_finder_spark.corpus import generate_transcripts
 from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
-from fast_duplicate_finder_spark.sources.transcripts import (
-    assemble_conversations,
-    conv_stats,
-)
+from fast_duplicate_finder_spark.sources.transcripts import assemble_conversations
 
 from tests.oracle import assemble_locally, exact_clusters_oracle
 
@@ -21,7 +18,7 @@ def _rows(spark, n=200):
 
 
 def _cascade(spark, df, tmp_path):
-    """The exact cascade (p0-p3) as run_pipeline composes it."""
+    """The exact cascade (p1-p3) as run_pipeline composes it."""
     return run_pipeline(
         spark, df, CFG, str(tmp_path / "ckpt"),
         with_near_dup=False, with_groups=False,
@@ -42,14 +39,6 @@ def test_assembly_matches_local_oracle_and_is_order_stable(spark):
         r["conv_id"]: r["doc"] for r in assemble_conversations(df2).collect()
     }
     assert assembled2 == local
-
-
-def test_conv_stats_size_equals_doc_length(spark):
-    df, _ = _rows(spark, 60)
-    stats = {r["conv_id"]: (r["size"], r["n_turns"]) for r in conv_stats(df).collect()}
-    docs = {r["conv_id"]: r["doc"] for r in assemble_conversations(df).collect()}
-    for cid, doc in docs.items():
-        assert stats[cid][0] == len(doc)
 
 
 def test_exact_clusters_match_bruteforce(spark, tmp_path):

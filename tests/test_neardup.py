@@ -21,7 +21,13 @@ from fast_duplicate_finder_spark.operators.neardup import (
 )
 from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
 
-from tests.oracle import assemble_locally, jaccard, near_pairs_oracle, shingles
+from tests.oracle import (
+    assemble_locally,
+    components,
+    jaccard,
+    near_pairs_oracle,
+    shingles,
+)
 
 CFG = PipelineConfig()
 
@@ -175,3 +181,29 @@ def test_connected_components_deep_chain_converges(spark):
     }
     assert len(got) == 300
     assert set(got.values()) == {min(ids)}
+
+
+def test_connected_components_match_union_find(spark):
+    """Property check against a driver union-find, in ONE call over a
+    disjoint union of shapes: a seeded random graph (many small and a few
+    merged components), a ~200-node path with shuffled ids (the min sits
+    mid-chain), a star whose hub has the largest id, self-loops on nodes
+    that have other edges (they change nothing) and duplicate edges in
+    both orientations."""
+    import random
+
+    rng = random.Random(11)
+    rnd = [f"r{i:03d}" for i in range(150)]
+    pairs = [tuple(rng.sample(rnd, 2)) for _ in range(110)]
+    path = [f"p{i:03d}" for i in range(200)]
+    rng.shuffle(path)
+    pairs += list(zip(path, path[1:]))
+    pairs += [("s99", f"s{i:02d}") for i in range(30)]
+    pairs += [(x, x) for x in (pairs[0][0], path[0], path[-1], "s99", "s05")]
+    pairs += [(b, a) for a, b in rng.sample(pairs, 40)] + pairs[:20]
+    df = spark.createDataFrame(pairs, "conv_id_a string, conv_id_b string")
+    got = {
+        r["conv_id"]: r["component"]
+        for r in connected_components(df).collect()
+    }
+    assert got == components(pairs)

@@ -39,7 +39,7 @@ def test_progress_events_and_percentages(spark, tmp_path):
     assert seen == progress.events
     starts = [e for e in seen if e["status"] == "start"]
     dones = [e for e in seen if e["status"] in ("done", "resumed")]
-    assert len(starts) == len(dones) == 6  # base phases when both flags off
+    assert len(starts) == len(dones) == 5  # base phases when both flags off
     percents = [e["percent"] for e in seen]
     assert percents == sorted(percents)
     assert dones[-1]["percent"] == 100.0
@@ -72,7 +72,7 @@ def test_cancel_mid_pipeline_then_resume(spark, tmp_path):
         spark, df, CFG, ckpt, with_groups=False, with_near_dup=False
     )
     resumed = {m["phase"] for m in rep.metrics if m.get("resumed")}
-    assert "p2_partial" in resumed and "p0_stats" in resumed
+    assert "p2_partial" in resumed and "p1_docs" in resumed
 
 
 def test_cancelled_token_raises_before_any_phase(spark, tmp_path):

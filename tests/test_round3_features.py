@@ -61,7 +61,7 @@ def test_progress_events_bounded_and_mirrored_to_logger(spark, tmp_path):
         spark, df, CFG, str(tmp_path / "c"), with_groups=False,
         with_near_dup=False, progress=progress,
     )
-    # 6 phases x (start+done) = 12 lifecycle events emitted (round 4 adds
+    # 5 phases x (start+done) = 10 lifecycle events emitted (round 4 adds
     # status='progress' interpolation events on top); history keeps last 4
     assert len(progress.events) == 4
     assert progress.events[-1]["percent"] == 100.0
@@ -70,7 +70,7 @@ def test_progress_events_bounded_and_mirrored_to_logger(spark, tmp_path):
         if e.get("context") == "pipeline"
         and e["data"]["status"] in ("start", "done", "resumed")
     ]
-    assert len(phase_lines) == 12  # logger saw every event (its own bound)
+    assert len(phase_lines) == 10  # logger saw every event (its own bound)
     assert get_logger() is get_logger()  # process singleton
 
 
@@ -99,6 +99,17 @@ def test_resume_refused_when_manifest_lacks_snapshot(spark, tmp_path):
     assert not CheckpointStore(
         spark, base, "fp", snapshot_id="zzz"
     ).exists("p0")
+
+
+def test_resume_refused_when_lineage_differs(spark, tmp_path):
+    """A checkpoint written by a different phase graph (same name, same
+    fingerprint, other inputs) must be recomputed, not resumed."""
+    store = CheckpointStore(spark, str(tmp_path / "ck"), "fp")
+    store.get_or_compute("p0", lambda: spark.range(3).toDF("v"), ["a"])
+    out = store.get_or_compute("p0", lambda: spark.range(5).toDF("v"), ["b"])
+    assert "resumed" not in store.metrics[-1]
+    assert out.count() == 5
+    assert store.manifest("p0")["lineage"] == ["b"]
 
 
 def test_manifest_counters_from_footers(spark, tmp_path):
@@ -176,7 +187,9 @@ def test_summarize_single_collect(spark):
         "near_dup_clusters": 2,
         "wasted_space_chars": 10,
     }
-    empty = summarize(exact.limit(0), None, None).collect()[0].asDict()
+    empty = summarize(
+        exact.limit(0), folders.limit(0), near.limit(0)
+    ).collect()[0].asDict()
     assert empty["file_sets"] == 0
     assert empty["wasted_space_chars"] == 0
     assert empty["folder_sets"] == 0 and empty["near_dup_clusters"] == 0

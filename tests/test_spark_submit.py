@@ -43,7 +43,7 @@ def test_spark_submit_py_files_multi_executor(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     phases = {m["phase"]: m for m in out["metrics"]}
-    assert phases["p0_stats"]["rows"] == 300
+    assert phases["p1_docs"]["rows"] == 300
     assert out["summary"]["file_sets"] > 0
     assert out["summary"]["near_dup_clusters"] > 0
     # progress fanout reached the console from inside the submitted job
