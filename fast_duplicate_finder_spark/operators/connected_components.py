@@ -1,4 +1,5 @@
-"""Connected components on a pair DataFrame — iterative min-label propagation.
+"""Connected components on a pair DataFrame — iterative min-label propagation
+with a one-worker residual finish.
 
 Needed to turn verified near-duplicate *pairs* into duplicate *clusters*
 (the reference never needs this: exact hashing partitions transitively for
@@ -7,6 +8,21 @@ DataFrame ops (hash-to-min label propagation; cf. BTS, ICDE 2024 in
 PAPERS.md, and the classic large-star/small-star family).
 
 Scale notes:
+* residual finish (Kiveris et al., SoCC 2014: iterate while the graph is
+  large, then finish the small residual on one machine): the edge count
+  observed when the edges are materialized, and each round's bound on its
+  unconverged edges, ride existing ``Observation`` metrics. Once that
+  count is at most ``residual_cap`` (default ``RESIDUAL_CAP`` undirected
+  edges, ~0.5 GB of id strings on one Python worker at the cap), the
+  remaining edges are contracted to their current labels, collected by ONE
+  ``applyInPandas`` on a constant key, and finished there by a vectorized
+  union-find whose roots are the minimum labels; the roots are joined back
+  lazily, so the consumer's write runs the finish. A graph within the cap
+  takes one materialization plus that grouped map — no rounds — where
+  the purely iterative form took 32+ jobs of fixed cost on any small
+  graph. Larger residuals keep iterating; the round count and residual
+  size are logged through ``plans.logging``, so the cap never decides
+  silently. ``residual_cap=0`` is the purely iterative operator;
 * each OUTER round = neighbor-min (join + agg) + union-at-the-root (every
   improvement is forwarded to the node's CURRENT root — the union-find
   "link") + an INNER pointer-doubling loop (label <- label(label) to
@@ -18,7 +34,7 @@ Scale notes:
   and blew a 50-round cap on a 300-node path. Non-convergence at max_iter
   RAISES instead of silently splitting a component;
 * ONE Spark action per round step: convergence counts ride the checkpoint
-  materialization as ``Observation`` metrics (``_truncated_counted``) —
+  materialization as ``Observation`` metrics (``_truncated_observed``) —
   no separate ``filter(changed).count()`` job per round/pass;
 * lineage is truncated per round via ``_truncated`` — NOT a bare
   ``localCheckpoint``: Dataset.(local)Checkpoint copies the optimized
@@ -35,8 +51,14 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+# Largest count of open undirected edges finished on one Python worker
+# (module docstring): ~0.5 GB of id strings there at the cap.
+RESIDUAL_CAP = 4_000_000
 
 
 def _truncated(df: DataFrame) -> DataFrame:
@@ -65,56 +87,164 @@ def _truncated(df: DataFrame) -> DataFrame:
     return DataFrame(jdf, ck.sparkSession)
 
 
-def _truncated_counted(df: DataFrame, flag_col: str) -> tuple[DataFrame, int]:
-    """One-action round step: checkpoint ``df`` minus ``flag_col`` AND
-    deliver ``count_if(flag_col)`` from that SAME materialization.
+def _truncated_observed(
+    df: DataFrame, drop: list[str], **metrics: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """One-action step: checkpoint ``df`` minus the ``drop`` columns AND
+    deliver the ``metrics`` aggregates from that SAME materialization.
 
     ``Observation`` metrics are collected by the action inside
     ``localCheckpoint(eager=True)`` (Dataset.checkpoint runs under
     withAction), so change-detection costs zero extra jobs — the previous
     form ran a separate ``filter(changed).count()`` job per outer round and
     per doubling pass: ~2-8 jobs of pure fixed cost per round at 100 TB.
-    The flag column is dropped ABOVE the observe, so it never reaches the
-    checkpointed blocks but is still visible to the metric."""
+    The dropped columns go ABOVE the observe, so they never reach the
+    checkpointed blocks but are still visible to the metrics."""
     obs = Observation()
     out = _truncated(
-        df.observe(obs, F.count_if(F.col(flag_col)).alias("n")).drop(flag_col)
+        df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).drop(*drop)
     )
-    return out, int(obs.get["n"])
+    return out, {k: int(obs.get[k] or 0) for k in metrics}
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+def _truncated_counted(df: DataFrame, flag_col: str) -> tuple[DataFrame, int]:
+    """``_truncated_observed`` of ``count_if(flag_col)``, flag dropped."""
+    out, m = _truncated_observed(df, [flag_col], n=F.count_if(F.col(flag_col)))
+    return out, m["n"]
+
+
+def _min_label_roots(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Union-find over ALL the ``(a, b)`` edges of one group: the grouped
+    map's body. Ids are factorized in sorted order, so the smallest code
+    of a set is its minimum label. Bulk union by min-code hooking plus
+    pointer jumping to fixpoint: every pass that leaves an edge open
+    re-points at least one root at a smaller one, so it terminates, and
+    each pass is a few vectorized array operations over the edges."""
+    n = len(pdf)
+    codes, ids = pd.factorize(
+        pd.concat([pdf["a"], pdf["b"]], ignore_index=True), sort=True
+    )
+    u, v = codes[:n], codes[n:]
+    parent = np.arange(len(ids))
+    while True:
+        ru, rv = parent[u], parent[v]
+        open_ = ru != rv
+        if not open_.any():
+            break
+        # hook: each root of an open edge points at the smaller root
+        np.minimum.at(
+            parent, np.maximum(ru, rv)[open_], np.minimum(ru, rv)[open_]
+        )
+        while True:  # compress: every node points at its root
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    ids = np.asarray(ids, dtype=object)
+    return pd.DataFrame({"conv_id": ids, "component": ids[parent]})
+
+
+def _finish_residual(
+    edges: DataFrame, sym: DataFrame | None, labels: DataFrame | None
+) -> DataFrame:
+    """The residual finish: before any round, ``edges`` as given; after
+    one, each undirected edge of ``sym`` once, contracted to its ends'
+    current ``labels`` with the closed ones dropped. Those open edges are
+    collected by ONE ``applyInPandas`` on a constant key, which runs
+    ``_min_label_roots``, and the roots are joined back. Lazy: the
+    consumer's action runs it."""
+    if labels is not None:
+        la = labels.select(F.col("conv_id").alias("a"), F.col("label").alias("la"))
+        lb = labels.select(F.col("conv_id").alias("b"), F.col("label").alias("lb"))
+        edges = (
+            sym.filter(F.col("a") < F.col("b"))
+            .join(la, "a")
+            .join(lb, "b")
+            .select(F.col("la").alias("a"), F.col("lb").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+        )
+    roots = edges.groupBy(F.lit(0).alias("_one")).applyInPandas(
+        _min_label_roots, "conv_id string, component string"
+    )
+    if labels is None:
+        return roots
+    return (
+        labels.join(
+            roots.withColumnRenamed("conv_id", "label"), "label", "left"
+        )
+        .select("conv_id", F.coalesce("component", "label").alias("component"))
+    )
+
+
+def connected_components(
+    pairs: DataFrame, max_iter: int = 50, residual_cap: int = RESIDUAL_CAP
+) -> DataFrame:
     """``(conv_id_a, conv_id_b)`` pairs -> ``(conv_id, component)`` for
     every node in any pair of two distinct ids (a self-pair is dropped).
 
     ``component`` = lexicographic min conv_id reachable via pair edges.
+    ``residual_cap``: largest count of open edges finished on one worker
+    (module docstring); 0 iterates to convergence.
     """
-    edges = pairs.select(
-        F.col("conv_id_a").alias("a"), F.col("conv_id_b").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = _truncated(sym.distinct())
+    from fast_duplicate_finder_spark.plans.logging import get_logger
 
-    # Iteration shuffle sizing is left to AQE partition coalescing (enabled
-    # in session.py): each label-propagation round is join+agg over |E|
-    # rows, and AQE collapses the tiny post-shuffle partitions of small
-    # graphs at runtime. (Round 1 temporarily shrank the session-global
-    # spark.sql.shuffle.partitions instead — unsafe under concurrent
-    # queries on the shared session.)
-    labels = _truncated(
-        sym.select(F.col("a").alias("conv_id"))
-        .distinct()
-        .withColumn("label", F.col("conv_id"))
+    edges, m = _truncated_observed(
+        pairs.select(
+            F.col("conv_id_a").alias("a"), F.col("conv_id_b").alias("b")
+        ).filter(F.col("a") != F.col("b")),
+        [],
+        n=F.count(F.lit(1)),
     )
+    n_open = m["n"]  # every input edge is open before the first round
+    sym = labels = None
 
     converged = False
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.b == labels.conv_id, "inner")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
+    for rounds in range(max_iter):
+        if n_open <= residual_cap:
+            get_logger().info(
+                f"connected_components: {n_open} open edges after {rounds} "
+                "rounds, finished on one worker",
+                context="connected_components",
+                data={"rounds": rounds, "residual_edges": n_open,
+                      "residual_cap": residual_cap},
+            )
+            return _finish_residual(edges, sym, labels)
+        if sym is None:
+            sym = _truncated(
+                edges.union(
+                    edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+                ).distinct()
+            )
+            # Iteration shuffle sizing is left to AQE partition coalescing
+            # (enabled in session.py): each label-propagation round is
+            # join+agg over |E| rows, and AQE collapses the tiny
+            # post-shuffle partitions of small graphs at runtime. (Round 1
+            # temporarily shrank the session-global
+            # spark.sql.shuffle.partitions instead — unsafe under
+            # concurrent queries on the shared session.)
+            labels = _truncated(
+                sym.select(F.col("a").alias("conv_id"))
+                .distinct()
+                .withColumn("label", F.col("conv_id"))
+            )
+        # neighbor-min over edges that carry BOTH ends' labels: the same
+        # pass counts each end's open (differently labelled) edges, so the
+        # observation below carries the exact unconverged edge count
+        with_nbr = (
+            sym.join(
+                labels.select(
+                    F.col("conv_id").alias("b"), F.col("label").alias("lb")
+                ),
+                "b",
+            )
+            .join(labels.withColumnRenamed("conv_id", "a"), "a")
+            .groupBy(F.col("a").alias("conv_id"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min("lb").alias("nbr_min"),
+                F.count_if(F.col("lb") != F.col("label")).alias("open"),
+            )
         )
-        with_nbr = labels.join(nbr, labels.conv_id == nbr.a, "left")
         # Union at the ROOT (the union-find "link"): a node that learns a
         # smaller label forwards it to its CURRENT root, whose whole
         # region then flips in one doubling pass below. Node-local
@@ -129,12 +259,11 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         )
         stepped0 = with_nbr.select(
             "conv_id",
-            F.least(
-                F.col("label"), F.coalesce("nbr_min", F.col("label"))
-            ).alias("label"),
+            F.least(F.col("label"), F.col("nbr_min")).alias("label"),
             (F.col("nbr_min") < F.col("label")).alias("changed"),
+            "open",
         )
-        labels, n_changed = _truncated_counted(
+        labels, m = _truncated_observed(
             stepped0.join(upd, stepped0.conv_id == upd.r, "left").select(
                 "conv_id",
                 F.least(
@@ -144,11 +273,21 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                     F.coalesce(F.col("changed"), F.lit(False))
                     | (F.col("rmin") < F.col("label"))
                 ).alias("changed"),
+                "open",
             ),
-            "changed",
+            ["changed", "open"],
+            n_changed=F.count_if(F.col("changed")),
+            n_open=F.sum("open"),
         )
-        if n_changed == 0:
+        n_open = m["n_open"] // 2  # counted once from each end
+        if m["n_changed"] == 0:
             converged = True
+            get_logger().info(
+                f"connected_components: converged in {rounds + 1} rounds",
+                context="connected_components",
+                data={"rounds": rounds + 1, "residual_edges": 0,
+                      "residual_cap": residual_cap},
+            )
             break
         # Pointer doubling to FIXPOINT: synchronous label <- label(label)
         # halves every pointer chain per pass (every label IS a node id,
@@ -161,7 +300,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             parent = labels.select(
                 F.col("conv_id").alias("p"), F.col("label").alias("plabel")
             )
-            labels, m = _truncated_counted(
+            labels, moved = _truncated_counted(
                 labels.join(parent, labels.label == parent.p, "inner").select(
                     "conv_id",
                     F.least("label", "plabel").alias("label"),
@@ -169,7 +308,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                 ),
                 "jchanged",
             )
-            if m == 0:
+            if moved == 0:
                 jump_converged = True
                 break
         if not jump_converged:

@@ -5,16 +5,20 @@ The reference threads a cancellable context through every phase
 66, 73, 79), and fans progress callbacks out per phase with percentages
 (status/status.go:55-81, phase_2.go:54). The Spark re-expression:
 
-* ``CancelToken`` — ``cancel()`` flips a flag AND cancels the running
-  phase's Spark job group (``sc.cancelJobGroup`` with interrupt-on-cancel,
-  so in-flight tasks die, not just future ones). ``run_pipeline`` checks
-  the token at every phase boundary and raises ``PipelineCancelled``; a
-  later run resumes from the completed checkpoints (the reference cannot —
-  its cancel just aborts, SURVEY.md §2 C5).
-* ``ProgressReporter`` — callback fanout with (phase, index/total percent,
-  rows, seconds, resumed). Subscribers are driver-side listeners (a CLI
-  printer, a metrics pusher); events are also retained on the reporter for
-  post-hoc inspection, superseding round 1's write-only metrics rows.
+* ``CancelToken`` — ``cancel()`` flips a flag AND cancels the Spark job
+  group of EVERY running phase (independent phases run concurrently, each
+  under its own group; ``sc.cancelJobGroup`` with interrupt-on-cancel, so
+  in-flight tasks die, not just future ones). ``run_pipeline`` checks the
+  token at every phase boundary and raises ``PipelineCancelled``; a later
+  run resumes from the completed checkpoints (the reference cannot — its
+  cancel just aborts, SURVEY.md §2 C5).
+* ``ProgressReporter`` — callback fanout with (phase, declared index,
+  percent, rows, seconds, resumed). ``percent`` is the completed share of
+  the run: done phases count whole, in-flight phases by their within-phase
+  fraction, so it never steps back while phases finish out of declared
+  order. Subscribers are driver-side listeners (a CLI printer, a metrics
+  pusher); events are also retained on the reporter for post-hoc
+  inspection, superseding round 1's write-only metrics rows.
 * ``StageProgressPoller`` — WITHIN-phase fractional progress (the reference
   interpolates inside long phases: phase_2.go:54, phase_3.go:61 emit
   ``processed/total`` percentages mid-phase). Spark's analogue of
@@ -40,24 +44,28 @@ class CancelToken:
         self._spark = spark
         self._cancelled = threading.Event()
         self._lock = threading.Lock()
-        self._active_group: str | None = None
+        self._active_groups: set[str] = set()
 
     def enter_phase(self, phase: str) -> None:
-        """Tag all jobs of this phase with a cancellable group (driver
-        thread only — Spark job groups are per-thread)."""
+        """Tag all jobs of this phase with a cancellable group, in the
+        phase's own thread (Spark job groups are per-thread)."""
         with self._lock:
-            self._active_group = phase
+            self._active_groups.add(phase)
         self._spark.sparkContext.setJobGroup(
             phase, f"fdf phase {phase}", interruptOnCancel=True
         )
 
+    def exit_phase(self, phase: str) -> None:
+        with self._lock:
+            self._active_groups.discard(phase)
+
     def cancel(self) -> None:
-        """Callable from any thread: stop the running phase's jobs now;
-        the driver loop raises PipelineCancelled at the next boundary."""
+        """Callable from any thread: stop every running phase's jobs now;
+        run_pipeline raises PipelineCancelled once they have stopped."""
         self._cancelled.set()
         with self._lock:
-            group = self._active_group
-        if group is not None:
+            groups = sorted(self._active_groups)
+        for group in groups:
             try:
                 self._spark.sparkContext.cancelJobGroup(group)
             except Exception:  # noqa: BLE001 — racing a stopping context
@@ -91,10 +99,13 @@ class ProgressReporter:
         self.logger = logger
         # within-phase StageProgressPoller cadence (run_pipeline reads it)
         self.poll_interval = poll_interval
-        # phase_progress events arrive from the poller's daemon thread while
-        # phase_start/phase_done arrive from the driver thread — serialize
-        # the event log, the logger mirror, and subscriber callbacks so a
-        # single-threaded subscriber never sees interleaved events.
+        # completed fraction of each phase started in the current run
+        self._fractions: dict[str, float] = {}
+        # phase_progress events arrive from poller daemon threads while
+        # phase_start/phase_done arrive from the phases' own threads —
+        # serialize the event log, the percent, the logger mirror, and
+        # subscriber callbacks so a single-threaded subscriber never sees
+        # interleaved events.
         # RLock: a subscriber callback may legally re-enter the reporter
         # (emit a derived event, read .events) without self-deadlocking.
         # Callbacks run UNDER the lock by design — fanout order is the
@@ -127,8 +138,24 @@ class ProgressReporter:
                 return
         self._events.popleft()
 
-    def _emit(self, event: dict) -> None:
+    def _emit(self, event: dict, fraction: float) -> None:
+        """Record ``fraction`` as the phase's completed share, stamp the
+        run's ``percent`` and fan the event out, all under one lock, so
+        percents reach subscribers in non-decreasing order."""
         with self._emit_lock:
+            phase, status = event["phase"], event["status"]
+            if status == "start" and phase in self._fractions:
+                self._fractions.clear()  # the phase again: a new run
+            if status != "start" and phase not in self._fractions:
+                # a poller driven outside any run (no start event) has no
+                # run to be a share of: it sweeps its declared slice
+                done = event["index"] - 1 + fraction
+            else:
+                self._fractions[phase] = max(
+                    self._fractions.get(phase, 0.0), fraction
+                )
+                done = sum(self._fractions.values())
+            event["percent"] = round(100.0 * done / event["total"], 1)
             if len(self._events) >= self._max_events:
                 self._evict_one()
             self._events.append(event)
@@ -146,20 +173,16 @@ class ProgressReporter:
 
     def phase_start(self, phase: str, index: int, total: int) -> None:
         self._emit(
-            {
-                "phase": phase,
-                "status": "start",
-                "index": index,
-                "total": total,
-                "percent": round(100.0 * (index - 1) / total, 1),
-            }
+            {"phase": phase, "status": "start", "index": index,
+             "total": total},
+            0.0,
         )
 
     def phase_progress(
         self, phase: str, index: int, total: int, fraction: float
     ) -> None:
         """Within-phase interpolation: overall percent sweeps the phase's
-        own 1/total slice as ``fraction`` goes 0→1 (reference
+        own 1/total share as ``fraction`` goes 0→1 (reference
         status.go:55-81 + phase_2.go:54 semantics)."""
         fraction = min(max(fraction, 0.0), 1.0)
         self._emit(
@@ -168,9 +191,9 @@ class ProgressReporter:
                 "status": "progress",
                 "index": index,
                 "total": total,
-                "percent": round(100.0 * (index - 1 + fraction) / total, 1),
                 "within_phase_percent": round(100.0 * fraction, 1),
-            }
+            },
+            fraction,
         )
 
     def phase_done(self, phase: str, index: int, total: int, metric: dict
@@ -184,11 +207,11 @@ class ProgressReporter:
                 "status": "resumed" if metric.get("resumed") else "done",
                 "index": index,
                 "total": total,
-                "percent": round(100.0 * index / total, 1),
                 "rows": metric.get("rows"),
                 "seconds": secs,
                 "elapsed": format_elapsed(secs) if secs is not None else None,
-            }
+            },
+            1.0,
         )
 
 

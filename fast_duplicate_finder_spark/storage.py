@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -99,6 +100,10 @@ class CheckpointStore:
                                     # Iceberg snapshot); resume refuses a
                                     # checkpoint taken of a different input
     metrics: list[dict] = field(default_factory=list)
+    # phases of one run write concurrently: each appends its own metric
+    _metrics_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False
+    )
 
     def __post_init__(self) -> None:
         _require_local_fs(self.base_dir)
@@ -148,6 +153,11 @@ class CheckpointStore:
             return m.get("snapshot_id") == self.snapshot_id
         return True
 
+    def _record(self, metric: dict) -> dict:
+        with self._metrics_lock:
+            self.metrics.append(metric)
+        return metric
+
     def write(
         self,
         df: DataFrame,
@@ -155,6 +165,16 @@ class CheckpointStore:
         lineage: list[str] | None = None,
         bucket_by: list[str] | None = None,
     ) -> DataFrame:
+        """``_write`` without its metric."""
+        return self._write(df, phase, lineage, bucket_by)[0]
+
+    def _write(
+        self,
+        df: DataFrame,
+        phase: str,
+        lineage: list[str] | None = None,
+        bucket_by: list[str] | None = None,
+    ) -> tuple[DataFrame, dict]:
         """Write + manifest; returns the re-read DataFrame (so downstream
         phases read the checkpoint, truncating lineage like the reference's
         phase boundaries).
@@ -234,11 +254,10 @@ class CheckpointStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=2)
         os.replace(tmp, self._manifest_path(phase))  # atomic completion mark
-        self.metrics.append(
+        return out, self._record(
             {"phase": phase, "rows": manifest["rows"],
              "n_partitions": len(per_part)}
         )
-        return out
 
     def _footer_counts(self, data_path: str) -> dict[str, int]:
         """{file_name: num_rows} from parquet footer metadata."""
@@ -293,14 +312,18 @@ class CheckpointStore:
         lineage: list[str] | None = None,
         resume: bool = True,
         **write_kwargs,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, dict]:
         """Skip phases whose checkpoint exists under the same config
         fingerprint and lineage — the resume contract (BASELINE.md
-        resumability row)."""
+        resumability row). Returns the checkpoint and this phase's own
+        metric (the same dict ``metrics`` holds)."""
         if resume and self.exists(phase, lineage):
-            self.metrics.append({"phase": phase, "resumed": True})
-            return self.read(phase)
+            return self.read(phase), self._record(
+                {"phase": phase, "resumed": True}
+            )
         t0 = time.perf_counter()
-        out = self.write(compute(), phase, lineage=lineage, **write_kwargs)
-        self.metrics[-1]["seconds"] = round(time.perf_counter() - t0, 2)
-        return out
+        out, metric = self._write(
+            compute(), phase, lineage=lineage, **write_kwargs
+        )
+        metric["seconds"] = round(time.perf_counter() - t0, 2)
+        return out, metric

@@ -11,9 +11,6 @@ from fast_duplicate_finder_spark.functions.minhash import (
     perm_seeds,
 )
 from fast_duplicate_finder_spark.functions.shingles import word_shingles
-from fast_duplicate_finder_spark.operators.connected_components import (
-    connected_components,
-)
 from fast_duplicate_finder_spark.operators.neardup import (
     near_dup_features,
     simhash_pairs,
@@ -23,7 +20,6 @@ from fast_duplicate_finder_spark.plans.pipeline import run_pipeline
 
 from tests.oracle import (
     assemble_locally,
-    components,
     jaccard,
     near_pairs_oracle,
     shingles,
@@ -62,18 +58,6 @@ def test_minhash_estimates_jaccard():
     with np.errstate(over="ignore"):
         s2 = minhash_batch(pd.Series([list(base), list(base)]), seeds)
     assert list(s2[0]) == list(s2[1])
-
-
-def test_connected_components_basic(spark):
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("x", "c")],
-        "conv_id_a string, conv_id_b string",
-    )
-    got = {
-        r["conv_id"]: r["component"]
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "a", "d": "d", "e": "d"}
 
 
 def test_near_dup_recall_and_precision_vs_bruteforce(spark, tmp_path):
@@ -158,52 +142,3 @@ def test_supershingle_set_short_docs_empty(spark):
     }
     # size < window -> 0; size == window -> 1; size == window+1 -> 2
     assert out == {1: 0, 2: 1, 3: 0, 4: 2}
-
-
-
-def test_connected_components_deep_chain_converges(spark):
-    """Pointer jumping is what makes a LONG PATH converge: pure
-    neighbor-min propagation moves the minimum one hop per round, so a
-    300-node path would blow the max_iter=50 cap and RAISE; label
-    compression halves chains per round (O(log diameter)). A shuffled
-    node order keeps the min in the middle of the chain."""
-    import random
-
-    rng = random.Random(3)
-    ids = [f"n{i:04d}" for i in range(300)]
-    rng.shuffle(ids)  # path order != label order
-    pairs = spark.createDataFrame(
-        list(zip(ids, ids[1:])), "conv_id_a string, conv_id_b string"
-    )
-    got = {
-        r["conv_id"]: r["component"]
-        for r in connected_components(pairs).collect()
-    }
-    assert len(got) == 300
-    assert set(got.values()) == {min(ids)}
-
-
-def test_connected_components_match_union_find(spark):
-    """Property check against a driver union-find, in ONE call over a
-    disjoint union of shapes: a seeded random graph (many small and a few
-    merged components), a ~200-node path with shuffled ids (the min sits
-    mid-chain), a star whose hub has the largest id, self-loops on nodes
-    that have other edges (they change nothing) and duplicate edges in
-    both orientations."""
-    import random
-
-    rng = random.Random(11)
-    rnd = [f"r{i:03d}" for i in range(150)]
-    pairs = [tuple(rng.sample(rnd, 2)) for _ in range(110)]
-    path = [f"p{i:03d}" for i in range(200)]
-    rng.shuffle(path)
-    pairs += list(zip(path, path[1:]))
-    pairs += [("s99", f"s{i:02d}") for i in range(30)]
-    pairs += [(x, x) for x in (pairs[0][0], path[0], path[-1], "s99", "s05")]
-    pairs += [(b, a) for a, b in rng.sample(pairs, 40)] + pairs[:20]
-    df = spark.createDataFrame(pairs, "conv_id_a string, conv_id_b string")
-    got = {
-        r["conv_id"]: r["component"]
-        for r in connected_components(df).collect()
-    }
-    assert got == components(pairs)

@@ -106,7 +106,7 @@ def test_resume_refused_when_lineage_differs(spark, tmp_path):
     fingerprint, other inputs) must be recomputed, not resumed."""
     store = CheckpointStore(spark, str(tmp_path / "ck"), "fp")
     store.get_or_compute("p0", lambda: spark.range(3).toDF("v"), ["a"])
-    out = store.get_or_compute("p0", lambda: spark.range(5).toDF("v"), ["b"])
+    out, _ = store.get_or_compute("p0", lambda: spark.range(5).toDF("v"), ["b"])
     assert "resumed" not in store.metrics[-1]
     assert out.count() == 5
     assert store.manifest("p0")["lineage"] == ["b"]
@@ -419,41 +419,6 @@ def test_failed_checkpoint_write_invalidates_stale_manifest(spark, tmp_path):
     except Exception:
         pass
     assert not ckpt.exists("p_test")  # stale manifest must be gone
-
-
-def test_connected_components_long_chain_and_nonconvergence():
-    """Union-at-root + pointer doubling: a 120-node path graph converges
-    in a few OUTER rounds (plain neighbor-min needs 119 > max_iter and
-    previously returned SPLIT components silently); non-convergence still
-    raises — max_iter=1 cannot finish any non-trivial graph (round 1
-    always changes labels, so the loop must run at least twice to OBSERVE
-    convergence). max_iter=2 now succeeds on this ordered path: round 1's
-    root-union + full compression already labels the whole chain."""
-    import pytest as _pytest
-
-    from fast_duplicate_finder_spark.operators.connected_components import (
-        connected_components,
-    )
-    from fast_duplicate_finder_spark.session import get_spark
-
-    spark = get_spark("cc-chain", cores=4, shuffle_partitions=8)
-    n = 120
-    ids = [f"{i:05d}" for i in range(n)]
-    pairs = spark.createDataFrame(
-        [(ids[i], ids[i + 1]) for i in range(n - 1)],
-        "conv_id_a string, conv_id_b string",
-    )
-    comp = connected_components(pairs, max_iter=15)
-    labels = {r["component"] for r in comp.collect()}
-    assert labels == {ids[0]}  # ONE component, min label everywhere
-
-    assert {
-        r["component"]
-        for r in connected_components(pairs, max_iter=2).collect()
-    } == {ids[0]}  # round-1 root-union + compression finishes the chain
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1)
 
 
 def test_read_dup_log_empty_and_missing(spark, tmp_path):

@@ -1,57 +1,16 @@
-"""Round-4 items: CC single-action rounds (VERDICT #5), within-phase
-progress interpolation (VERDICT #7, reference phase_2.go:54 /
-status.go:55-81), and the PipelineConfig.shuffle_partitions knob removal
-(VERDICT #2)."""
+"""Round-4 items: within-phase progress interpolation (VERDICT #7,
+reference phase_2.go:54 / status.go:55-81), and the
+PipelineConfig.shuffle_partitions knob removal (VERDICT #2)."""
 
 from __future__ import annotations
 
-import random
-
 import pytest
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fast_duplicate_finder_spark.operators.connected_components import (
-    connected_components,
-)
 from fast_duplicate_finder_spark.plans.progress import (
     ProgressReporter,
     StageProgressPoller,
 )
-
-
-def test_cc_change_detection_rides_the_checkpoint(spark, monkeypatch):
-    """VERDICT round-3 #5: convergence counts must come from the SAME
-    action that materializes each round (Observation metrics on the
-    localCheckpoint), not separate filter(changed).count() jobs — at 100 TB
-    those were 2-8 extra full-stage jobs per round of pure fixed cost.
-    Pin: ZERO DataFrame.count calls during a multi-round CC run (the
-    300-node shuffled path needs several outer rounds + doubling passes),
-    with output identical to the single-component truth."""
-    rng = random.Random(7)
-    ids = [f"n{i:04d}" for i in range(300)]
-    rng.shuffle(ids)
-    pairs = spark.createDataFrame(
-        [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)],
-        "conv_id_a string, conv_id_b string",
-    )
-
-    calls = {"count": 0}
-    orig_count = DataFrame.count
-
-    def counting(self):
-        calls["count"] += 1
-        return orig_count(self)
-
-    monkeypatch.setattr(DataFrame, "count", counting)
-    comp = connected_components(pairs, max_iter=15)
-    rows = comp.collect()
-    assert calls["count"] == 0, (
-        f"{calls['count']} separate count() actions during CC — change "
-        "detection must ride the checkpoint materialization"
-    )
-    assert len(rows) == 300
-    assert {r["component"] for r in rows} == {min(ids)}
 
 
 def test_stage_progress_poller_emits_fractional_percent(spark):
@@ -392,7 +351,7 @@ def test_span_exact_pairs_salted_bucket_matches_oracle(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "killed, with_near_dup, last_done",
-    [("p2_partial", False, "p1_docs"),
+    [("p2_partial", False, "p1_prefilter"),
      ("p7a_minhash_pairs", True, "p6_features")],
     ids=["p2_partial", "p7a_minhash_pairs"],
 )
