@@ -1,5 +1,5 @@
-"""Connected components on a pair DataFrame — iterative min-label propagation
-with a one-worker residual finish.
+"""Connected components on a pair DataFrame — one-worker union-find for a
+graph within a cap, iterative min-label propagation above it.
 
 Needed to turn verified near-duplicate *pairs* into duplicate *clusters*
 (the reference never needs this: exact hashing partitions transitively for
@@ -8,21 +8,23 @@ DataFrame ops (hash-to-min label propagation; cf. BTS, ICDE 2024 in
 PAPERS.md, and the classic large-star/small-star family).
 
 Scale notes:
-* residual finish (Kiveris et al., SoCC 2014: iterate while the graph is
-  large, then finish the small residual on one machine): the edge count
-  observed when the edges are materialized, and each round's bound on its
-  unconverged edges, ride existing ``Observation`` metrics. Once that
-  count is at most ``residual_cap`` (default ``RESIDUAL_CAP`` undirected
-  edges, ~0.5 GB of id strings on one Python worker at the cap), the
-  remaining edges are contracted to their current labels, collected by ONE
-  ``applyInPandas`` on a constant key, and finished there by a vectorized
-  union-find whose roots are the minimum labels; the roots are joined back
-  lazily, so the consumer's write runs the finish. A graph within the cap
-  takes one materialization plus that grouped map — no rounds — where
-  the purely iterative form took 32+ jobs of fixed cost on any small
-  graph. Larger residuals keep iterating; the round count and residual
-  size are logged through ``plans.logging``, so the cap never decides
-  silently. ``residual_cap=0`` is the purely iterative operator;
+* one-worker finish (Kiveris et al., SoCC 2014: finish a small graph on
+  one machine): the edge count rides the ``Observation`` of the edges'
+  materialization, and the operator decides once from it. A graph of at
+  most ``residual_cap`` edges (default ``RESIDUAL_CAP``) is collected by
+  ONE ``applyInPandas`` on a constant key and finished there by a
+  vectorized union-find whose roots are the minimum labels; the grouped
+  map is lazy, so the consumer's action runs it. That is one
+  materialization plus one grouped map and no rounds, where the rounds
+  below take 32+ jobs of fixed cost on any small graph. A larger graph
+  runs the rounds below unchanged. The decision, edge count and round
+  count are logged through ``plans.logging``, so the cap never decides
+  silently; ``residual_cap=0`` iterates any non-empty graph. The cap is
+  the largest size measured: a 4M-edge path with shuffled 12-character
+  ids on ``local[4]`` peaked at 1.23 GiB RSS in the one Python worker (10 s
+  of union-find, 30 s wall); 1M and 2M edges peaked at 0.39 and 0.75 GiB.
+  Finishing after some rounds, once the open edges fall under the cap,
+  waits for a workload above the cap to measure it on;
 * each OUTER round = neighbor-min (join + agg) + union-at-the-root (every
   improvement is forwarded to the node's CURRENT root — the union-find
   "link") + an INNER pointer-doubling loop (label <- label(label) to
@@ -34,7 +36,7 @@ Scale notes:
   and blew a 50-round cap on a 300-node path. Non-convergence at max_iter
   RAISES instead of silently splitting a component;
 * ONE Spark action per round step: convergence counts ride the checkpoint
-  materialization as ``Observation`` metrics (``_truncated_observed``) —
+  materialization as ``Observation`` metrics (``_truncated_counted``) —
   no separate ``filter(changed).count()`` job per round/pass;
 * lineage is truncated per round via ``_truncated`` — NOT a bare
   ``localCheckpoint``: Dataset.(local)Checkpoint copies the optimized
@@ -53,11 +55,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# Largest count of open undirected edges finished on one Python worker
-# (module docstring): ~0.5 GB of id strings there at the cap.
+# Largest edge count finished on one Python worker: the largest size
+# measured (module docstring), 1.23 GiB peak worker RSS there.
 RESIDUAL_CAP = 4_000_000
 
 
@@ -87,30 +89,26 @@ def _truncated(df: DataFrame) -> DataFrame:
     return DataFrame(jdf, ck.sparkSession)
 
 
-def _truncated_observed(
-    df: DataFrame, drop: list[str], **metrics: Column
-) -> tuple[DataFrame, dict[str, int]]:
-    """One-action step: checkpoint ``df`` minus the ``drop`` columns AND
-    deliver the ``metrics`` aggregates from that SAME materialization.
+def _truncated_counted(
+    df: DataFrame, flag_col: str | None = None
+) -> tuple[DataFrame, int]:
+    """One-action round step: checkpoint ``df`` minus ``flag_col`` AND
+    deliver ``count_if(flag_col)`` (with no flag, the row count) from that
+    SAME materialization.
 
     ``Observation`` metrics are collected by the action inside
     ``localCheckpoint(eager=True)`` (Dataset.checkpoint runs under
     withAction), so change-detection costs zero extra jobs — the previous
     form ran a separate ``filter(changed).count()`` job per outer round and
     per doubling pass: ~2-8 jobs of pure fixed cost per round at 100 TB.
-    The dropped columns go ABOVE the observe, so they never reach the
-    checkpointed blocks but are still visible to the metrics."""
+    The flag column is dropped ABOVE the observe, so it never reaches the
+    checkpointed blocks but is still visible to the metric."""
     obs = Observation()
+    n = F.count_if(F.col(flag_col)) if flag_col else F.count(F.lit(1))
     out = _truncated(
-        df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).drop(*drop)
+        df.observe(obs, n.alias("n")).drop(*[c for c in [flag_col] if c])
     )
-    return out, {k: int(obs.get[k] or 0) for k in metrics}
-
-
-def _truncated_counted(df: DataFrame, flag_col: str) -> tuple[DataFrame, int]:
-    """``_truncated_observed`` of ``count_if(flag_col)``, flag dropped."""
-    out, m = _truncated_observed(df, [flag_col], n=F.count_if(F.col(flag_col)))
-    return out, m["n"]
+    return out, int(obs.get["n"])
 
 
 def _min_label_roots(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -144,38 +142,6 @@ def _min_label_roots(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"conv_id": ids, "component": ids[parent]})
 
 
-def _finish_residual(
-    edges: DataFrame, sym: DataFrame | None, labels: DataFrame | None
-) -> DataFrame:
-    """The residual finish: before any round, ``edges`` as given; after
-    one, each undirected edge of ``sym`` once, contracted to its ends'
-    current ``labels`` with the closed ones dropped. Those open edges are
-    collected by ONE ``applyInPandas`` on a constant key, which runs
-    ``_min_label_roots``, and the roots are joined back. Lazy: the
-    consumer's action runs it."""
-    if labels is not None:
-        la = labels.select(F.col("conv_id").alias("a"), F.col("label").alias("la"))
-        lb = labels.select(F.col("conv_id").alias("b"), F.col("label").alias("lb"))
-        edges = (
-            sym.filter(F.col("a") < F.col("b"))
-            .join(la, "a")
-            .join(lb, "b")
-            .select(F.col("la").alias("a"), F.col("lb").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-    roots = edges.groupBy(F.lit(0).alias("_one")).applyInPandas(
-        _min_label_roots, "conv_id string, component string"
-    )
-    if labels is None:
-        return roots
-    return (
-        labels.join(
-            roots.withColumnRenamed("conv_id", "label"), "label", "left"
-        )
-        .select("conv_id", F.coalesce("component", "label").alias("component"))
-    )
-
-
 def connected_components(
     pairs: DataFrame, max_iter: int = 50, residual_cap: int = RESIDUAL_CAP
 ) -> DataFrame:
@@ -183,68 +149,50 @@ def connected_components(
     every node in any pair of two distinct ids (a self-pair is dropped).
 
     ``component`` = lexicographic min conv_id reachable via pair edges.
-    ``residual_cap``: largest count of open edges finished on one worker
-    (module docstring); 0 iterates to convergence.
+    ``residual_cap``: largest edge count finished on one worker (module
+    docstring); 0 iterates any non-empty graph to convergence.
     """
     from fast_duplicate_finder_spark.plans.logging import get_logger
 
-    edges, m = _truncated_observed(
+    edges, n_edges = _truncated_counted(
         pairs.select(
             F.col("conv_id_a").alias("a"), F.col("conv_id_b").alias("b")
-        ).filter(F.col("a") != F.col("b")),
-        [],
-        n=F.count(F.lit(1)),
+        ).filter(F.col("a") != F.col("b"))
     )
-    n_open = m["n"]  # every input edge is open before the first round
-    sym = labels = None
+    if n_edges <= residual_cap:
+        get_logger().info(
+            f"connected_components: {n_edges} edges finished on one worker",
+            context="connected_components",
+            data={"edges": n_edges, "rounds": 0, "residual_cap": residual_cap},
+        )
+        # lazy: the consumer's action runs the one-group union-find
+        return edges.groupBy(F.lit(0).alias("_one")).applyInPandas(
+            _min_label_roots, "conv_id string, component string"
+        )
+
+    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = _truncated(sym.distinct())
+
+    # Iteration shuffle sizing is left to AQE partition coalescing (enabled
+    # in session.py): each label-propagation round is join+agg over |E|
+    # rows, and AQE collapses the tiny post-shuffle partitions of small
+    # graphs at runtime. (Round 1 temporarily shrank the session-global
+    # spark.sql.shuffle.partitions instead — unsafe under concurrent
+    # queries on the shared session.)
+    labels = _truncated(
+        sym.select(F.col("a").alias("conv_id"))
+        .distinct()
+        .withColumn("label", F.col("conv_id"))
+    )
 
     converged = False
-    for rounds in range(max_iter):
-        if n_open <= residual_cap:
-            get_logger().info(
-                f"connected_components: {n_open} open edges after {rounds} "
-                "rounds, finished on one worker",
-                context="connected_components",
-                data={"rounds": rounds, "residual_edges": n_open,
-                      "residual_cap": residual_cap},
-            )
-            return _finish_residual(edges, sym, labels)
-        if sym is None:
-            sym = _truncated(
-                edges.union(
-                    edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-                ).distinct()
-            )
-            # Iteration shuffle sizing is left to AQE partition coalescing
-            # (enabled in session.py): each label-propagation round is
-            # join+agg over |E| rows, and AQE collapses the tiny
-            # post-shuffle partitions of small graphs at runtime. (Round 1
-            # temporarily shrank the session-global
-            # spark.sql.shuffle.partitions instead — unsafe under
-            # concurrent queries on the shared session.)
-            labels = _truncated(
-                sym.select(F.col("a").alias("conv_id"))
-                .distinct()
-                .withColumn("label", F.col("conv_id"))
-            )
-        # neighbor-min over edges that carry BOTH ends' labels: the same
-        # pass counts each end's open (differently labelled) edges, so the
-        # observation below carries the exact unconverged edge count
-        with_nbr = (
-            sym.join(
-                labels.select(
-                    F.col("conv_id").alias("b"), F.col("label").alias("lb")
-                ),
-                "b",
-            )
-            .join(labels.withColumnRenamed("conv_id", "a"), "a")
-            .groupBy(F.col("a").alias("conv_id"))
-            .agg(
-                F.min("label").alias("label"),
-                F.min("lb").alias("nbr_min"),
-                F.count_if(F.col("lb") != F.col("label")).alias("open"),
-            )
+    for rounds in range(1, max_iter + 1):
+        nbr = (
+            sym.join(labels, sym.b == labels.conv_id, "inner")
+            .groupBy("a")
+            .agg(F.min("label").alias("nbr_min"))
         )
+        with_nbr = labels.join(nbr, labels.conv_id == nbr.a, "left")
         # Union at the ROOT (the union-find "link"): a node that learns a
         # smaller label forwards it to its CURRENT root, whose whole
         # region then flips in one doubling pass below. Node-local
@@ -259,11 +207,12 @@ def connected_components(
         )
         stepped0 = with_nbr.select(
             "conv_id",
-            F.least(F.col("label"), F.col("nbr_min")).alias("label"),
+            F.least(
+                F.col("label"), F.coalesce("nbr_min", F.col("label"))
+            ).alias("label"),
             (F.col("nbr_min") < F.col("label")).alias("changed"),
-            "open",
         )
-        labels, m = _truncated_observed(
+        labels, n_changed = _truncated_counted(
             stepped0.join(upd, stepped0.conv_id == upd.r, "left").select(
                 "conv_id",
                 F.least(
@@ -273,21 +222,11 @@ def connected_components(
                     F.coalesce(F.col("changed"), F.lit(False))
                     | (F.col("rmin") < F.col("label"))
                 ).alias("changed"),
-                "open",
             ),
-            ["changed", "open"],
-            n_changed=F.count_if(F.col("changed")),
-            n_open=F.sum("open"),
+            "changed",
         )
-        n_open = m["n_open"] // 2  # counted once from each end
-        if m["n_changed"] == 0:
+        if n_changed == 0:
             converged = True
-            get_logger().info(
-                f"connected_components: converged in {rounds + 1} rounds",
-                context="connected_components",
-                data={"rounds": rounds + 1, "residual_edges": 0,
-                      "residual_cap": residual_cap},
-            )
             break
         # Pointer doubling to FIXPOINT: synchronous label <- label(label)
         # halves every pointer chain per pass (every label IS a node id,
@@ -300,7 +239,7 @@ def connected_components(
             parent = labels.select(
                 F.col("conv_id").alias("p"), F.col("label").alias("plabel")
             )
-            labels, moved = _truncated_counted(
+            labels, m = _truncated_counted(
                 labels.join(parent, labels.label == parent.p, "inner").select(
                     "conv_id",
                     F.least("label", "plabel").alias("label"),
@@ -308,7 +247,7 @@ def connected_components(
                 ),
                 "jchanged",
             )
-            if moved == 0:
+            if m == 0:
                 jump_converged = True
                 break
         if not jump_converged:
@@ -323,5 +262,10 @@ def connected_components(
             "iterations — returning would silently report one component "
             "as several; raise max_iter"
         )
-
+    get_logger().info(
+        f"connected_components: {n_edges} edges over the cap converged in "
+        f"{rounds} rounds",
+        context="connected_components",
+        data={"edges": n_edges, "rounds": rounds, "residual_cap": residual_cap},
+    )
     return labels.select("conv_id", F.col("label").alias("component"))

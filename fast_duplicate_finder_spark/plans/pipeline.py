@@ -41,10 +41,16 @@ lineage is done: one task per phase on one thread pool per call, each
 setting its own job group in its own thread (Spark accepts concurrent
 jobs from threads). Most phases at this scale are fixed cost — planning,
 codegen, small stages that leave cores idle — and the concurrent branches
-fill those idle slots. At scale Spark's FIFO scheduler gives the earlier
-submitted job first claim on every core, so concurrency only hands a
-sibling the slots the earlier job leaves idle; no phase slows the branch
-that submitted first.
+fill those idle slots. A sibling does run slower beside another branch's
+work: in traced ``batch_planted`` runs on 4 cores, ``p2_partial`` took
+0.9 s alone and 5–8 s beside ``p6_features``, yet ``p3_exact`` still ended
+before the legs did, so the run got shorter. Spark's FIFO scheduler gives
+the earlier-submitted job first claim on every core, so at scale the
+expectation is that concurrency only fills the slots that job leaves
+idle. That expectation is unverified: every run so far had 4 cores, and
+the three legs fused into one query once measured ~2.5x slower at high
+core counts (see the legs below). A run with more cores or executors must
+show that the concurrent legs are not slower than in sequence.
 
 A failure or cancel starts no further phase, waits for the in-flight
 siblings (their checkpoints are kept, so a rerun resumes them) and raises
@@ -301,9 +307,12 @@ def run_pipeline(
         # resume (kill mid-leg loses only that leg), and the fused
         # union-of-three-legs query measured ~2.5x slower than the legs run
         # as separate jobs at high core counts (three Arrow-UDF stage trees
-        # competing inside one DAG). A leg's overflow table is written in
-        # the pairs phase's boundary — the manifest row count IS the
-        # counter (capped, counted, never silent).
+        # competing inside one DAG). The legs now run as separate jobs side
+        # by side; whether FIFO between those jobs avoids that competition
+        # at high core counts is unmeasured (module docstring). A leg's
+        # overflow table is written in the pairs phase's boundary — the
+        # manifest row count IS the counter (capped, counted, never
+        # silent).
         run_leg("p7a_minhash_pairs", "p7a_lsh_overflow", minhash_pairs)
         run_leg("p7b_simhash_pairs", "p7b_simhash_overflow", simhash_pairs)
         run_leg("p7c_span_pairs", "p7c_span_overflow", span_pairs)

@@ -709,6 +709,8 @@ def _clusters_batch(
             )
         )
     comp = connected_components(edges)  # (conv_id, component=min id)
+    if known is not None:  # both writes below read it: run CC once
+        comp = comp.localCheckpoint(eager=True)
     new_ids = (
         ids.join(known.select("conv_id"), "conv_id", "left_anti")
         if known is not None

@@ -1,7 +1,8 @@
-"""Connected components: hash-to-min rounds with the root link, and the
-one-worker residual finish (``operators/connected_components``). Every
-result is checked against a driver union-find (``tests/oracle``); the
-iterative-path pins pass ``residual_cap=0``."""
+"""Connected components: the one-worker finish of a graph within the
+cap, and hash-to-min rounds with the root link above it
+(``operators/connected_components``). Every result is checked against a
+driver union-find (``tests/oracle``); the iterative-path pins pass
+``residual_cap=0``."""
 
 from __future__ import annotations
 
@@ -52,18 +53,15 @@ def test_connected_components_deep_chain_converges(spark):
     assert set(got.values()) == {min(ids)}
 
 
-@pytest.mark.parametrize(
-    "cap", [0, 100, 10**18], ids=["iterative", "rounds_then_residual", "residual"]
-)
+@pytest.mark.parametrize("cap", [0, 10**18], ids=["iterative", "residual"])
 def test_connected_components_match_union_find(spark, cap):
     """Property check against a driver union-find, in ONE call over a
     disjoint union of shapes: a seeded random graph (many small and a few
     merged components), a ~200-node path with shuffled ids (the min sits
     mid-chain), a star whose hub has the largest id, self-loops on nodes
     that have other edges (they change nothing) and duplicate edges in
-    both orientations. Run purely iterative (cap 0), finished on one
-    worker before any round (cap above the edge count), and finished
-    after some rounds have contracted the graph (cap 100)."""
+    both orientations. Run purely iterative (cap 0) and finished on one
+    worker (cap above the edge count)."""
     import random
 
     rng = random.Random(11)
@@ -158,7 +156,7 @@ def test_connected_components_small_graph_job_count(spark, shape):
     one grouped map, whatever its shape: 400 disjoint pairs and a 400-edge
     path with shuffled ids each take at most 6 Spark jobs, collect
     included (the purely iterative form took 32 and 151). The log names
-    the round count and the residual size the cap decided on."""
+    the edge count the cap decided on and the round count."""
     rng = random.Random(5)
     if shape == "disjoint_pairs":
         pairs = [(f"a{i:04d}", f"b{i:04d}") for i in range(400)]
@@ -187,5 +185,5 @@ def test_connected_components_small_graph_job_count(spark, shape):
         if e.get("context") == "connected_components"
     ]
     assert logged == [
-        {"rounds": 0, "residual_edges": 400, "residual_cap": 4_000_000}
+        {"edges": 400, "rounds": 0, "residual_cap": 4_000_000}
     ]
